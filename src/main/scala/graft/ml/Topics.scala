@@ -87,7 +87,7 @@ object Topics {
       .cache()
     // Random init (seeded) instead of k-means||: the parallel init costs ~5
     // extra full passes over the features for no report-level difference
-    // here — measured 3.2 s → 1.3 s on the fit (tools/ProfileTopics). 5
+    // here — measured 3.2 s → 1.3 s on the sf0.1 fit (q50). 5
     // iterations: the topic report needs a stable partition of the space,
     // not a converged objective (same argument as the q45 IVF codebook);
     // determinism comes from the seed either way.

@@ -53,7 +53,7 @@ object ConnectedComponents {
     * id of the component. Throws if the propagation fallback's `maxIter`
     * rounds do not converge. Set `contractLevels = 0` AND
     * `finalSolveMaxEdges = 0` to force the pure propagation path (tests). */
-  def run(pairs: DataFrame, maxIter: Int = 20, verbose: Boolean = false,
+  def run(pairs: DataFrame, maxIter: Int = 20,
       contractLevels: Int = 2, finalSolveMaxEdges: Long = 1L << 22): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
@@ -71,10 +71,8 @@ object ConnectedComponents {
       val nEdges = edges.count()
       if (nEdges <= finalSolveMaxEdges) {
         // one bounded task finishes the whole graph: exact union-find
-        if (verbose) System.err.println(s"[cc] final solve at level $level ($nEdges edges)")
         done = Some(edges.repartition(1).mapPartitions(unionFindStars).toDF("vertex", "label"))
       } else if (level < contractLevels) {
-        if (verbose) System.err.println(s"[cc] contracting level $level ($nEdges edges)")
         // alternate the co-location key so star-membership merges (shared
         // vertex) and star-root merges (shared root) both get a turn
         val keyed = if (level % 2 == 0) edges.repartition(col("a"))
@@ -83,7 +81,7 @@ object ConnectedComponents {
       }
       level += 1
     }
-    done.getOrElse(propagate(edges.toDF("a", "b"), maxIter, verbose))
+    done.getOrElse(propagate(edges.toDF("a", "b"), maxIter))
   }
 
   /** Partition-local union-find: collapse this partition's edges and emit
@@ -109,7 +107,7 @@ object ConnectedComponents {
 
   /** Iterative min-label propagation with adaptive pointer jumping — the
     * fallback for graphs too large for the bounded final solve. */
-  private def propagate(pairs: DataFrame, maxIter: Int, verbose: Boolean): DataFrame = {
+  private def propagate(pairs: DataFrame, maxIter: Int): DataFrame = {
     val p = pairs.select(col("a"), col("b")).cache()
     val vertices = p.select(col("a").as("v"))
       .unionByName(p.select(col("b").as("v"))).distinct()
@@ -157,7 +155,6 @@ object ConnectedComponents {
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       iter += 1
-      if (verbose) System.err.println(f"[cc] iter $iter done (converged=$converged)")
     }
     if (!converged)
       throw new IllegalStateException(

@@ -258,9 +258,9 @@ object Dedup {
       .select(col("doc_id"), col("band"), col("bhash"))
 
   /** LSH bucket rows of a raw (doc_id, text) corpus — the skew
-    * observability hook (ScaleSmoke's skew section reads bucket-size
-    * distributions from it; same sig/band layout the candidate joins key
-    * on). */
+    * observability hook (bucket-size distributions; the hot-bucket
+    * reading is NOTES.md, Round 10 item 2; same sig/band layout the
+    * candidate joins key on). */
   private[graft] def bandRowsOf(input: DataFrame): DataFrame =
     bandsOf(input
       .select(col("doc_id"), shingleHashes(TextFns.normText(col("text"))).as("hs"))

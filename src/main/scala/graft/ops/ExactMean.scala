@@ -78,9 +78,6 @@ import org.apache.spark.sql.functions._
   * (beyond a 100 TB corpus), so the double accumulator is exact-ish in
   * the regime that matters and both engines share the identical value.
   *
-  * '''diagnostic''' (`// float-mean: diagnostic`) — `tools/ScaleSmoke`
-  * cell-balance readout; printed telemetry, not a certified surface.
-  *
   * '''rows-only by design''' — q62/q80 (randomized sketches, no
   * deterministic cross-engine value; ±5 %-error-bound units instead).
   */

@@ -376,8 +376,8 @@ object IvfIndex {
 
   /** The distinct cells a query batch probes (≤ the codebook size): the
     * serving scan-fraction diagnostic — a search against a saved index
-    * reads only these partitions (tools.ScaleSmoke reports the measured
-    * fraction at growing corpus sizes). */
+    * reads only these partitions (the measured fraction at growing
+    * corpus sizes is in NOTES.md, Round 7 item 1). */
   def probedCells(spark: SparkSession, index: IvfIndex, queries: DataFrame,
       nProbe: Int): Array[Long] = {
     import spark.implicits._

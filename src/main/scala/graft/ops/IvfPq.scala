@@ -72,14 +72,13 @@ object IvfPq {
     * per-cell raw-member means, fits [[NumSub]] per-subspace codebooks on
     * a bounded sample of the RESIDUALS, and writes `cellmeans/`
     * (cell, mean), `codebooks/` (sub, code, centroid), and `pqcells/`
-    * (vec_id, codes BINARY) partitioned by cell. */
-  /** `subK` overrides the per-subspace codebook width (≤ 256 — codes are
-    * one byte). Serving sizes off the exported `codebooks/` table, so any
-    * width runs the same search path; the SubK curve at 16× lives in
-    * ScaleSmoke's `pq-subk` section. */
+    * (vec_id, codes BINARY) partitioned by cell. Serving sizes off the
+    * exported `codebooks/` table, so any [[SubK]] ≤ 256 runs the same
+    * search path; the SubK curve at 16× is in NOTES.md, "PQ code width
+    * (SubK) curve at 16×". */
   def trainTo(spark: SparkSession, indexDir: String, destDir: String,
-      seed: Long = 7L, maxFitRows: Long = 50000L, subK: Int = SubK): Unit = {
-    require(subK >= 2 && subK <= 256, s"subK=$subK out of the one-byte code range")
+      seed: Long = 7L, maxFitRows: Long = 50000L): Unit = {
+    require(SubK >= 2 && SubK <= 256, s"SubK=$SubK out of the one-byte code range")
     import spark.implicits._
     val src = IvfIndex.resolve(spark, indexDir)
     spark.read.parquet(s"$src/centroids").coalesce(1)
@@ -165,7 +164,7 @@ object IvfPq {
           org.apache.spark.ml.functions.array_to_vector(sliceUdf(col("residual")))
             .as("features"))
         new org.apache.spark.ml.clustering.KMeans()
-          .setK(subK).setSeed(seed + m).setMaxIter(5).setInitMode("random")
+          .setK(SubK).setSeed(seed + m).setMaxIter(5).setInitMode("random")
           .fit(feats).clusterCenters.map(_.toArray)
       }).toArray
     fitRows.unpersist()

@@ -23,12 +23,12 @@ import org.apache.spark.sql.functions._
   *      shortlist, never the corpus. Final ranking is exact cosine.
   *
   * At 100 TB the coarse scan reads ~1/4 the bytes of the float index
-  * (measured 3.34× on disk at 16×, ScaleSmoke sq) and the rerank reads a
-  * bounded candidate set; recall is governed by the shortlist factor (a
-  * shortlist ≥ k·4 recovered exact agreement with the float tier on the
-  * uniform test embeddings — IvfSqSpec). This is a SERVING-shape API:
-  * the query batch and batch×shortlist are assumed driver-bounded (the
-  * q99 small-batch contract).
+  * (measured 3.34× on disk at 16×, NOTES.md Round 9 item 9) and the
+  * rerank reads a bounded candidate set; recall is governed by the
+  * shortlist factor (a shortlist ≥ k·4 recovered exact agreement with
+  * the float tier on the uniform test embeddings — IvfSqSpec). This is a
+  * SERVING-shape API: the query batch and batch×shortlist are assumed
+  * driver-bounded (the q99 small-batch contract).
   *
   * Maintenance: the SQ copy is a DERIVED artifact of a raw-index
   * snapshot — [[IvfIndex.append]]/compaction on the raw index leave it

@@ -1026,12 +1026,12 @@ object Scoring {
     * table: contexts c(ab,·) and N1+(ab,·) in one pass, D3 a 1-row
     * broadcast scalar, P2 a projection of the bigram model tables.
     * Scoring is four shuffle joins on sparse keys + one per-doc agg. The
-    * model tables follow the VOCABULARY (ScaleSmoke kn3: fit+score flat
-    * through 16× corpus growth at fixed vocab); at 100 TB the trigram
-    * table is the big one, which is why it is only ever join-served —
-    * [[graft.streaming.Incremental.continuousPplGateJoined]] serves this
-    * exact model as its `smoothing="kn3"` tier from the bucketed
-    * [[graft.streaming.Incremental.writePplModel]] layout. */
+    * model tables follow the VOCABULARY (fit+score flat through 16×
+    * corpus growth at fixed vocab, NOTES.md Round 15 item 15); at 100 TB
+    * the trigram table is the big one, which is why it is only ever
+    * join-served — [[graft.streaming.Incremental.continuousPplGateJoined]]
+    * serves this exact model as its `smoothing="kn3"` tier from the
+    * bucketed [[graft.streaming.Incremental.writePplModel]] layout. */
   val q176Kn3Perplexity: Q = (s, d) => kn3Scores(s, d).orderBy(col("doc_id"))
 
   /** The memoized trigram-KN score table (doc_id, n_tri, nll_kn3) —
@@ -1189,21 +1189,6 @@ object Scoring {
       bf.filter(!isTest), bf.filter(isTest),
       tf3.filter(!isTest), tf3.filter(isTest),
       trainVocab(s, d))
-  }
-
-  /** The q206 kernel over an arbitrary (doc_id, source, text) frame —
-    * split out so `ScaleSmoke knfit` can drive the SHIPPED fit+serve at
-    * 1×/4×/16× corpus (r16 verdict #4), not a reimplementation. */
-  private[graft] def heldoutLadder3Of(docs: DataFrame): DataFrame = {
-    val isTest = substring(md5(col("doc_id").cast("string")), 1, 1) < "4"
-    val train = docs.filter(!isTest)
-    val test = docs.filter(isTest)
-    heldoutLadder3From(
-      test.select(col("doc_id"), col("source")),
-      bigramFoldOf(train), bigramFoldOf(test),
-      trigramFoldOf(train), trigramFoldOf(test),
-      train.select(explode(TextFns.tokens(col("text"))).as("w"))
-        .agg(count_distinct(col("w")).cast("double").as("v")))
   }
 
   /** The q206 serve over pre-built fold tables: `testMeta` is the
@@ -2066,10 +2051,11 @@ object Scoring {
     * index — the [[graft.ops.Similarity]] ServeNProbe discipline,
     * interpolated into both the kernel call and the oracle's `prn <=`
     * cut so they cannot desync. 5 is the measured knee of the
-    * recall/scan curve on the sf0.1 78-cell index (`ScaleSmoke hybrid`:
-    * top-20 overlap vs exact 3/7/9/13/17 of 20 at probes 1/2/3/5/8 —
-    * 13/20 while scanning ~6% of cells); q125 remains the exact tier
-    * when full recall is worth a corpus scan. */
+    * recall/scan curve on the sf0.1 78-cell index (NOTES.md, "r12
+    * DocServeNProbe operating point": top-20 overlap vs exact
+    * 3/7/9/13/17 of 20 at probes 1/2/3/5/8 — 13/20 while scanning ~6%
+    * of cells); q125 remains the exact tier when full recall is worth a
+    * corpus scan. */
   private[graft] val DocServeNProbe = 5
 
   /** Once-per-(session, dataset) IVF index over the DOCUMENT embedding

@@ -101,10 +101,6 @@ object Similarity {
     * edges come from [[ivfCellPairEdges]] instead (index-backed, prunes);
     * this sweep remains q43's explicit exact-pair surface and the test
     * oracle the index-backed generator is checked against. */
-  /** Profiling hook (tools.ProfileCC). */
-  def cosinePairsForProfile(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = cosinePairsExact(s, d)
-
   private[ops] def cosinePairsExact(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
@@ -273,8 +269,8 @@ object Similarity {
 
   /** Per-cell unit-space radii (max member unit-distance to the cell
     * centroid) — one narrow pass over the index, driver-bounded output
-    * (one double per cell). Shared by [[ivfCellPairEdges]] and the
-    * ScaleSmoke pruning report. */
+    * (one double per cell). Used by [[ivfCellPairEdges]]; the measured
+    * cell-pair pruning is in NOTES.md, Round 10 item 1. */
   private[graft] def cellRadii(s: org.apache.spark.sql.SparkSession,
       idx: IvfIndex): Map[Long, Double] = {
     import s.implicits._
@@ -409,7 +405,7 @@ object Similarity {
     // nCells ~ √N at this sf (grows as √N so cell size stays bounded);
     // nProbe 16 + 2-way member replication: uniform (clusterless)
     // embeddings are IVF's worst case — the r6/r7 sweep on sf0.1
-    // (tools.ExperimentIvf): probe 12 single-assign → 0.81 top-1
+    // (NOTES.md, Round 7 item 2): probe 12 single-assign → 0.81 top-1
     // agreement; probe 12 rep 2 → 0.946; probe 16 rep 2 → 0.982 (the r7
     // pick — beats both rep 3's 0.988-at-3×-storage and the second-hop
     // probe expansion's 0.969-at-two-passes for 4 extra probed cells).
@@ -438,7 +434,7 @@ object Similarity {
   private[graft] val AnnNProbe = 16
 
   /** PRODUCTION probe schedule: a fixed quarter of the cells with a floor
-    * of [[AnnNProbe]]. The r9 sweep (`ScaleSmoke probe`, NOTES) shows
+    * of [[AnnNProbe]]. The r9 sweep (NOTES.md, Round 9 item 8) shows
     * top-1 agreement at a fixed CELL FRACTION is scale-stable on uniform
     * worst-case embeddings — 0.945 at 16× (128 cells) and 0.955 at 64×
     * (256 cells) at fraction 0.25, 1.000 at 0.5 — so the scanned fraction,

@@ -140,9 +140,9 @@ object TrainingData {
       s"decontam must be 'drop' or 'scrub', got '$decontam'")
     import spark.implicits._
     // stage timer: wall-clock of the ONE action that materializes a
-    // cached stage — the per-stage scaling signal ScaleSmoke's pipeline
-    // section reads (a stage whose secs stop tracking its input volume is
-    // the fixed bottleneck the funnel must not have)
+    // cached stage — the per-stage scaling signal (NOTES.md, Round 10
+    // item 5: a stage whose secs stop tracking its input volume is the
+    // fixed bottleneck the funnel must not have)
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
       val r = f

@@ -71,8 +71,6 @@ object ProfileQuery {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.get("GRAFT_SCAN_FLOOR")
-      .foreach(v => spark.conf.set("graft.scan.floor.enabled", v))
     // generic session-conf overrides for A/B runs: "k=v;k=v"
     sys.env.get("GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
       .foreach { kv =>

@@ -111,7 +111,7 @@ class DedupSpec extends AnyFunSuite {
     // 500 UNIFORM vectors — the adversarial case for IVF (no cluster
     // structure to exploit). Any regression below this floor means the
     // quantizer, replication, or probe schedule broke (probe 16 + rep 2
-    // measured 0.982 at sf0.1, tools.ExperimentIvf).
+    // measured 0.982 at sf0.1, NOTES.md Round 7 item 2).
     assert(recall >= 0.85, s"IVF top-1 recall $recall")
 
     // ranked-list form (q96): rn is 1..3 per query, ordered by cosine,

@@ -6,13 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * source must be classified — exact means go through ExactMean (whose
   * file is the ledger and needs no marker), float means carry a same-line
   * `// float-mean: <class>` marker tying them to a ledger class
-  * (precedent / intermediate / diagnostic). Oracle-SQL renderings
+  * (precedent / intermediate). Oracle-SQL renderings
   * (stripMargin lines starting with `|`) mirror the engine side and are
   * certified by the oracle gate itself, so they are exempt. A new
   * unmarked float-mean site fails here BY NAME, PlanAuditSpec-style. */
 class ExactnessLedgerSpec extends AnyFunSuite {
 
-  private val classes = Set("precedent", "intermediate", "diagnostic")
+  private val classes = Set("precedent", "intermediate")
 
   test("every avg( site in main is ledger-classified or in ExactMean") {
     val root = java.nio.file.Paths.get("src/main/scala/graft")
@@ -35,7 +35,7 @@ class ExactnessLedgerSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       "unclassified float-mean sites (add `// float-mean: " +
-        "precedent|intermediate|diagnostic` per the ExactMean ledger, or " +
+        "precedent|intermediate` per the ExactMean ledger, or " +
         s"use ExactMean):\n${offenders.mkString("\n")}")
   }
 

@@ -21,7 +21,7 @@ class IvfDedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("index-backed edges equal the exhaustive >=0.4 pair set (diffuse corpus)") {
-    val exact = pairSet(Similarity.cosinePairsForProfile(spark, sf))
+    val exact = pairSet(Similarity.cosinePairsExact(spark, sf))
     val indexed = pairSet(Similarity.ivfDedupEdges(spark, sf))
     assert(indexed == exact,
       s"missing=${(exact -- indexed).take(5)} extra=${(indexed -- exact).take(5)}")

@@ -74,29 +74,31 @@ def main(sf_dir, out_dir):
                 n_skip += 1
             continue
         if sql is None:
-            # tolerance-only query (approx tier): band adjudication
+            # tolerance-only query (approx tier): band adjudication. The
+            # row loop sits inside the try too: a malformed dump (a null
+            # or non-numeric band cell) FAILs this query, not the checker.
             try:
                 sdf = norm(pq.read_table(glob.glob(f"{spark_dir}/*.parquet")[0]).to_pandas())
                 bdf = con.sql(tolerance[name]).df()
+                if len(sdf) != len(bdf):
+                    print(f"FAIL {name}: rows spark={len(sdf)} bounds={len(bdf)}")
+                    n_fail += 1; continue
+                bad = None
+                for i in range(len(sdf)):
+                    for c in sdf.columns:
+                        v = sdf[c].iloc[i]
+                        if c in bdf.columns:
+                            if not values_equal(v, bdf[c].iloc[i]) and str(v) != str(bdf[c].iloc[i]):
+                                bad = (i, c, v, bdf[c].iloc[i], "exact"); break
+                        elif f"{c}_lo" in bdf.columns:
+                            lo, hi = float(bdf[f"{c}_lo"].iloc[i]), float(bdf[f"{c}_hi"].iloc[i])
+                            if not (lo <= float(v) <= hi):
+                                bad = (i, c, v, (lo, hi), "band"); break
+                        else:
+                            bad = (i, c, v, None, "no-band-column"); break
+                    if bad: break
             except Exception as e:
                 print(f"FAIL {name}: {str(e)[:200]}"); n_fail += 1; continue
-            if len(sdf) != len(bdf):
-                print(f"FAIL {name}: rows spark={len(sdf)} bounds={len(bdf)}")
-                n_fail += 1; continue
-            bad = None
-            for i in range(len(sdf)):
-                for c in sdf.columns:
-                    v = sdf[c].iloc[i]
-                    if c in bdf.columns:
-                        if not values_equal(v, bdf[c].iloc[i]) and str(v) != str(bdf[c].iloc[i]):
-                            bad = (i, c, v, bdf[c].iloc[i], "exact"); break
-                    elif f"{c}_lo" in bdf.columns:
-                        lo, hi = float(bdf[f"{c}_lo"].iloc[i]), float(bdf[f"{c}_hi"].iloc[i])
-                        if not (lo <= float(v) <= hi):
-                            bad = (i, c, v, (lo, hi), "band"); break
-                    else:
-                        bad = (i, c, v, None, "no-band-column"); break
-                if bad: break
             if bad:
                 print(f"FAIL {name} (tolerance): row {bad[0]} col {bad[1]}: "
                       f"spark={bad[2]!r} vs {bad[3]!r} [{bad[4]}]")
