@@ -45,12 +45,15 @@ object Caching {
     * result lazily CACHED (so a composed kernel's consumers still reuse
     * one materialization) while registering result + intermediates for
     * [[releasePending]], which the driving loop calls AFTER its action.
-    * Correct for any SINGLE-THREADED build→act→release loop (Bench, and
-    * the pipelines.* batch drivers since r22); concurrent drivers
-    * (Verify's pool) keep the default eager mode — one thread's release
-    * must not evict another's in-flight caches. The `pending` queue is
-    * deliberately process-global, NOT thread-local: a single-threaded
-    * drive loop may build artifacts through SessionArtifacts.inParallel
+    * Correct for any SINGLE-THREADED build→act→release loop. Only the
+    * session owner sets it, once per session: `graft.Bench.main` and the
+    * perfbench driver do; library code (the pipelines.* batch drivers
+    * included) only reads it and calls [[releasePending]] after each
+    * action. Concurrent drivers (Verify's pool) keep the default eager
+    * mode — one thread's release must not evict another's in-flight
+    * caches. The `pending` queue is deliberately process-global, NOT
+    * thread-local: a single-threaded drive loop may build artifacts
+    * through SessionArtifacts.inParallel
     * (pool threads register; the driving thread releases after its
     * action) — under the single-threaded-driver contract that is safe,
     * under a concurrent driver it is exactly why DeferKey must stay off.

@@ -155,18 +155,12 @@ object TrainingData {
       Caching.releasePending()
       (r, (System.nanoTime() - t0) / 1e9)
     }
-    // deferred cache release (r21 verdict #3 — promoted out of bench-only):
-    // this run is the canonical SINGLE-THREADED build → act → release
-    // sequential batch driver, exactly the shape Caching.DeferKey is
-    // correct for — composed operators' intermediates stay lazily cached
-    // until the stage action completes instead of paying an eager
-    // localCheckpoint job (one extra job + result-block round trip) inside
-    // every builder; measured ~16 % of wall on checkpoint-pattern queries
-    // at sf0.1. Results are identical (lifecycle only). The previous conf
-    // is restored on exit; concurrent drivers (Verify's thread pool) keep
-    // the default eager mode.
-    val deferPrev = spark.conf.getOption(Caching.DeferKey)
-    spark.conf.set(Caching.DeferKey, "true")
+    // cache lifecycle is the CALLER's choice: this run never writes the
+    // session conf, so concurrent runs cannot flip each other's mode. A
+    // single-threaded driver that sets Caching.DeferKey (Bench, perfbench)
+    // gets deferred release at each stage action; otherwise composed
+    // operators take the eager localCheckpoint path. Results are
+    // identical either way (lifecycle only).
     try {
     val input = docs.cache()
     val (nInput, tInput) = timed(input.count())
@@ -316,12 +310,8 @@ object TrainingData {
     summary
     } finally {
       // release anything the report writers registered after the last
-      // timed stage, then hand the session back in its caller's mode
+      // timed stage (a no-op in eager mode)
       Caching.releasePending()
-      deferPrev match {
-        case Some(v) => spark.conf.set(Caching.DeferKey, v)
-        case None    => spark.conf.unset(Caching.DeferKey)
-      }
     }
   }
 }

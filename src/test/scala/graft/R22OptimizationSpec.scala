@@ -10,8 +10,8 @@ import graft.ops.{Caching, Dedup}
   * changes: the dedup-family session artifacts (signature tables, the
   * LSH pair set, the substr scrub table, the per-K decontam tables) must
   * serve EXACTLY what the inline per-query passes computed, and the
-  * pipeline's deferred-release promotion must leave the session the way
-  * it found it. */
+  * pipeline must give the same answers under either cache lifecycle
+  * without touching the session conf. */
 class R22OptimizationSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder().master("local[4]")
@@ -82,10 +82,10 @@ class R22OptimizationSpec extends AnyFunSuite {
     assert(injected == inline)
   }
 
-  test("TrainingData.run restores the caller's deferRelease mode") {
+  test("TrainingData.run: same answers eager or deferred, conf untouched") {
     import spark.implicits._
     val docs = (0L until 40L).map(i =>
-        (i, s"document number $i with some words the gate can count " * 8,
+        (i, s"document number ${i % 30} with some words the gate can count " * 8,
           s"src${i % 2}"))
       .toDF("doc_id", "text", "source")
       .withColumn("n_chars", length(col("text")))
@@ -93,12 +93,26 @@ class R22OptimizationSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val weights = Seq(("src0", 1L, "ff"), ("src1", 1L, "ff"))
       .toDF("source", "base_copies", "thr")
-    val out = java.nio.file.Files.createTempDirectory("r22-td").toString
+    // the caller picks the cache lifecycle; the run only reads DeferKey
+    def runWith(defer: Option[String]) = {
+      defer.foreach(spark.conf.set(Caching.DeferKey, _))
+      try {
+        val out = java.nio.file.Files.createTempDirectory("r22-td").toString
+        val funnel = graft.pipelines.TrainingData.run(spark, docs, evalDocs,
+            weights, out, nShards = 2)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(spark.conf.getOption(Caching.DeferKey) == defer)
+        val rows = spark.read.parquet(graft.sources.ShardExport.resolve(spark, out))
+          .select("doc_id", "source", "text", "n_chars", "copy_no", "shard")
+          .collect().map(_.toSeq).toSet
+        (funnel, rows)
+      } finally spark.conf.unset(Caching.DeferKey)
+    }
     assert(spark.conf.getOption(Caching.DeferKey).isEmpty)
-    graft.pipelines.TrainingData.run(spark, docs, evalDocs, weights, out,
-      nShards = 2, pplGate = false)
-    // the run enables deferred release internally and must hand the
-    // session back unset (it was unset before)
-    assert(spark.conf.getOption(Caching.DeferKey).isEmpty)
+    val (eagerFunnel, eagerRows) = runWith(None)
+    val (deferFunnel, deferRows) = runWith(Some("true"))
+    assert(eagerFunnel("clean") < eagerFunnel("input"))
+    assert(deferFunnel == eagerFunnel)
+    assert(eagerRows.nonEmpty && deferRows == eagerRows)
   }
 }

@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
-"""Bench telemetry: turn one or two Bench JSON lines into the NOTES perf
+"""Bench telemetry: turn one or two Bench artifacts into the NOTES perf
 section — per-query cold-vs-warm deltas (session-artifact attribution) and,
-with a second file, per-query warm ratios vs the reference run.
+with a second file, per-query warm ratios and regressions vs that run.
 
 Usage:
-  tools/bench_report.py BENCH_A.json [BENCH_B.json]
+  tools/bench_report.py NEW.json [OLD.json]
 
-Accepts either a raw Bench stdout line or a driver BENCH_r{N}.json wrapper
-(whose "tail" field holds the line). Output is markdown, ready to paste.
+Accepts a Bench BENCH_FULL.json, a raw Bench stdout line or a driver
+BENCH_r{N}.json wrapper (whose "tail" field holds the line). Output is
+markdown, ready to paste. This is the one place the per-query regression
+rule lives (see `compare`); Bench itself only measures.
 """
 import json
 import re
@@ -15,7 +17,8 @@ import sys
 
 
 def load(path):
-    raw = open(path).read()
+    with open(path) as f:
+        raw = f.read()
     try:
         d = json.loads(raw)
     except json.JSONDecodeError:
@@ -57,6 +60,40 @@ def load(path):
     return out
 
 
+def calib(d):
+    # mean of the start and end probes when both exist (one instant
+    # witnesses one instant; the suite's load is better bracketed)
+    vals = [d[k] for k in ("host_calibration_sec",
+                           "host_calibration_end_sec") if d.get(k)]
+    return sum(vals) / len(vals) if vals else None
+
+
+def compare(new, old):
+    """Per-query warm comparison of two Bench artifacts.
+
+    Returns (common, median, median_norm, movers): the compared query
+    names, the median NEW/OLD warm ratio, that median normalized by the
+    host probes (raw x calib_old/calib_new; None when either side lacks
+    them) and the movers as (ratio, name), largest ratio first. A mover
+    is >=2x slower AND >=0.4 s slower in absolute terms, so trivial
+    deltas on fast queries stay out. A query listed in EITHER side's
+    failed_queries is dropped: a failure's fast wall is not a speedup,
+    and a fixed query is not a regression against one (r20 ADVICE).
+    """
+    nw, ow = new["queries"], old["queries"]
+    failed = set(new.get("failed_queries") or ()) | set(old.get("failed_queries") or ())
+    common = sorted((set(nw) & set(ow)) - failed)
+    ratios = sorted(((nw[q] / ow[q] if ow[q] > 0 else float("inf"), q)
+                     for q in common), reverse=True)
+    if not ratios:
+        return common, None, None, []
+    med = sorted(r for r, _ in ratios)[len(ratios) // 2]
+    cn, co = calib(new), calib(old)
+    norm = med * co / cn if cn and co else None
+    movers = [(r, q) for r, q in ratios if r >= 2.0 and nw[q] - ow[q] >= 0.4]
+    return common, med, norm, movers
+
+
 def main():
     if len(sys.argv) < 2:
         sys.exit(__doc__)
@@ -68,13 +105,6 @@ def main():
     print(f"## Bench report: {sys.argv[1]}")
     print(f"- cold first-pass total {total_first:.1f} s, "
           f"warm min-total {total_warm:.1f} s at {len(warm)} queries")
-    def calib(d):
-        # mean of the start and end probes when both exist (one instant
-        # witnesses one instant; the suite's load is better bracketed)
-        vals = [d[k] for k in ("host_calibration_sec",
-                               "host_calibration_end_sec") if d.get(k)]
-        return sum(vals) / len(vals) if vals else None
-
     if calib(a):
         probes = " + ".join(f"{a[k]:.2f}" for k in
                             ("host_calibration_sec", "host_calibration_end_sec")
@@ -105,9 +135,9 @@ def main():
     failed = a.get("failed_queries")
     if failed:
         # a failed query's wall time is a fast ERROR, not a speedup —
-        # these are excluded from the verdict's ratio set (r20 review)
+        # `compare` drops these from the ratio set (r20 review)
         print(f"- !! {len(failed)} QUERIES FAILED during the bench "
-              f"(excluded from verdict ratios): {', '.join(failed)}")
+              f"(excluded from compare ratios): {', '.join(failed)}")
     cd = a.get("cold_decomposed")
     if isinstance(cd, list) and cd:
         # per-query cold = attributed builds + plan (r19 #6): the pass-1
@@ -116,77 +146,25 @@ def main():
         for e in cd:
             print(f"    {e['q']:28s} cold {e['cold']:7.2f} = builds "
                   f"{e['builds']:6.2f} + plan {e['plan']:6.2f}")
-    v = a.get("verdict")
-    if isinstance(v, dict) and "median_ratio_raw" in v:
-        # the artifact's own adjudication vs the previous round (r17 #7):
-        # Bench computed this at run time from the prior committed artifact
-        print(f"- self-verdict vs {v.get('prev')} ({v.get('n_common')} common): "
-              f"median ratio raw {v['median_ratio_raw']:.2f}, "
-              f"normalized {v.get('median_ratio_norm') if v.get('median_ratio_norm') is not None else 'n/a'}"
-              f" (calib {v.get('calib_prev')}/{v.get('calib_cur')})")
-        movers = v.get("movers") or []
-        if movers:
-            # denominator is the FULL raw mover count, not the rendered
-            # list (capped at 10) — with >10 raw movers len(movers) would
-            # print nonsense like '12/10 confirmed' (r18 ADVICE)
-            n_raw = v.get("n_movers_raw", len(movers))
-            print(f"- self-verdict movers (raw >=2x and >=0.4s): "
-                  f"{v.get('n_movers_confirmed', 0)}/{n_raw} confirmed "
-                  f"(normalized AND reproduced by the targeted re-pass)"
-                  + (f" (showing {len(movers)} of {n_raw})" if n_raw > len(movers) else ""))
-            for m in movers:
-                # confirmed now means BOTH gates held: the calibration-
-                # normalized ratio AND the automatic targeted re-pass
-                # (r19 #1). REFUTED = the re-run read fast again (host
-                # noise); host-drift = calibration explained it; a
-                # missing gate is conservative (cannot clear a mover).
-                c = m.get("confirmed")
-                rep = m.get("reproduced")
-                if c is True:
-                    # conservative paths can confirm WITHOUT a repro
-                    # timing — say which evidence actually exists
-                    tag = ("CONFIRMED (reproduced)" if rep is True else
-                           "CONFIRMED (repro timing missing — conservative)")
-                elif c is False:
-                    tag = ("REFUTED (targeted re-pass read fast)" if rep is False
-                           else "host-drift (calibration-normalized)")
-                else:
-                    # confirmed is null only in pre-r20 artifacts (no
-                    # prev calibration, no repro pass) — a potential
-                    # regression, never drift
-                    tag = "UNADJUDICATED (pre-adjudication artifact / no prev calibration)"
-                rp = m.get("repro")
-                print(f"    {m['q']:28s} {m['prev']:6.2f} -> {m['cur']:6.2f}  "
-                      f"raw {m['ratio_raw']:.2f}x  norm "
-                      f"{m['ratio_norm'] if m['ratio_norm'] is not None else 'n/a'}"
-                      f"  repro {f'{rp:.2f}s' if rp is not None else 'n/a'}"
-                      f"  {tag}")
-        else:
-            print("- self-verdict: no raw movers")
     if len(sys.argv) > 2:
         b = load(sys.argv[2])
         bw = b["queries"]
-        common = sorted(set(warm) & set(bw))
+        common, med, norm, big = compare(a, b)
         if not common:
-            sys.exit(f"no common queries between {sys.argv[1]} and "
-                     f"{sys.argv[2]} (truncated tail artifact?)")
-        ratios = sorted(((warm[q] / bw[q] if bw[q] > 0 else float("inf"), q)
-                         for q in common), reverse=True)
-        med = sorted(r for r, _ in ratios)[len(ratios) // 2]
+            sys.exit(f"no common non-failed queries between {sys.argv[1]} "
+                     f"and {sys.argv[2]} (truncated tail artifact?)")
         print(f"\n## vs {sys.argv[2]} ({len(common)} common queries)")
         print(f"- suite median warm ratio: {med:.2f} "
               f"(drift band per NOTES: compare medians, not single readings)")
-        ca, cb = calib(a), calib(b)
-        if ca and cb:
+        if norm is not None:
             # times scale ~ with host slowness; dividing each side by its
             # calibration cancels the shared-host drift component
-            print(f"- host-normalized median ratio: {med * cb / ca:.2f} "
-                  f"(raw {med:.2f} x calib {cb:.2f}/{ca:.2f})")
+            print(f"- host-normalized median ratio: {norm:.2f} "
+                  f"(raw {med:.2f} x calib {calib(b):.2f}/{calib(a):.2f})")
         else:
-            missing = sys.argv[1] if not ca else sys.argv[2]
+            missing = sys.argv[1] if not calib(a) else sys.argv[2]
             print(f"- no host normalization: {missing} lacks "
                   f"host_calibration_sec (pre-r17 artifact)")
-        big = [(r, q) for r, q in ratios if r >= 2.0 and warm[q] - bw[q] >= 0.4]
         if big:
             print("- >=2x AND >=0.4s absolute warm regressions:")
             for r, q in big:
