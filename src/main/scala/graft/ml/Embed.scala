@@ -125,13 +125,10 @@ object Embed {
     * `.cache()` here would hold a corpus-sized block set for the session's
     * life — at 100 TB the parquet artifact is the right shape (prunes
     * columns, evicts for free, survives executor loss). */
-  def embedDocuments(spark: SparkSession, dir: String): DataFrame = {
-    val p = graft.ops.SessionArtifacts.dir("embed", spark, dir) { t =>
+  def embedDocuments(spark: SparkSession, dir: String): DataFrame =
+    graft.ops.SessionArtifacts.table("embed", spark, dir) {
       import spark.implicits._
-      val docs = graft.Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-      embed(docs).write.mode("overwrite").parquet(s"$t/embeddings")
+      embed(graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("text")).as[(Long, String)])
     }
-    spark.read.parquet(s"$p/embeddings")
-  }
 }

@@ -147,10 +147,6 @@ object WordVec {
     * collide. */
   def fitted(s: SparkSession, d: String, minCount: Long = 1L): DataFrame = {
     val key = if (minCount == 1L) "wordvec" else s"wordvec_mc$minCount"
-    val p = SessionArtifacts.dir(key, s, d) { t =>
-      fit(Tables.documents(s, d), minCount = minCount)
-        .write.mode("overwrite").parquet(s"$t/vecs")
-    }
-    s.read.parquet(s"$p/vecs")
+    SessionArtifacts.table(key, s, d)(fit(Tables.documents(s, d), minCount = minCount))
   }
 }

@@ -715,11 +715,9 @@ object Curation {
     }.toDF("lang", "n_docs", "tokens_in", "p_micro", "thr16")
   }
 
-  private[ops] def tempMixDir(s: SparkSession, d: String): String =
-    SessionArtifacts.dir("temp-mix", s, d) { t =>
-      fitTempMix(s, Tables.documents(s, d))
-        .coalesce(1).write.mode("overwrite").parquet(t)
-    }
+  private[ops] def tempMix(s: SparkSession, d: String): DataFrame =
+    SessionArtifacts.table("temp-mix", s, d)(
+      fitTempMix(s, Tables.documents(s, d)).coalesce(1))
 
   /** M9+ temperature-rebalanced language mixture (the τ-sampling of
     * multilingual pretraining, cf. mBERT/XLM-R exponent-smoothed
@@ -731,7 +729,7 @@ object Curation {
     * (static mixing config), the rates here are FIT from the corpus and
     * exported, the q101/q105 model-artifact pattern. */
   val q107TempMix: Q = (s, d) => {
-    val rates = s.read.parquet(tempMixDir(s, d)).select(col("lang"), col("thr16"))
+    val rates = tempMix(s, d).select(col("lang"), col("thr16"))
     val h16 = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
       .cast("long")
     Tables.documents(s, d)
@@ -806,7 +804,7 @@ object Curation {
 
   /** Oracle support for q107: the fitted per-language rate table. */
   def writeTempMixSupport(s: SparkSession, d: String, outDir: String): Unit =
-    s.read.parquet(tempMixDir(s, d)).coalesce(1).write.mode("overwrite")
+    tempMix(s, d).coalesce(1).write.mode("overwrite")
       .parquet(s"${graft.Verify.supportDir(outDir)}/q107_support_rates")
 
   /** Oracle support for q103/q104: the single-assignment dedup index as

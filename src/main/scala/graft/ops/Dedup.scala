@@ -101,16 +101,6 @@ object Dedup {
     sig
   }
 
-  /** MinHash+LSH near-duplicate pairs (M7). Candidates: equal band-hash in
-    * any of the 16 bands (2-row bands → P(candidate) = 1-(1-s²)¹⁶, ≈1 for
-    * s ≥ 0.8). Verification: exact trigram Jaccard ≥ 0.8 on the pair.
-    * Output is therefore exactly the ≥0.8-Jaccard pairs as long as LSH
-    * recall is 1 — which the oracle's exhaustive scan certifies at sf. */
-  /** Shared candidate-generate → verify core of q38/q56: unordered verified
-    * pairs (doc_a < doc_b, trigram Jaccard ≥ 0.8). */
-  private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(minhashPairsDir(s, d))
-
   /** The (doc_id, hs, sig) signature computation over a (doc_id, text)
     * frame — the ONE definition behind the generic pipeline path and the
     * session signature artifact. */
@@ -151,28 +141,28 @@ object Dedup {
     * scan. Deterministic kernels, so values are bit-identical to the
     * inline form; row order is irrelevant to every consumer (equi-joins,
     * groupBys, or a final sort). */
-  private[graft] def sigTableDir(s: SparkSession, d: String): String =
-    SessionArtifacts.dir("minhash-sigs", s, d) { t =>
-      sigsOf(Tables.documents(s, d)).write.mode("overwrite").parquet(t)
-    }
-
-  /** The persisted signature table (doc_id, hs, sig). */
   private[graft] def sigTable(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(sigTableDir(s, d))
+    SessionArtifacts.table("minhash-sigs", s, d)(sigsOf(Tables.documents(s, d)))
 
-  /** Once-per-(session, dataset) persisted MinHash LSH near-dup PAIRS
-    * (doc_a, doc_b, jaccard ≥ 0.8) — the verified-pair truth q38 serves
-    * and dedupComponents/q79 close over. Built from [[sigTable]] through
-    * the SAME banding → skew-guarded candidates → merge-verify path the
-    * inline form ran (LSH semantics preserved — this is NOT the exact
-    * prefix-filter pair set, whose recall guarantee differs); parquet
-    * round-trips the rounded jaccard exactly. */
-  private[graft] def minhashPairsDir(s: SparkSession, d: String): String =
-    SessionArtifacts.dir("minhash-pairs", s, d) { t =>
+  /** MinHash+LSH near-duplicate pairs (M7), persisted once per (session,
+    * dataset): unordered verified pairs (doc_a < doc_b, jaccard ≥ 0.8) —
+    * the truth q38 serves and dedupComponents/q79 close over. Candidates:
+    * equal band-hash in any of the 16 bands (2-row bands →
+    * P(candidate) = 1-(1-s²)¹⁶, ≈1 for s ≥ 0.8); verification: exact
+    * trigram Jaccard ≥ 0.8 on the pair. Output is therefore exactly the
+    * ≥0.8-Jaccard pairs as long as LSH recall is 1 — which the oracle's
+    * exhaustive scan certifies at sf. Built from [[sigTable]] through the
+    * SAME banding → skew-guarded candidates → merge-verify path as
+    * [[minhashPairsOf]] (LSH semantics — NOT the exact prefix-filter pair
+    * set, whose recall guarantee differs); parquet round-trips the
+    * rounded jaccard exactly. Stays on [[SessionArtifacts.dir]]: the
+    * build releases its signature cache after the write. */
+  private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(SessionArtifacts.dir("minhash-pairs", s, d) { t =>
       val docs = sigTable(s, d).cache()
       try pairsFromSigs(docs).write.mode("overwrite").parquet(t)
       finally { docs.unpersist(); () }
-    }
+    })
 
   /** EXACT Jaccard-threshold pair enumeration via PREFIX FILTERING —
     * the set-similarity-join result (AllPairs/PPJoin family, public
@@ -230,8 +220,8 @@ object Dedup {
     * its audit table. Values are bit-identical to the inline form
     * (parquet round-trips the rounded double exactly; row order is
     * irrelevant to every consumer — q227 re-sorts). */
-  private[graft] def exactPairs08Dir(s: SparkSession, d: String): String =
-    SessionArtifacts.dir("jaccard-pairs-08", s, d) { t =>
+  private[graft] def exactPairs08(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(SessionArtifacts.dir("jaccard-pairs-08", s, d) { t =>
       // shingle sets from the session signature table (one kernel pass per
       // session); NATURAL write parallelism (r21 verdict #4): at 100 TB a
       // duplicate-pairs table can be millions of rows and a coalesce(1)
@@ -240,11 +230,7 @@ object Dedup {
       val docs = sigTable(s, d).select(col("doc_id"), col("hs")).cache()
       try exactJaccardPairs(docs, 0.8).write.mode("overwrite").parquet(t)
       finally { docs.unpersist(); () }
-    }
-
-  /** The persisted ≥ 0.8 exact pair set (doc_a, doc_b, jaccard). */
-  private[graft] def exactPairs08(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(exactPairs08Dir(s, d))
+    })
 
   /** (doc_id, band, bhash) LSH bucket rows of a signature table
     * (doc_id, ..., sig) — the candidate-join key layout shared by q38 and
@@ -503,17 +489,12 @@ object Dedup {
     * md5-per-shingle signature kernel (the per-doc MessageDigest loop is
     * the family's priciest per-row work). Two longs per doc; the parquet
     * scan is the materialization barrier the inline .cache() provided. */
-  private[graft] def simhashTableDir(s: SparkSession, d: String): String =
-    SessionArtifacts.dir("simhash-sigs", s, d) { t =>
+  private[graft] def simhashTable(s: SparkSession, d: String): DataFrame =
+    SessionArtifacts.table("simhash-sigs", s, d) {
       Tables.documents(s, d)
         .select(col("doc_id"), simhashMd5(TextFns.normText(col("text"))).as("simhash"))
         .filter(col("simhash").isNotNull)
-        .write.mode("overwrite").parquet(t)
     }
-
-  /** The persisted SimHash signature table (doc_id, simhash). */
-  private[graft] def simhashTable(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(simhashTableDir(s, d))
 
   val q40SimhashDedup: Q = (s, d) => {
     // signatures from the session artifact (one kernel pass per session);
@@ -681,16 +662,12 @@ object Dedup {
     * verify + iterative closure once per session and serving the
     * (duplicate-docs-sized) result as parquet is the artifact shape the
     * ANN chain already uses — the cold pass pays the build, warm
-    * consumers read a tiny table. cleanCorpus keeps its live path: it
-    * closes over arbitrary (gated) inputs, not the corpus table. */
-  private[graft] def dedupComponents(s: SparkSession, d: String): DataFrame = {
-    val dir = SessionArtifacts.dir("minhash-components", s, d) { t =>
-      ConnectedComponents.run(
-          minhashPairs(s, d).select(col("doc_a"), col("doc_b")))
-        .write.mode("overwrite").parquet(t)
+    * consumers read a tiny table. cleanCorpus runs its own closure: it
+    * closes over the pairs of arbitrary (gated) inputs, not the corpus. */
+  private[graft] def dedupComponents(s: SparkSession, d: String): DataFrame =
+    SessionArtifacts.table("minhash-components", s, d) {
+      ConnectedComponents.run(minhashPairs(s, d).select(col("doc_a"), col("doc_b")))
     }
-    s.read.parquet(dir)
-  }
 
   val q41DedupCanonical: Q = (s, d) =>
     dedupComponents(s, d)
@@ -777,16 +754,17 @@ object Dedup {
     * dup_exact never fires on this corpus (no exact clones planted) —
     * the branch is exercised with planted clones in DedupSpec. */
   val q79CleanPipeline: Q = (s, d) =>
-    // the fuzzy tier's pair set comes from the session [[minhashPairs]]
-    // artifact (r22, §2.4) — identical rows to the inline
-    // minhashPairsOf(documents) the default path computes, built once per
-    // session instead of inside every q79 evaluation
-    cleanCorpus(Tables.documents(s, d),
-      precomputedPairs = Some(minhashPairs(s, d)))
+    cleanCorpus(Tables.documents(s, d), minhashPairs(s, d))
 
   /** The composition over an arbitrary (doc_id, text, n_chars) frame —
-    * unit tests plant exact clones to exercise the dup_exact branch. */
-  /** @param retentionScores optional (doc_id, score: double) table: when
+    * unit tests plant exact clones to exercise the dup_exact branch.
+    *
+    * @param pairs the MinHash near-dup pair table (doc_a, doc_b, …); it
+    *   MUST hold exactly the rows `minhashPairsOf(input)` produces — q79
+    *   passes the session [[minhashPairs]] artifact (same kernels, same
+    *   banding, materialized once per session), pipelines and tests pass
+    *   `minhashPairsOf` over their own gated input.
+    * @param retentionScores optional (doc_id, score: double) table: when
     *   given, BOTH dedup tiers keep the HIGHEST-scoring member of each
     *   duplicate group (doc_id tie-break) instead of the smallest id —
     *   the q108 quality-aware retention policy as a pipeline mode (score
@@ -795,16 +773,8 @@ object Dedup {
     *   (a scored duplicate always beats an unscored one). With None the
     *   constant score degenerates the rank to min-doc_id — bit-identical
     *   to the historical semantics (q79's oracle still certifies it). */
-  /** @param precomputedPairs optional MinHash near-dup pair table
-    *   (doc_a, doc_b, …): when given it MUST hold exactly the rows
-    *   `minhashPairsOf(input)` would produce (the q79 path serves the
-    *   session [[minhashPairs]] artifact — same kernels, same banding,
-    *   materialized once per session); with None the pairs are computed
-    *   inline, which is the correct mode for arbitrary gated inputs
-    *   (pipelines, tests). */
-  def cleanCorpus(input: DataFrame,
-      retentionScores: Option[DataFrame] = None,
-      precomputedPairs: Option[DataFrame] = None): DataFrame = {
+  def cleanCorpus(input: DataFrame, pairs: DataFrame,
+      retentionScores: Option[DataFrame] = None): DataFrame = {
     val docs = input
       .select(col("doc_id"), col("n_chars"),
         TextFns.fingerprint(col("text")).as("fp"))
@@ -826,7 +796,7 @@ object Dedup {
       .select(col("doc_id"), col("rk_score"))
     // fuzzy canonicalization among remaining docs: both pair endpoints
     // must have survived the earlier gates
-    val pairs = precomputedPairs.getOrElse(minhashPairsOf(input))
+    val survivingPairs = pairs
       .join(rem2.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
       .join(rem2.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
       .select(col("doc_a"), col("doc_b"))
@@ -835,7 +805,7 @@ object Dedup {
     // stable while the survivor follows the policy
     val wg = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
       .orderBy(col("rk_score").desc, col("vertex"))
-    val dupFuzzy = ConnectedComponents.run(pairs)
+    val dupFuzzy = ConnectedComponents.run(survivingPairs)
       .join(rem2.select(col("doc_id").as("vertex"), col("rk_score")), Seq("vertex"))
       .withColumn("rn", row_number().over(wg))
       .filter(col("rn") =!= 1)
@@ -882,13 +852,9 @@ object Dedup {
     * the span pass + dup-vocabulary count + coverage fold. One build per
     * session × dataset; the table is per-doc sized. Deterministic
     * kernels; consumers sort or aggregate, so row order is free. */
-  private[graft] def substrScrubTable(s: SparkSession, d: String): DataFrame = {
-    val dir = SessionArtifacts.dir("substr-scrub", s, d) { t =>
-      substrScrubOf(Tables.documents(s, d), SpanK)
-        .write.mode("overwrite").parquet(t)
-    }
-    s.read.parquet(dir)
-  }
+  private[graft] def substrScrubTable(s: SparkSession, d: String): DataFrame =
+    SessionArtifacts.table("substr-scrub", s, d)(
+      substrScrubOf(Tables.documents(s, d), SpanK))
 
   /** (start, span-hash) emitter for every K-token window of a normalized
     * text — ONE definition shared by [[substrDedup]] (corpus-duplicate
@@ -1031,13 +997,8 @@ object Dedup {
   /** The memoized scrub table (doc_id, n_tokens, n_cov, clean_fp) —
     * q175 and the q178 funnel share one pass (the knScores discipline:
     * scrub once per session, every consumer reads the same table). */
-  private[graft] def decontamScores(s: SparkSession, d: String): DataFrame = {
-    val p = SessionArtifacts.dir("decontam", s, d) { t =>
-      decontamScrub(Tables.documents(s, d))
-        .write.mode("overwrite").parquet(s"$t/scrub")
-    }
-    s.read.parquet(s"$p/scrub")
-  }
+  private[graft] def decontamScores(s: SparkSession, d: String): DataFrame =
+    SessionArtifacts.table("decontam", s, d)(decontamScrub(Tables.documents(s, d)))
 
   /** [[decontamScores]] at an arbitrary span length — K = [[SpanK]]
     * routes to the certified q175 artifact; other Ks (the q205 sweep
@@ -1045,13 +1006,8 @@ object Dedup {
     * `decontam-k$k`. Same [[decontamScrub]] computation either way. */
   private[graft] def decontamScoresK(s: SparkSession, d: String, k: Int): DataFrame =
     if (k == SpanK) decontamScores(s, d)
-    else {
-      val p = SessionArtifacts.dir(s"decontam-k$k", s, d) { t =>
-        decontamScrub(Tables.documents(s, d), K = k)
-          .write.mode("overwrite").parquet(s"$t/scrub")
-      }
-      s.read.parquet(s"$p/scrub")
-    }
+    else SessionArtifacts.table(s"decontam-k$k", s, d)(
+      decontamScrub(Tables.documents(s, d), K = k))
 
   /** q178: the decontamination FUNNEL — per-source loss accounting of
     * the q175 scrub, the number a release review reads: how much of

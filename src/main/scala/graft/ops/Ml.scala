@@ -235,10 +235,10 @@ object Ml {
     val p = SessionArtifacts.dir("sifdocvec", s, d) { t =>
       val (dvecs, tf) = sifDocvecsOver(
         graft.Tables.documents(s, d), graft.ml.WordVec.fitted(s, d))
-      dvecs.write.mode("overwrite").parquet(s"$t/dvecs")
+      dvecs.write.mode("overwrite").parquet(t)
       dvecs.unpersist(); tf.unpersist()
     }
-    val cached = s.read.parquet(s"$p/dvecs")
+    val cached = s.read.parquet(p)
     (cached, cached)
   }
 

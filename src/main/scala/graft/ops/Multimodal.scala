@@ -442,13 +442,9 @@ object Multimodal {
     * The support writers export from the same artifact, so the oracle
     * certifies exactly the table the sweep served. */
   private def phashPairsTable(s: SparkSession, d: String,
-      bits: Int): DataFrame = {
-    val p = SessionArtifacts.dir(s"phashpairs-$bits", s, d) { t =>
-      (if (bits == 64) phashSweepHashes64(s, d) else phashSweepHashes(s, d))
-        .write.mode("overwrite").parquet(s"$t/pairs")
-    }
-    s.read.parquet(s"$p/pairs")
-  }
+      bits: Int): DataFrame =
+    SessionArtifacts.table(s"phashpairs-$bits", s, d)(
+      if (bits == 64) phashSweepHashes64(s, d) else phashSweepHashes(s, d))
 
   val q225PhashRadiusSweep: Q = (s, d) =>
     phashRadiusSweepOf(phashPairsTable(s, d, CorpusHashBits), SweepPhashRadii)

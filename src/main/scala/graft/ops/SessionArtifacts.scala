@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once ON-DISK session artifacts (IVF index, inverted index,
   * embedding table): the deployed contract for model/index-backed queries is
@@ -8,6 +8,19 @@ import org.apache.spark.sql.SparkSession
   * saved artifact" — a plain-parquet scan, never a session-pinned
   * corpus-sized cache (at 100 TB a pinned cache is the wrong artifact; a
   * partitioned parquet layout prunes and evicts for free).
+  *
+  * Declaring an artifact: an artifact that IS one DataFrame is declared
+  * with [[table]] — the build expression, nothing else; the table is the
+  * artifact directory itself. [[dir]] is kept only where a table does not
+  * fit:
+  *   - index layouts with their own writer: the IVF family, `ivf-doc`,
+  *     `invidx`, `quality-lr*`, `bucketed`;
+  *   - the cell-partitioned `ivf-filtered-cells`;
+  *   - `dsir-logratio`, whose loader takes a path the streaming tier
+  *     shares;
+  *   - builds that release a cache barrier after their write:
+  *     `minhash-pairs`, `jaccard-pairs-08`, `nllkn`, `nllkn3`,
+  *     `sifdocvec`.
   *
   * Two hygiene guarantees the bare TrieMap-of-dirs memos lacked:
   *   - the FIRST build per key runs exactly once — concurrent first calls
@@ -127,4 +140,10 @@ object SessionArtifacts {
     completed.putIfAbsent(key, v)
     v
   }
+
+  /** The table artifact for (kind, session, dataset): `build` is written
+    * once through [[dir]]; every call reads the saved table back. */
+  def table(kind: String, spark: SparkSession, dataset: String)(
+      build: => DataFrame): DataFrame =
+    spark.read.parquet(dir(kind, spark, dataset)(build.write.mode("overwrite").parquet(_)))
 }

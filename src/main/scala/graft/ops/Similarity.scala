@@ -470,19 +470,29 @@ object Similarity {
     * silently desyncing kernel and oracle. */
   private[graft] val CertIvfNCells = 32
 
-  /** Once-per-(session, dataset) IVF index build+save (SessionArtifacts:
-    * single-flight first build, dirs reaped at JVM exit). */
-  private[ops] def ivfDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    SessionArtifacts.dir("ivf-q45", s, d) { t =>
-      require(probeSchedule(CertIvfNCells) == AnnNProbe,
-        s"certification index nCells=$CertIvfNCells makes probeSchedule=" +
-          s"${probeSchedule(CertIvfNCells)} ≠ AnnNProbe=$AnnNProbe: the ANN " +
-          "oracles interpolate AnnNProbe and would silently desync — keep " +
-          "nCells ≤ 4·AnnNProbe or teach the oracles the schedule first")
+  /** Once-per-(session, dataset) build+save of an embeddings IVF index
+    * under `kind` — the one builder behind the certification index and
+    * its q213/q217/q228 sweep variants, which differ only in cell count,
+    * fit-sample cap and replication (seed 7 throughout). */
+  private def ivfVariantDir(s: org.apache.spark.sql.SparkSession, d: String,
+      kind: String, nCells: Int = CertIvfNCells, maxFitRows: Long = 50000L,
+      nReplicas: Int = 2): String =
+    SessionArtifacts.dir(kind, s, d) { t =>
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      IvfIndex.save(s, IvfIndex.build(s, e, nCells = CertIvfNCells, seed = 7L,
-        nReplicas = 2), t)
+      IvfIndex.save(s, IvfIndex.build(s, e, nCells = nCells, seed = 7L,
+        maxFitRows = maxFitRows, nReplicas = nReplicas), t)
     }
+
+  /** The certification IVF index (SessionArtifacts: single-flight first
+    * build, dirs reaped at JVM exit). */
+  private[ops] def ivfDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
+    require(probeSchedule(CertIvfNCells) == AnnNProbe,
+      s"certification index nCells=$CertIvfNCells makes probeSchedule=" +
+        s"${probeSchedule(CertIvfNCells)} ≠ AnnNProbe=$AnnNProbe: the ANN " +
+        "oracles interpolate AnnNProbe and would silently desync — keep " +
+        "nCells ≤ 4·AnnNProbe or teach the oracles the schedule first")
+    ivfVariantDir(s, d, "ivf-q45")
+  }
 
   /** Oracle support for q45/q96 (run by Verify before the DuckDB compare):
     * the SERVED index as plain parquet under outDir — the codebook
@@ -717,19 +727,15 @@ object Similarity {
     * identical denominator, and before this memo each re-ran the same
     * batch×corpus brute force. SessionArtifacts discipline: persist,
     * serve from the parquet (probe-count×3 rows), never re-scan. */
-  private def exactSweepDir(s: org.apache.spark.sql.SparkSession,
-      d: String): String =
-    SessionArtifacts.dir("exact-top3-sweep", s, d) { t =>
+  private def exactTop3Sweep(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame =
+    SessionArtifacts.table("exact-top3-sweep", s, d) {
       graft.plans.GraftExtensions.register(s)
       val e = Tables.embeddings(s, d)
       exactTop3Scored(e, e.filter(col("vec_id") < SweepBatchMaxId)
           .select(col("vec_id"), col("embedding")))
-        .coalesce(1).write.mode("overwrite").parquet(t) // t pre-created by dir()
-    }
-
-  private def exactTop3Sweep(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame =
-    s.read.parquet(exactSweepDir(s, d)).select(col("vec_id"), col("nn_id"))
+        .coalesce(1)
+    }.select(col("vec_id"), col("nn_id"))
 
   val q201AnnRecallSweep: Q = (s, d) => {
     graft.plans.GraftExtensions.register(s)
@@ -839,11 +845,7 @@ object Similarity {
   private def nlistDir(s: org.apache.spark.sql.SparkSession, d: String,
       n: Int): String =
     if (n == CertIvfNCells) ivfDir(s, d)
-    else SessionArtifacts.dir(s"ivf-nlist-$n", s, d) { t =>
-      val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      IvfIndex.save(s, IvfIndex.build(s, e, nCells = n, seed = 7L,
-        nReplicas = 2), t)
-    }
+    else ivfVariantDir(s, d, s"ivf-nlist-$n", nCells = n)
 
   /** ONE parameterized per-index export (r17 verdict #8): each sweep
     * index's codebook + membership under `<prefix>_centroids_<key>` /
@@ -951,11 +953,7 @@ object Similarity {
   private def fitDir(s: org.apache.spark.sql.SparkSession, d: String,
       cap: Int): String =
     if (cap == 50000) ivfDir(s, d)
-    else SessionArtifacts.dir(s"ivf-fit-$cap", s, d) { t =>
-      val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      IvfIndex.save(s, IvfIndex.build(s, e, nCells = CertIvfNCells, seed = 7L,
-        maxFitRows = cap.toLong, nReplicas = 2), t)
-    }
+    else ivfVariantDir(s, d, s"ivf-fit-$cap", maxFitRows = cap.toLong)
 
   /** Oracle support for q228: once per fit cap. */
   def writeAnnFitSupport(s: org.apache.spark.sql.SparkSession, d: String,
@@ -1022,11 +1020,7 @@ object Similarity {
         .toDF("cell", "vec_id", "embedding")
       IvfIndex.save(s, IvfIndex(idx.centroids, derived, 1), t)
     }
-    else SessionArtifacts.dir(s"ivf-replicas-$r", s, d) { t =>
-      val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      IvfIndex.save(s, IvfIndex.build(s, e, nCells = CertIvfNCells, seed = 7L,
-        nReplicas = r), t)
-    }
+    else ivfVariantDir(s, d, s"ivf-replicas-$r", nReplicas = r)
 
   /** Oracle support for q217: once per replication factor. */
   def writeAnnReplicaSupport(s: org.apache.spark.sql.SparkSession, d: String,
@@ -1075,8 +1069,9 @@ object Similarity {
     * vector's j-th coordinate, and (a·v_j)(b·v_j) is sign-invariant, so
     * rotated cosines — and the oracle, which reads the EXPORTED matrix
     * — are unaffected. */
-  private def pcaDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    SessionArtifacts.dir("pca-rotation", s, d) { t =>
+  private def pcaRotation(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame =
+    SessionArtifacts.table("pca-rotation", s, d) {
       import s.implicits._
       val pc = new org.apache.spark.ml.feature.PCA()
         .setK(PcaK).setInputCol("features").setOutputCol("p")
@@ -1087,14 +1082,13 @@ object Similarity {
         .pc
       (0 until PcaK).map { j =>
         (j.toLong, (0 until pc.numRows).map(i => pc(i, j)))
-      }.toDF("j", "vcol")
-        .coalesce(1).write.mode("overwrite").parquet(t)
+      }.toDF("j", "vcol").coalesce(1)
     }
 
   /** Oracle support for q211: the fitted rotation matrix. */
   def writeAnnPcaSupport(s: org.apache.spark.sql.SparkSession, d: String,
       outDir: String): Unit =
-    s.read.parquet(pcaDir(s, d)).coalesce(1).write.mode("overwrite")
+    pcaRotation(s, d).coalesce(1).write.mode("overwrite")
       .parquet(s"${graft.Verify.supportDir(outDir)}/q211_support_pca")
 
   /** The corpus rotated onto the principal directions: component j =
@@ -1104,7 +1098,7 @@ object Similarity {
     * array pass per vector. */
   private def rotatedEmbeddings(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
-    val V = s.read.parquet(pcaDir(s, d)).orderBy(col("j"))
+    val V = pcaRotation(s, d).orderBy(col("j"))
       .collect().map(_.getSeq[Double](1).toArray)
     val bc = s.sparkContext.broadcast(V)
     val rotate = udf { (v: Array[Float]) =>

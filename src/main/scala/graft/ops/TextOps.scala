@@ -914,17 +914,15 @@ object TextOps {
     * regenerates the dataset at the same path gets a fresh fit in its
     * new session) and the Holder guarantees the expensive multi-round
     * fit runs at most once even under concurrent first callers. */
-  private[graft] def bpeMergesOf(s: SparkSession, d: String): Seq[(String, String)] = {
-    val p = SessionArtifacts.dir("bpemerges", s, d) { t =>
+  private[graft] def bpeMergesOf(s: SparkSession, d: String): Seq[(String, String)] =
+    SessionArtifacts.table("bpemerges", s, d) {
       import s.implicits._
       graft.ml.BpeTrain.fit(Tables.documents(s, d), Q145Merges).zipWithIndex
         .map { case ((a, b), i) => (i + 1L, a, b) }
         .toDF("merge_no", "a", "b")
-        .coalesce(1).write.mode("overwrite").parquet(s"$t/merges")
-    }
-    s.read.parquet(s"$p/merges").orderBy(col("merge_no"))
+        .coalesce(1)
+    }.orderBy(col("merge_no"))
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-  }
 
   /** q145: the FULL trained tokenizer, certified — fit the distributed
     * BPE trainer ([[graft.ml.BpeTrain]]) for [[Q145Merges]] rounds, then

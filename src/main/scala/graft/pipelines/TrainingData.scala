@@ -209,7 +209,8 @@ object TrainingData {
     // cache: the clean set feeds BOTH the funnel count and the
     // decontamination scan — without the barrier the whole dedup candidate
     // generation (MinHash pairs + components) replays per consumer
-    val disposition = Dedup.cleanCorpus(pplGated, retentionScores)
+    val disposition =
+      Dedup.cleanCorpus(pplGated, Dedup.minhashPairsOf(pplGated), retentionScores)
     val clean = pplGated.join(
         disposition.filter(col("status") === "kept").select("doc_id"), Seq("doc_id"))
       .cache()

@@ -62,26 +62,6 @@ class R22OptimizationSpec extends AnyFunSuite {
     }
   }
 
-  test("cleanCorpus with precomputed pairs equals the inline-pairs form") {
-    import spark.implicits._
-    // planted corpus: a near-dup pair, an exact clone pair, a short doc
-    val a = ("lorem ipsum dolor sit amet consectetur adipiscing elit sed do " +
-      "eiusmod tempor incididunt ut labore et dolore magna aliqua ut enim") * 3
-    val b = a + " extra tail token"
-    val docs = Seq(
-      (1L, a), (2L, b), (3L, a), (4L, "short doc"),
-      (5L, "an unrelated document with plenty of distinct words to stand " +
-        "alone in the corpus and survive every dedup tier" * 3))
-      .toDF("doc_id", "text")
-      .withColumn("n_chars", length(col("text")))
-    val inline = Dedup.cleanCorpus(docs)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val pairs = Dedup.minhashPairsOf(docs)
-    val injected = Dedup.cleanCorpus(docs, precomputedPairs = Some(pairs))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(injected == inline)
-  }
-
   test("TrainingData.run: same answers eager or deferred, conf untouched") {
     import spark.implicits._
     val docs = (0L until 40L).map(i =>

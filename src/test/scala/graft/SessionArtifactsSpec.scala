@@ -46,4 +46,18 @@ class SessionArtifactsSpec extends AnyFunSuite {
     assert(SessionArtifacts.dir("spec-k", spark, "dsA") { _ => rebuilt = true } == a)
     assert(!rebuilt)
   }
+
+  test("table writes its build once and every call reads the saved rows") {
+    import spark.implicits._
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    def served = SessionArtifacts.table("spec-table", spark, "dsT") {
+      builds.incrementAndGet()
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    }.as[(Long, String)].collect().toSet
+    val expected = Set((1L, "a"), (2L, "b"))
+    assert(served == expected)
+    assert(served == expected)
+    assert(builds.get() == 1, s"build ran ${builds.get()} times")
+    assert(SessionArtifacts.costs.contains("spec-table"))
+  }
 }

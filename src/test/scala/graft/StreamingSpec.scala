@@ -184,9 +184,10 @@ class StreamingSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().sorted.toSeq
     // the batch policy on the same corpus + scores (q108 / cleanCorpus):
     // keep-set equality is the parity contract for batch-contained groups
+    val batchDocs =
+      b1.toDF("doc_id", "text").withColumn("n_chars", length(col("text")))
     val batchKept = graft.ops.Dedup.cleanCorpus(
-        b1.toDF("doc_id", "text").withColumn("n_chars", length(col("text"))),
-        Some(scores))
+        batchDocs, graft.ops.Dedup.minhashPairsOf(batchDocs), Some(scores))
       .filter(col("status") === "kept")
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(streamKept == batchKept,

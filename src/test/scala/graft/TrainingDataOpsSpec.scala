@@ -98,7 +98,7 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       (5L, ("omega psi chi phi upsilon tau sigma rho " * 8).trim,
         ("omega psi chi phi upsilon tau sigma rho " * 8).trim.length) // kept
     ).toDF("doc_id", "text", "n_chars")
-    val got = ops.Dedup.cleanCorpus(docs)
+    val got = ops.Dedup.cleanCorpus(docs, ops.Dedup.minhashPairsOf(docs))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "kept", 2L -> "dup_exact", 3L -> "dup_fuzzy",
       4L -> "low_quality", 5L -> "kept"))
@@ -117,14 +117,14 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     // score favors the HIGHER ids — the opposite of min-id retention
     val scores = Seq((1L, 0.1), (2L, 0.9), (3L, 2.0), (5L, 0.5))
       .toDF("doc_id", "score")
-    val got = ops.Dedup.cleanCorpus(docs, Some(scores))
+    val got = ops.Dedup.cleanCorpus(docs, ops.Dedup.minhashPairsOf(docs), Some(scores))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     // exact tier: 2 beats 1; fuzzy tier: 3 (score 2.0) beats 2 (0.9)
     assert(got == Map(1L -> "dup_exact", 2L -> "dup_fuzzy", 3L -> "kept",
       5L -> "kept"), got.toString)
     // an unscored duplicate always loses to a scored one
     val partial = Seq((2L, 0.9), (3L, 0.1), (5L, 0.5)).toDF("doc_id", "score")
-    val got2 = ops.Dedup.cleanCorpus(docs, Some(partial))
+    val got2 = ops.Dedup.cleanCorpus(docs, ops.Dedup.minhashPairsOf(docs), Some(partial))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got2(1L) == "dup_exact" && got2(2L) == "kept" && got2(3L) == "dup_fuzzy",
       got2.toString)

@@ -147,7 +147,7 @@ class CurationSpec extends AnyFunSuite {
         if (toks(l) == 0L) 1.0 else math.min(1.0, (m / z) * budget / toks(l))
       (l, math.min(65536L, math.round(rate * 65536)))
     }.toMap
-    val fit = spark.read.parquet(Curation.tempMixDir(spark, sf))
+    val fit = Curation.tempMix(spark, sf)
       .select(col("lang"), col("tokens_in"), col("thr16")).collect()
       .map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
     assert(fit.keySet == toks.keySet)
