@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.GraftInternal
 
 /** Deterministic cache lifecycle for query builders.
   *
@@ -27,6 +28,14 @@ import org.apache.spark.sql.DataFrame
   * region). At production scale, swap localCheckpoint for a reliable
   * checkpoint directory if executor loss must be survivable mid-query —
   * same trade documented at [[ConnectedComponents]].
+  *
+  * [[Barriers]] is the other lifecycle, for a driver that runs a funnel
+  * of materialized stages itself (the `pipelines.*` batch drivers): each
+  * stage is cached, counted once, and handed on as a single-leaf plan
+  * over its cached rows, and the driver releases every stage together in
+  * its `finally`. Use [[materializeAndRelease]] inside a builder whose
+  * caller owns the action; use [[Barriers]] where the same code owns the
+  * action, the count and the end of the run.
   */
 object Caching {
   /** Session conf switch: when "true", return the LAZY result unchanged
@@ -64,6 +73,32 @@ object Caching {
     * nothing here — do not register a nondeterministic plan.
     * Results are identical either way (lifecycle only). */
   val DeferKey = "graft.caching.deferRelease"
+
+  /** Stage barriers of one funnel run. `apply(df)` caches `df`, runs its
+    * one `count()` (the stage's materializing action) and returns that
+    * count with a frame whose logical plan is ONE `LogicalRDD` leaf over
+    * the cached rows. Later stages then analyze, optimize and cache-match
+    * a plan of their own size, not one that nests every stage above them
+    * (a cached frame still carries its full lineage, so a deep funnel
+    * re-plans every earlier stage at every later one; on pipeline-batch
+    * that plan work, not the count jobs, was most of the driver gap).
+    * The leaf adds no second materialization and no checkpoint; it reads
+    * the cache, so it is valid until [[release]], which unpersists every
+    * barrier taken — call it in the run's `finally`, so a failing stage
+    * leaks nothing. One driver thread per instance. */
+  final class Barriers {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    def apply(df: DataFrame): (Long, DataFrame) = {
+      held += df.cache()
+      (df.count(), GraftInternal.leafOf(df))
+    }
+
+    def release(): Unit = {
+      held.foreach(_.unpersist())
+      held.clear()
+    }
+  }
 
   private val pending =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()

@@ -69,9 +69,12 @@ object MediaData {
       val r = f
       (r, (System.nanoTime() - t0) / 1e9)
     }
+    // stage barriers (as in TrainingData.run): released in the finally,
+    // failure or not
+    val barrier = new Caching.Barriers
+    try {
     // ONE decode pass: admission + gate metadata + perceptual hash
-    val profile = Multimodal.decodeProfile(media).cache()
-    val (nInput, tInput) = timed(profile.count())
+    val ((nInput, profile), tInput) = timed(barrier(Multimodal.decodeProfile(media)))
 
     quarantineDir.foreach(qd =>
       profile.filter(!col("decoded"))
@@ -81,11 +84,10 @@ object MediaData {
     val (nAdmitted, tAdmitted) = timed(admitted.count())
 
     // metadata-only from here to the export: bytes are not re-read
-    val gated = admitted.withColumn("n_frames", lit(1))
+    val ((nGated, gated), tGated) = timed(barrier(admitted.withColumn("n_frames", lit(1))
       .select(Seq(col("doc_id"), col("ahash")) ++ Multimodal.mediaGateFlags(gate): _*)
       .filter(col("keep"))
-      .select(col("doc_id"), col("ahash")).cache()
-    val (nGated, tGated) = timed(gated.count())
+      .select(col("doc_id"), col("ahash"))))
 
     // run diagnostic: the q153 hamming histogram of the gated hash
     // population (no extra decode — hashes are already in hand)
@@ -123,8 +125,7 @@ object MediaData {
           reps)
         kept
       }
-    val dedupKeep = keepIds.cache()
-    val (nDeduped, tDeduped) = timed(dedupKeep.count())
+    val ((nDeduped, dedupKeep), tDeduped) = timed(barrier(keepIds))
 
     // export: rewrite ONLY the keepers' bytes, hash-sharded + bounded
     val (exportPath, tExport) = timed(
@@ -142,9 +143,7 @@ object MediaData {
       ("deduped", nDeduped, tDeduped),
       ("exported", nExported, tExport),
     ).toDF("stage", "docs", "secs")
-    dedupKeep.unpersist()
-    gated.unpersist()
-    profile.unpersist()
     summary
+    } finally barrier.release()
   }
 }

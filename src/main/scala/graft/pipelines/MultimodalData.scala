@@ -109,33 +109,38 @@ object MultimodalData {
       val r = f
       (r, (System.nanoTime() - t0) / 1e9)
     }
-    val input = docs.cache()
-    val (nInput, tInput) = timed(input.count())
+    // stage barriers, as in TrainingData.run: every stage below is cached,
+    // counted once and handed on as a leaf, and all of them are released
+    // in the finally, failure or not
+    val barrier = new Caching.Barriers
+    try {
+    val ((nInput, input), tInput) = timed(barrier(docs))
 
     // 0. EXPECTATIONS GATE (q98 structural admission — the TrainingData
     // contract verbatim: breaches fail the run unless diverted)
-    val checked = Scoring.expectationsChecked(input).cache()
-    val breached = checked.filter(!col("_expect_ok"))
-    val nBreached = breached.count()
-    if (nBreached > 0 && structuralQuarantineDir.isEmpty) {
-      checked.unpersist(); input.unpersist()
-      throw new IllegalStateException(
-        s"expectations breach: $nBreached rows (duplicate or null doc_id, " +
-          "null text, or inconsistent n_chars); pass structuralQuarantineDir " +
-          "to divert instead of failing")
+    val ((nValidated, validated), tValidated) = timed {
+      // `_expect_ok` is never null, so the two barrier counts give the
+      // breach count without a job of its own
+      val (nChecked, checked) = barrier(Scoring.expectationsChecked(input))
+      val (nOk, ok) = barrier(checked.filter(col("_expect_ok")).drop("_expect_ok"))
+      val nBreached = nChecked - nOk
+      if (nBreached > 0 && structuralQuarantineDir.isEmpty)
+        throw new IllegalStateException(
+          s"expectations breach: $nBreached rows (duplicate or null doc_id, " +
+            "null text, or inconsistent n_chars); pass structuralQuarantineDir " +
+            "to divert instead of failing")
+      structuralQuarantineDir.foreach(qd =>
+        checked.filter(!col("_expect_ok")).drop("_expect_ok")
+          .write.mode("overwrite").parquet(qd))
+      (nOk, ok)
     }
-    structuralQuarantineDir.foreach(qd =>
-      breached.drop("_expect_ok").write.mode("overwrite").parquet(qd))
-    val validated = checked.filter(col("_expect_ok")).drop("_expect_ok").cache()
-    val (nValidated, tValidated) = timed(validated.count())
 
     // 1. TEXT GATES first — narrow predicate passes, so the decode stage
     // below only ever touches blobs whose documents can survive at all
-    val gated = validated.filter(TextOps.ruleGateKeep(textGate)).cache()
-    val (nGated, tGated) = timed(gated.count())
-    val pplGated =
-      (if (!pplGate) gated else Scoring.pplGateKeep(gated)).cache()
-    val (nPplGated, tPplGated) = timed(pplGated.count())
+    val ((nGated, gated), tGated) =
+      timed(barrier(validated.filter(TextOps.ruleGateKeep(textGate))))
+    val ((nPplGated, pplGated), tPplGated) =
+      timed(if (!pplGate) (nGated, gated) else barrier(Scoring.pplGateKeep(gated)))
 
     // 2. MEDIA PROFILE + ADMISSION + GATE: one decode per surviving blob
     // (decodeProfile fuses admission, gate metadata, and the hash). A doc
@@ -147,15 +152,15 @@ object MultimodalData {
     // (still one decode per blob — admission below filters back to the
     // cascade population by doc_id, metadata-only)
     val decodePop = if (gateVennDir.isDefined) validated else pplGated
-    val profileAll = Multimodal.decodeProfile(
+    // the decode is media_ok's work: its lap is added to that stage's secs
+    val ((_, profileAll), tProfile) = timed(barrier(Multimodal.decodeProfile(
         decodePop.filter(col("media").isNotNull).select(col("doc_id"), col("media")))
       .withColumn("n_frames", lit(1))
       .select(Seq(col("doc_id"), col("decoded"), col("reason"), col("ahash")) ++
         Multimodal.mediaGateFlags(mediaGate): _*)
       .select(col("doc_id"), col("ahash"),
         (col("decoded") && col("keep")).as("media_keep"),
-        when(!col("decoded"), col("reason")).otherwise(lit("gate")).as("fail_reason"))
-      .cache()
+        when(!col("decoded"), col("reason")).otherwise(lit("gate")).as("fail_reason"))))
     val profile =
       if (gateVennDir.isEmpty) profileAll
       else profileAll.join(pplGated.select(col("doc_id")), Seq("doc_id"), "left_semi")
@@ -187,13 +192,11 @@ object MultimodalData {
         Seq("rule", "ppl", "media"))
         .write.mode("overwrite").parquet(dir)
     }
-    val mediaOk = pplGated
+    val ((nMediaOk, mediaOk), tMediaOk) = timed(barrier(pplGated
       .join(profile.select(col("doc_id"), col("media_keep"), col("ahash")),
         Seq("doc_id"), "left")
       .withColumn("keep_media", coalesce(col("media_keep"), lit(true)))
-      .filter(col("keep_media"))
-      .cache()
-    val (nMediaOk, tMediaOk) = timed(mediaOk.count())
+      .filter(col("keep_media"))))
 
     // 3. CROSS-MODAL NEAR CANONICALIZATION (q144): one closure over text
     // fingerprint edges ∪ exact image-hash edges ∪ hamming ≤ 3
@@ -221,15 +224,13 @@ object MultimodalData {
                 col("doc_id"))))
           .filter(col("rn") === 1).select("doc_id")
     }
-    val canonical = mediaOk
+    val ((nCanonical, canonical), tCanonical) = timed(barrier(mediaOk
       .join(keptIds, Seq("doc_id"))
-      .drop("media_keep", "keep_media")
-      .cache()
-    val (nCanonical, tCanonical) = timed(canonical.count())
+      .drop("media_keep", "keep_media")))
 
     // 4. optional decontamination (the TrainingData Bloom tier)
-    val decontaminated = (evalDocs match {
-      case None => canonical
+    val ((nDecontaminated, decontaminated), tDecontaminated) = timed(evalDocs match {
+      case None => (nCanonical, canonical)
       case Some(ev) =>
         val evalGrams = ev
           .select(explode(TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
@@ -239,9 +240,8 @@ object MultimodalData {
         val contaminated = udf { (ghs: Seq[Long]) =>
           ghs != null && ghs.exists(bc.value.mightContainLong)
         }
-        canonical.filter(!contaminated(TextFns.distinctGramHashes(col("text"), 5)))
-    }).cache()
-    val (nDecontaminated, tDecontaminated) = timed(decontaminated.count())
+        barrier(canonical.filter(!contaminated(TextFns.distinctGramHashes(col("text"), 5))))
+    })
 
     // 5. weighted mixing (q83 semantics) + sharded export; flat 1-copy
     // mix when no weights are given
@@ -257,9 +257,11 @@ object MultimodalData {
           .withColumn("copy_no", explode(sequence(lit(1), col("n_copies"))))
           .drop("base_copies", "thr", "n_copies")
     }
-    val (exportPath, tExport) = timed(
-      ShardExport.write(mixed, "doc_id", outDir, nShards, maxRecordsPerFile))
-    val nMixed = spark.read.parquet(exportPath).count()
+    val (nMixed, tMixed) = timed {
+      val exportPath =
+        ShardExport.write(mixed, "doc_id", outDir, nShards, maxRecordsPerFile)
+      spark.read.parquet(exportPath).count()
+    }
 
     // run report: q143 token yield of the input corpus (the TrainingData
     // report contract — computed after the export, never contending)
@@ -272,20 +274,12 @@ object MultimodalData {
       ("validated", nValidated, tValidated),
       ("gated", nGated, tGated),
       ("ppl_gated", nPplGated, tPplGated),
-      ("media_ok", nMediaOk, tMediaOk),
+      ("media_ok", nMediaOk, tProfile + tMediaOk),
       ("canonical", nCanonical, tCanonical),
       ("decontaminated", nDecontaminated, tDecontaminated),
-      ("mixed_rows", nMixed, tExport),
+      ("mixed_rows", nMixed, tMixed),
     ).toDF("stage", "docs", "secs")
-    decontaminated.unpersist()
-    canonical.unpersist()
-    mediaOk.unpersist()
-    profileAll.unpersist()
-    pplGated.unpersist()
-    gated.unpersist()
-    validated.unpersist()
-    checked.unpersist()
-    input.unpersist()
     summary
+    } finally barrier.release()
   }
 }

@@ -118,8 +118,10 @@ object TrainingData {
     *                 training-data export, not silently shrink it
     * @return funnel summary (stage, docs, secs) — input, validated, gated,
     *         ppl_gated, clean, decontaminated, mixed rows, each with the wall-clock
-    *         of the stage's materializing action (the cached stage's one
-    *         count — each stage is counted exactly ONCE, at the moment it
+    *         of the whole stage: its construction (including any eager
+    *         work it does, such as the sketch build or the dedup
+    *         closure's checkpoint) plus the barrier's one count — each
+    *         stage is counted exactly ONCE, at the moment it
     *         materializes, and that number is reused in the summary; the
     *         pre-r10 shape recounted every cached stage in a second pass
     *         of six driver actions)
@@ -139,10 +141,10 @@ object TrainingData {
     require(decontam == "drop" || decontam == "scrub",
       s"decontam must be 'drop' or 'scrub', got '$decontam'")
     import spark.implicits._
-    // stage timer: wall-clock of the ONE action that materializes a
-    // cached stage — the per-stage scaling signal (NOTES.md, Round 10
-    // item 5: a stage whose secs stop tracking its input volume is the
-    // fixed bottleneck the funnel must not have)
+    // stage timer: wall-clock of a stage's construction and the ONE
+    // action that materializes it — the per-stage scaling signal
+    // (NOTES.md, Round 10 item 5: a stage whose secs stop tracking its
+    // input volume is the fixed bottleneck the funnel must not have)
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
       val r = f
@@ -160,39 +162,43 @@ object TrainingData {
     // single-threaded driver that sets Caching.DeferKey (Bench, perfbench)
     // gets deferred release at each stage action; otherwise composed
     // operators take the eager localCheckpoint path. Results are
-    // identical either way (lifecycle only).
+    // identical either way (lifecycle only). The funnel's own stages are
+    // Caching.Barriers: each later stage plans over a leaf of the cached
+    // rows, and every barrier is released in the finally, failure or not.
+    val barrier = new Caching.Barriers
     try {
-    val input = docs.cache()
-    val (nInput, tInput) = timed(input.count())
+    val ((nInput, input), tInput) = timed(barrier(docs))
 
     // -1. EXPECTATIONS GATE (the q98-certified deequ-style validation as
     // admission control): the structural rules every later stage depends
     // on are checked BEFORE any stage runs. Breaches either fail the run
     // (default — garbage in must not become training data out) or
     // quarantine for offline triage; either way no breaching row proceeds.
-    val checked = Scoring.expectationsChecked(input).cache()
-    val breached = checked.filter(!col("_expect_ok"))
-    val nBreached = breached.count()
-    if (nBreached > 0 && quarantineDir.isEmpty) {
-      checked.unpersist(); input.unpersist()
-      throw new IllegalStateException(
-        s"expectations breach: $nBreached rows (duplicate or null doc_id, " +
-          "null text, or inconsistent n_chars); pass quarantineDir to " +
-          "divert instead of failing")
+    val ((nValidated, validated), tValidated) = timed {
+      // `_expect_ok` is never null, so the two barrier counts give the
+      // breach count without a job of its own
+      val (nChecked, checked) = barrier(Scoring.expectationsChecked(input))
+      val (nOk, ok) = barrier(checked.filter(col("_expect_ok")).drop("_expect_ok"))
+      val nBreached = nChecked - nOk
+      if (nBreached > 0 && quarantineDir.isEmpty)
+        throw new IllegalStateException(
+          s"expectations breach: $nBreached rows (duplicate or null doc_id, " +
+            "null text, or inconsistent n_chars); pass quarantineDir to " +
+            "divert instead of failing")
+      // ALWAYS overwrite the quarantine dir when one is given — a clean run
+      // must clear a previous run's quarantined rows, or triage tooling
+      // reads stale breaches as this run's
+      quarantineDir.foreach(qd =>
+        checked.filter(!col("_expect_ok")).drop("_expect_ok")
+          .write.mode("overwrite").parquet(qd))
+      (nOk, ok)
     }
-    // ALWAYS overwrite the quarantine dir when one is given — a clean run
-    // must clear a previous run's quarantined rows, or triage tooling
-    // reads stale breaches as this run's
-    quarantineDir.foreach(qd =>
-      breached.drop("_expect_ok").write.mode("overwrite").parquet(qd))
-    val validated = checked.filter(col("_expect_ok")).drop("_expect_ok").cache()
-    val (nValidated, tValidated) = timed(validated.count())
 
     // 0. RULE GATE — the q97-certified Gopher-style heuristic filter as a
     // narrow predicate pass (TextOps.ruleGateKeep): no shuffle, runs ahead
     // of every shuffling stage so dedup/decontam never see gated docs
-    val gated = validated.filter(TextOps.ruleGateKeep(gate)).cache()
-    val (nGated, tGated) = timed(gated.count())
+    val ((nGated, gated), tGated) =
+      timed(barrier(validated.filter(TextOps.ruleGateKeep(gate))))
 
     // 0.5. CCNet PERPLEXITY GATE (q156's tercile discipline on the q147
     // bigram LM): score the rule-gated corpus, cut at percentile_disc(2/3)
@@ -200,27 +206,26 @@ object TrainingData {
     // worst-scoring third: word-salad the rule gate cannot see). Runs
     // BEFORE dedup so the expensive candidate generation never touches
     // tail docs; unscored (< 2 token) docs pass through the LEFT join
-    val pplGated =
-      (if (!pplGate) gated
-       else Scoring.pplGateKeep(gated, pplScores, pplSmoothing)).cache()
-    val (nPplGated, tPplGated) = timed(pplGated.count())
+    val ((nPplGated, pplGated), tPplGated) = timed(
+      if (!pplGate) (nGated, gated)
+      else barrier(Scoring.pplGateKeep(gated, pplScores, pplSmoothing)))
 
     // 1. quality gate + exact dedup + fuzzy canonicalization (q79).
-    // cache: the clean set feeds BOTH the funnel count and the
-    // decontamination scan — without the barrier the whole dedup candidate
+    // barrier: the clean set feeds BOTH the funnel count and the
+    // decontamination scan — without it the whole dedup candidate
     // generation (MinHash pairs + components) replays per consumer
-    val disposition =
-      Dedup.cleanCorpus(pplGated, Dedup.minhashPairsOf(pplGated), retentionScores)
-    val clean = pplGated.join(
-        disposition.filter(col("status") === "kept").select("doc_id"), Seq("doc_id"))
-      .cache()
-    val (nClean, tClean) = timed(clean.count())
+    val ((nClean, clean), tClean) = timed {
+      val disposition =
+        Dedup.cleanCorpus(pplGated, Dedup.minhashPairsOf(pplGated), retentionScores)
+      barrier(pplGated.join(
+        disposition.filter(col("status") === "kept").select("doc_id"), Seq("doc_id")))
+    }
 
     // 2. decontamination — drop: sketch the eval set's gram vocabulary,
     // probe the clean corpus map-side (q82's streaming-tier decision:
     // conservative, no false negatives); scrub: cut shared spans, keep
     // the doc (q175)
-    val decontaminated = (decontam match {
+    val ((nDecontaminated, decontaminated), tDecontaminated) = timed(barrier(decontam match {
       case "drop" =>
         val evalGrams = evalDocs
           .select(explode(TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
@@ -255,8 +260,7 @@ object TrainingData {
             .otherwise(length(col("text")).cast("long")))
           .drop("starts")
           .filter(col("text").isNotNull)
-    }).cache()
-    val (nDecontaminated, tDecontaminated) = timed(decontaminated.count())
+    }))
 
     // 3. weighted mixing (q83 semantics): deterministic per-doc multiplicity
     val h2 = substring(md5(col("doc_id").cast("string")), 1, 2)
@@ -269,10 +273,13 @@ object TrainingData {
         explode(sequence(lit(1), col("n_copies"))).as("copy_no"))
 
     // 4. shard export: copies of the same doc share a shard (assignment is
-    // by doc_id), files bounded, id-sorted
-    val (exportPath, tExport) = timed(
-      ShardExport.write(mixed, "doc_id", outDir, nShards, maxRecordsPerFile))
-    val nMixed = spark.read.parquet(exportPath).count()
+    // by doc_id), files bounded, id-sorted; the stage's count is a cheap
+    // parquet-footer read over what the export just wrote
+    val (nMixed, tMixed) = timed {
+      val exportPath =
+        ShardExport.write(mixed, "doc_id", outDir, nShards, maxRecordsPerFile)
+      spark.read.parquet(exportPath).count()
+    }
 
     // run report: token yield of the INPUT corpus through the certified
     // q143 cascade — what the funnel's document counts are worth in
@@ -297,19 +304,11 @@ object TrainingData {
       ("ppl_gated", nPplGated, tPplGated),
       ("clean", nClean, tClean),
       ("decontaminated", nDecontaminated, tDecontaminated),
-      // mixed_rows' secs = the mix+export action (the count is a cheap
-      // parquet-footer read over what the export just wrote)
-      ("mixed_rows", nMixed, tExport),
+      ("mixed_rows", nMixed, tMixed),
     ).toDF("stage", "docs", "secs")
-    decontaminated.unpersist()
-    clean.unpersist()
-    pplGated.unpersist()
-    gated.unpersist()
-    validated.unpersist()
-    checked.unpersist()
-    input.unpersist()
     summary
     } finally {
+      barrier.release()
       // release anything the report writers registered after the last
       // timed stage (a no-op in eager mode)
       Caching.releasePending()

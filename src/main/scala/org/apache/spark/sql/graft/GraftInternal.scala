@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset => ClassicDataset}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge into `private[sql]` Spark internals the public API does not
   * expose: constructing a DataFrame from a custom LogicalPlan. Lives in the
@@ -11,6 +12,17 @@ object GraftInternal {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `df`'s executed rows under a single `LogicalRDD` leaf, built the way
+    * `Dataset.checkpoint` builds its own: same output attributes, and the
+    * executed plan's partitioning, ordering and statistics, so the planner
+    * knows what it knew about `df`. No row conversion, no job, no
+    * checkpoint; over a cached `df` the leaf scans the cached blocks. */
+  def leafOf(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[ClassicDataFrame]
+    ClassicDataset.ofRows(ds.sparkSession,
+      LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false))
+  }
 
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[ClassicDataFrame].queryExecution.analyzed

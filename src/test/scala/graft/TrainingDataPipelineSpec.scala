@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.ops.Caching
 import graft.pipelines.TrainingData
 import graft.sources.ShardExport
 
@@ -331,5 +332,60 @@ class TrainingDataPipelineSpec extends AnyFunSuite {
       outDir2, quarantineDir = Some(qDir))
     assert(spark.read.parquet(qDir).count() == 0L,
       "clean run must clear the quarantine dir")
+  }
+
+  // 40 docs over 30 distinct texts, two sources: every doc passes the
+  // default gate and the clones give dedup something to drop
+  private def wordyDocs =
+    (0L until 40L).map(i =>
+        (i, s"document number ${i % 30} with some words the gate can count " * 8,
+          s"src${i % 2}"))
+      .toDF("doc_id", "text", "source")
+      .withColumn("n_chars", length(col("text")))
+
+  test("TrainingData.run: same answers eager or deferred, conf untouched") {
+    val docs = wordyDocs
+    val evalDocs = Seq((1000L, "held out eval sentence that matches nothing"))
+      .toDF("doc_id", "text")
+    val weights = Seq(("src0", 1L, "ff"), ("src1", 1L, "ff"))
+      .toDF("source", "base_copies", "thr")
+    // the caller picks the cache lifecycle; the run only reads DeferKey
+    def runWith(defer: Option[String]) = {
+      defer.foreach(spark.conf.set(Caching.DeferKey, _))
+      try {
+        val out = java.nio.file.Files.createTempDirectory("graft-tdp-defer").toString
+        val funnel = TrainingData.run(spark, docs, evalDocs,
+            weights, out, nShards = 2)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(spark.conf.getOption(Caching.DeferKey) == defer)
+        val rows = spark.read.parquet(graft.sources.ShardExport.resolve(spark, out))
+          .select("doc_id", "source", "text", "n_chars", "copy_no", "shard")
+          .collect().map(_.toSeq).toSet
+        (funnel, rows)
+      } finally spark.conf.unset(Caching.DeferKey)
+    }
+    assert(spark.conf.getOption(Caching.DeferKey).isEmpty)
+    val (eagerFunnel, eagerRows) = runWith(None)
+    val (deferFunnel, deferRows) = runWith(Some("true"))
+    assert(eagerFunnel("clean") < eagerFunnel("input"))
+    assert(deferFunnel == eagerFunnel)
+    assert(eagerRows.nonEmpty && deferRows == eagerRows)
+  }
+
+  test("a run that fails mid-funnel releases every stage barrier it cached") {
+    def cachedRdds = spark.sparkContext.getPersistentRDDs.values
+      .filterNot(_.isCheckpointed).map(_.id).toSet
+    // no text column: the run fails at decontamination, after the input,
+    // checked, validated, gated, ppl_gated and clean barriers are cached
+    val noTextEval = Seq(1000L).toDF("doc_id")
+    val before = cachedRdds
+    val ex = intercept[org.apache.spark.sql.AnalysisException] {
+      TrainingData.run(spark, wordyDocs, noTextEval,
+        TrainingData.flatWeights(spark, Seq("src0", "src1")),
+        java.nio.file.Files.createTempDirectory("graft-tdp-leak").toString,
+        nShards = 2)
+    }
+    assert(ex.getMessage.contains("text"), ex.getMessage)
+    assert(cachedRdds == before, s"leaked: ${cachedRdds -- before}")
   }
 }
