@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -416,18 +416,10 @@ object Scoring {
       bigramNllFrom(tfb, bg, vocab)
     }.orderBy(col("doc_id"))
 
-  /** The q147 bigram-LM scoring kernel over an arbitrary (doc_id, text)
-    * frame — fit + score in one composition, so a PIPELINE (TrainingData's
-    * ppl gate) can run the certified arithmetic on its own current corpus
-    * rather than the memoized documents-table artifact. Returns (doc_id,
-    * n_pairs, nll2); docs with < 2 tokens carry no row (nothing to
-    * score). Same scale shape as q147: ONE corpus pass into the
-    * map-side-combined (doc, a, b, tf) fold, Zipf²-sparse model tables,
-    * one broadcast vocab scalar. */
   /** THE bigram fold — the one definition of "tokenize, pair adjacent
     * tokens, count per doc" every bigram-LM consumer shares (r14 verdict
-    * #6: [[bigramNllOf]], [[knNllOf]], q163's split fold, and the
-    * streaming gate each restated it). Returns (doc_id, carry..., a, b,
+    * #6): [[bigramNllOf]], [[knNllOf]], q163's split fold, and the
+    * streaming model writer and scorer. Returns (doc_id, carry..., a, b,
     * tf) for docs with ≥ 2 tokens; `carry` columns (q163's source /
     * is_test) ride through the grouping unchanged. ONE corpus pass,
     * map-side combined — the (doc, a, b, tf) fold is what keeps every
@@ -467,6 +459,14 @@ object Scoring {
       .agg(count(lit(1)).as("tf"))
   }
 
+  /** The q147 bigram-LM scoring kernel over an arbitrary (doc_id, text)
+    * frame — fit + score in one composition, so a PIPELINE (TrainingData's
+    * ppl gate) can run the certified arithmetic on its own current corpus
+    * rather than the memoized documents-table artifact. Returns (doc_id,
+    * n_pairs, nll2); docs with < 2 tokens carry no row (nothing to
+    * score). Same scale shape as q147: ONE corpus pass into the
+    * map-side-combined (doc, a, b, tf) fold, Zipf²-sparse model tables,
+    * one broadcast vocab scalar. */
   private[graft] def bigramNllOf(docs: DataFrame): DataFrame = {
     val tfb = bigramFoldOf(docs).cache()
     val bg = tfb.groupBy(col("a"), col("b")).agg(sum(col("tf")).as("cab"))
@@ -571,9 +571,12 @@ object Scoring {
     * `smoothing` picks the scoring tier when no score table is given:
     * "add1" (q147, the default) or "kn" (q165's Kneser–Ney — the tier
     * the q168 ladder exists to justify; its nll_kn lands in the same
-    * nll2 slot so the cut/filter algebra is one code path). */
+    * nll2 slot so the cut/filter algebra is one code path). Any other
+    * name is rejected, so a typo cannot silently serve add-1. */
   def pplGateKeep(docs: DataFrame, scores: Option[DataFrame] = None,
       smoothing: String = "add1"): DataFrame = {
+    require(smoothing == "add1" || smoothing == "kn",
+      s"pplGateKeep smoothing must be one of add1, kn (got '$smoothing')")
     val sc = scores.getOrElse(smoothing match {
       case "kn" => knNllOf(docs).select(col("doc_id"), col("nll_kn").as("nll2"))
       case _    => bigramNllOf(docs)
@@ -957,22 +960,50 @@ object Scoring {
     Caching.materializeAndRelease(knNllFrom(tfb, bg), tfb, bg)
   }
 
+  /** Ney's discount estimate D = n1 / (n1 + 2·n2) as ONE aggregate over
+    * a model's count column (n1/n2 = types seen exactly once/twice) —
+    * the definition every KN order shares. greatest(...,1) guards the
+    * degenerate corpus with no once- or twice-seen type (D would be
+    * 0/0). */
+  private def neyDiscount(c: Column): Column =
+    sum(when(c === 1, 1L).otherwise(0L)).cast("double") /
+      greatest(sum(when(c === 1, 1L).otherwise(0L)) +
+        lit(2L) * sum(when(c === 2, 1L).otherwise(0L)), lit(1L))
+
+  /** The KN2 model tables over the rolled-up bigram table `bg` (a, b,
+    * cab) — the one build q165, q176, q206 and the streaming model
+    * layout ([[graft.streaming.Incremental.writePplModel]]) share:
+    *  - `ctx` (a, ca, n1a): context totals AND distinct-continuation
+    *    counts in ONE pass over bg;
+    *  - `pre` (b, n1pre): distinct left contexts per word;
+    *  - `disc` (dd, tt): the Ney discount + type total, one 1-row agg
+    *    callers broadcast (the q147 vocab-scalar shape). */
+  private[graft] def knModel(bg: DataFrame): (DataFrame, DataFrame, DataFrame) = (
+    bg.groupBy(col("a"))
+      .agg(sum(col("cab")).as("ca"), count(lit(1)).as("n1a")),
+    bg.groupBy(col("b")).agg(count(lit(1)).as("n1pre")),
+    bg.agg(neyDiscount(col("cab")).as("dd"),
+      count(lit(1)).cast("double").as("tt")))
+
+  /** [[knModel]] one order up, over the rolled-up trigram table `tg`
+    * (a, b, c, cabc): `ctx3` (a, b, cab2, n1ab) and the 1-row D3 scalar
+    * `disc3` (dd3; null on an empty trigram table). */
+  private[graft] def kn3Model(tg: DataFrame): (DataFrame, DataFrame) = (
+    tg.groupBy(col("a"), col("b"))
+      .agg(sum(col("cabc")).as("cab2"), count(lit(1)).as("n1ab")),
+    tg.agg(neyDiscount(col("cabc")).as("dd3")))
+
+  /** P_KN2(b|a) for an IN-MODEL pair — the q165 interpolated discount
+    * ((c(a,b) − D) + D·N1+(a,·)·Pcont(b)) / c(a,·), written once for
+    * the batch folds and both serving ladders. */
+  private def pKn2(cab: Column, ca: Column, n1a: Column,
+      n1pre: Column, dd: Column, tt: Column): Column =
+    ((cab - dd) + dd * n1a * (n1pre / tt)) / ca
+
   /** The q165 kernel over pre-built fold tables (the [[bigramNllFrom]]
     * convention; callers own the caching/release of `tfb`/`bg`). */
   private[graft] def knNllFrom(tfb: DataFrame, bg: DataFrame): DataFrame = {
-    // context totals AND distinct-continuation counts in ONE pass over bg
-    val ctx = bg.groupBy(col("a"))
-      .agg(sum(col("cab")).as("ca"), count(lit(1)).as("n1a"))
-    val pre = bg.groupBy(col("b")).agg(count(lit(1)).as("n1pre"))
-    // Ney discount + type total: one 1-row agg, broadcast (the q147
-    // vocab-scalar shape). greatest(...,1) guards the degenerate corpus
-    // with no once- or twice-seen bigram types (D would be 0/0)
-    val disc = bg.agg(
-      (sum(when(col("cab") === 1, 1L).otherwise(0L)).cast("double") /
-        greatest(sum(when(col("cab") === 1, 1L).otherwise(0L)) +
-          lit(2L) * sum(when(col("cab") === 2, 1L).otherwise(0L)), lit(1L)))
-        .as("dd"),
-      count(lit(1)).cast("double").as("tt"))
+    val (ctx, pre, disc) = knModel(bg)
     tfb
       .join(bg, Seq("a", "b"))
       .join(ctx, Seq("a"))
@@ -981,9 +1012,8 @@ object Scoring {
       .groupBy(col("doc_id"))
       .agg(sum(col("tf")).cast("long").as("n_pairs"),
         round(-sum(col("tf") *
-            log(((col("cab") - col("dd")) +
-              col("dd") * col("n1a") * (col("n1pre") / col("tt"))) /
-              col("ca"))) /
+            log(pKn2(col("cab"), col("ca"), col("n1a"), col("n1pre"),
+              col("dd"), col("tt")))) /
           sum(col("tf")), 4).as("nll_kn"))
       .orderBy(col("doc_id"))
   }
@@ -1054,32 +1084,16 @@ object Scoring {
     * own the caching/release — the [[bigramNllFrom]] convention). */
   private[graft] def kn3NllFrom(tfb: DataFrame, bg: DataFrame,
       tft: DataFrame, tg: DataFrame): DataFrame = {
-    val ctx = bg.groupBy(col("a"))
-      .agg(sum(col("cab")).as("ca"), count(lit(1)).as("n1a"))
-    val pre = bg.groupBy(col("b")).agg(count(lit(1)).as("n1pre"))
-    val disc = bg.agg(
-      (sum(when(col("cab") === 1, 1L).otherwise(0L)).cast("double") /
-        greatest(sum(when(col("cab") === 1, 1L).otherwise(0L)) +
-          lit(2L) * sum(when(col("cab") === 2, 1L).otherwise(0L)), lit(1L)))
-        .as("dd"),
-      count(lit(1)).cast("double").as("tt"))
-    // P_KN2(c|b) as a (b, c, p2) projection of the model tables — the
-    // q165 arithmetic order verbatim
+    val (ctx, pre, disc) = knModel(bg)
+    // P_KN2(c|b) as a (b, c, p2) projection of the model tables
     val p2 = bg.select(col("a").as("b"), col("b").as("c"), col("cab").as("cbc"))
       .join(ctx.select(col("a").as("b"), col("ca").as("cb"), col("n1a").as("n1b")), Seq("b"))
       .join(pre.select(col("b").as("c"), col("n1pre")), Seq("c"))
       .crossJoin(broadcast(disc))
       .select(col("b"), col("c"),
-        (((col("cbc") - col("dd")) +
-          col("dd") * col("n1b") * (col("n1pre") / col("tt"))) / col("cb")).as("p2"))
-    // trigram contexts + the D3 scalar
-    val ctx3 = tg.groupBy(col("a"), col("b"))
-      .agg(sum(col("cabc")).as("cab2"), count(lit(1)).as("n1ab"))
-    val disc3 = tg.agg(
-      (sum(when(col("cabc") === 1, 1L).otherwise(0L)).cast("double") /
-        greatest(sum(when(col("cabc") === 1, 1L).otherwise(0L)) +
-          lit(2L) * sum(when(col("cabc") === 2, 1L).otherwise(0L)), lit(1L)))
-        .as("dd3"))
+        pKn2(col("cbc"), col("cb"), col("n1b"), col("n1pre"), col("dd"),
+          col("tt")).as("p2"))
+    val (ctx3, disc3) = kn3Model(tg)
     tft
       .join(tg, Seq("a", "b", "c"))
       .join(ctx3, Seq("a", "b"))
@@ -1102,25 +1116,23 @@ object Scoring {
     * gate's `kn` tier (scalar model stats arrive as `lit`s) and q206's
     * held-out batch serve (they arrive as broadcast columns): one
     * definition, two bindings, so the ladders cannot drift. */
-  private[graft] def lnP2Expr(cab: org.apache.spark.sql.Column,
-      ca: org.apache.spark.sql.Column, n1a: org.apache.spark.sql.Column,
-      n1pre: org.apache.spark.sql.Column, dd: org.apache.spark.sql.Column,
-      tt: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    when(cab.isNotNull,
-      log(((cab - dd) + dd * n1a * (n1pre / tt)) / ca))
-      .otherwise(log((coalesce(cab, lit(0L)) + 1) /
-        (coalesce(ca, lit(0L)) + v)))
+  private[graft] def lnP2Expr(cab: Column, ca: Column, n1a: Column,
+      n1pre: Column, dd: Column, tt: Column, v: Column): Column =
+    when(cab.isNotNull, log(pKn2(cab, ca, n1a, n1pre, dd, tt)))
+      .otherwise(lnAdd1Expr(cab, ca, v))
+
+  /** The served add-1 rung: the q147 arithmetic with counts defaulting
+    * to 0 for an unseen pair or context (the q163 LEFT-join
+    * convention) — the streaming add1 tier and lnP2Expr's out-of-model
+    * fallback. */
+  private[graft] def lnAdd1Expr(cab: Column, ca: Column, v: Column): Column =
+    log((coalesce(cab, lit(0L)) + 1) / (coalesce(ca, lit(0L)) + v))
 
   /** P_KN2(c|b) for the order-3 ladder: the q165 arithmetic for
     * in-model (b, c), add-1 under it. */
-  private[graft] def p2vExpr(cbc: org.apache.spark.sql.Column,
-      cb: org.apache.spark.sql.Column, n1b: org.apache.spark.sql.Column,
-      n1pre: org.apache.spark.sql.Column, dd: org.apache.spark.sql.Column,
-      tt: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    when(cbc.isNotNull,
-      ((cbc - dd) + dd * n1b * (n1pre / tt)) / cb)
+  private[graft] def p2vExpr(cbc: Column, cb: Column, n1b: Column,
+      n1pre: Column, dd: Column, tt: Column, v: Column): Column =
+    when(cbc.isNotNull, pKn2(cbc, cb, n1b, n1pre, dd, tt))
       .otherwise((coalesce(cbc, lit(0L)) + 1) /
         (coalesce(cb, lit(0L)) + v))
 
@@ -1128,10 +1140,8 @@ object Scoring {
     * falling to the P_KN2 rung when the context is unseen OR the
     * interpolated numerator is exactly 0 (the dd3 = 0 totality guard —
     * never log(0)). */
-  private[graft] def lnP3Expr(cabc: org.apache.spark.sql.Column,
-      cab2: org.apache.spark.sql.Column, n1ab: org.apache.spark.sql.Column,
-      p2v: org.apache.spark.sql.Column, dd3: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
+  private[graft] def lnP3Expr(cabc: Column, cab2: Column, n1ab: Column,
+      p2v: Column, dd3: Column): Column = {
     val num3 = greatest(coalesce(cabc, lit(0L)).cast("double") - dd3,
       lit(0.0)) + dd3 * n1ab * p2v
     when(cab2.isNotNull && num3 > lit(0.0), log(num3 / cab2))
@@ -1182,38 +1192,23 @@ object Scoring {
       tfbT: DataFrame, tfbS: DataFrame, tftT: DataFrame, tftS: DataFrame,
       vocab: DataFrame): DataFrame = {
     val bg = tfbT.groupBy(col("a"), col("b")).agg(sum(col("tf")).as("cab")).cache()
-    val ctx = bg.groupBy(col("a"))
-      .agg(sum(col("cab")).as("ca"), count(lit(1)).as("n1a"))
-    val pre = bg.groupBy(col("b")).agg(count(lit(1)).as("n1pre"))
-    val disc = bg.agg(
-      (sum(when(col("cab") === 1, 1L).otherwise(0L)).cast("double") /
-        greatest(sum(when(col("cab") === 1, 1L).otherwise(0L)) +
-          lit(2L) * sum(when(col("cab") === 2, 1L).otherwise(0L)), lit(1L)))
-        .as("dd"),
-      count(lit(1)).cast("double").as("tt"))
+    val (ctx, pre, disc) = knModel(bg)
     val tg = tftT.groupBy(col("a"), col("b"), col("c"))
       .agg(sum(col("tf")).as("cabc")).cache()
-    val ctx3 = tg.groupBy(col("a"), col("b"))
-      .agg(sum(col("cabc")).as("cab2"), count(lit(1)).as("n1ab"))
-    val disc3 = tg.agg(
-      (sum(when(col("cabc") === 1, 1L).otherwise(0L)).cast("double") /
-        greatest(sum(when(col("cabc") === 1, 1L).otherwise(0L)) +
-          lit(2L) * sum(when(col("cabc") === 2, 1L).otherwise(0L)), lit(1L)))
-        .as("dd3"))
+    val (ctx3, disc3) = kn3Model(tg)
     // ---- KN2 serve over the test bigram fold (the joined-gate kn tier,
     // the [[lnP2Expr]] arithmetic with its in-model branch precomputed
     // ON THE MODEL TABLE — the kn3NllFrom p2-projection shape, r21: the
     // test fold crosses two joins instead of three, and the log runs
     // once per model row instead of once per test-fold row; the
-    // expression per row is lnP2Expr's verbatim, so values are identical)
+    // expression per row is lnP2Expr's [[pKn2]], so values are identical)
     val lnP2m = bg
       .join(ctx, Seq("a"))
       .join(pre, Seq("b"))
       .crossJoin(broadcast(disc))
       .select(col("a"), col("b"),
-        log(((col("cab") - col("dd")) +
-          col("dd") * col("n1a") * (col("n1pre") / col("tt"))) / col("ca"))
-          .as("lp2"))
+        log(pKn2(col("cab"), col("ca"), col("n1a"), col("n1pre"), col("dd"),
+          col("tt"))).as("lp2"))
     // out-of-model rung: add-1 under the test pair — cab null ⇒
     // numerator 1; ca from the context table alone (lnP2Expr's otherwise)
     val lnP2 = coalesce(col("lp2"),
@@ -1226,16 +1221,15 @@ object Scoring {
       .agg(round(-sum(col("tf") * lnP2) / sum(col("tf")), 4).as("nll_kn2h"))
     // ---- KN3 serve over the test trigram fold (the shared ladder, its
     // P2 rung likewise precomputed per model (b, c) pair — p2vExpr's
-    // in-model branch verbatim; the fallback branch still reads cb + v)
+    // in-model branch; the fallback branch still reads cb + v)
     val p2m = bg.select(col("a").as("b"), col("b").as("c"), col("cab").as("cbc"))
       .join(ctx.select(col("a").as("b"), col("ca").as("cb"), col("n1a").as("n1b")),
         Seq("b"))
       .join(pre.select(col("b").as("c"), col("n1pre")), Seq("c"))
       .crossJoin(broadcast(disc))
       .select(col("b"), col("c"),
-        (((col("cbc") - col("dd")) +
-          col("dd") * col("n1b") * (col("n1pre") / col("tt"))) / col("cb"))
-          .as("p2in"))
+        pKn2(col("cbc"), col("cb"), col("n1b"), col("n1pre"), col("dd"),
+          col("tt")).as("p2in"))
     val p2v = coalesce(col("p2in"),
       (lit(1L)) / (coalesce(col("cb"), lit(0L)) + col("v")))
     val lnP3 = lnP3Expr(col("cabc"), col("cab2"), col("n1ab"), p2v, col("dd3"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -604,88 +604,12 @@ object Incremental {
     q
   }
 
-  /** Continuous CCNet perplexity gate — maintainer #17, the q147/q156
-    * pair serving on the ingest: each incoming document scores under
-    * the FROZEN corpus bigram LM (the q147 arithmetic — add-1 over the
-    * corpus vocabulary, so unseen bigrams and unseen contexts degrade
-    * through the same smoothing the training corpus used) and buckets
-    * against the FROZEN corpus tercile cuts (q156's percentile_disc
-    * values). Emits (doc_id, n_pairs, nll2, bucket); docs with < 2
-    * tokens emit `unscored` with a null score — the gate never judges
-    * what it cannot score (the TrainingData.pplGate contract). A
-    * word-salad document — common words, impossible orders — lands in
-    * `tail` AT INGEST TIME, before it ever reaches a batch pipeline.
-    *
-    * Stateless narrow map over broadcast model tables: the observed
-    * bigram table is Zipf²-sparse (pairs actually seen, never V²) and
-    * the left-context totals are vocab-sized — both driver-collected
-    * and broadcast here (the DSIR frozen-model discipline). This is the
-    * SMALL-VOCAB FAST TIER only: the bigram type table grows
-    * superlinearly with corpus size, so at web scale the collect is a
-    * driver OOM — use [[writePplModel]] + [[continuousPplGateJoined]]
-    * (the stream-static-join tier, r14 verdict #3), which never moves
-    * the model through the driver and also serves the KN smoothing the
-    * q168 ladder certifies as the better signal. Batch parity: replaying
-    * the training corpus reproduces the q147 score table's rounded
-    * values exactly (StreamingSpec). */
-  def continuousPplGate(spark: SparkSession, inDir: String,
-      schema: org.apache.spark.sql.types.StructType, corpus: DataFrame,
-      outDir: String, checkpointDir: String): StreamingQuery = {
-    import spark.implicits._
-    val v = corpus
-      .select(explode(graft.functions.TextFns.tokens(col("text"))).as("w"))
-      .agg(count_distinct(col("w"))).head().getLong(0).toDouble
-    // the ONE bigram fold (r14 verdict #6) re-aggregated to corpus counts
-    val pairs = graft.ops.Scoring.bigramFoldOf(corpus)
-      .groupBy(col("a"), col("b")).agg(sum(col("tf")).as("cab"))
-      .cache()
-    val cabMap = pairs.as[(String, String, Long)].collect()
-      .map { case (a, b, c) => (a, b) -> c }.toMap
-    val caMap = pairs.groupBy(col("a")).agg(sum(col("cab")).as("ca"))
-      .as[(String, Long)].collect().toMap
-    pairs.unpersist()
-    val cuts = graft.ops.Scoring.bigramNllOf(corpus).agg(
-      expr("percentile_disc(0.33333333) WITHIN GROUP (ORDER BY nll2)"),
-      expr("percentile_disc(0.66666667) WITHIN GROUP (ORDER BY nll2)")).head()
-    require(!cuts.isNullAt(0),
-      "continuousPplGate needs a training corpus with at least one " +
-        "scorable (>= 2 token) document to place the tercile cuts")
-    val (c1, c2) = (cuts.getDouble(0), cuts.getDouble(1))
-    val bcCab = spark.sparkContext.broadcast(cabMap)
-    val bcCa = spark.sparkContext.broadcast(caMap)
-    runOnce(spark, inDir, schema, outDir, checkpointDir) { df =>
-      df.select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            val ts =
-              if (text == null) Array.empty[String]
-              else graft.functions.TextFns.normTextJvm(text)
-                .split(" ").filter(_.nonEmpty)
-            if (ts.length < 2) (id, 0L, None: Option[Double], "unscored")
-            else {
-              var s = 0.0
-              var i = 0
-              while (i < ts.length - 1) {
-                val cab = bcCab.value.getOrElse((ts(i), ts(i + 1)), 0L)
-                val ca = bcCa.value.getOrElse(ts(i), 0L)
-                s -= math.log((cab + 1).toDouble / (ca + v))
-                i += 1
-              }
-              val nll2 = BigDecimal(s / (ts.length - 1))
-                .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-              val bucket =
-                if (nll2 <= c1) "head" else if (nll2 <= c2) "middle" else "tail"
-              (id, (ts.length - 1).toLong, Some(nll2): Option[Double], bucket)
-            }
-          }
-        }.toDF("doc_id", "n_pairs", "nll2", "bucket")
-    }
-  }
-
-  /** Persist the FROZEN LM model layout the joined ppl-gate tier serves
+  /** Persist the FROZEN LM model layout the ppl-gate maintainers serve
     * from (r14 verdict #3 — the continuousMediaNearDup band discipline
     * applied to the language model). One corpus pass through the shared
-    * [[graft.ops.Scoring.bigramFoldOf]] kernel, then:
+    * [[graft.ops.Scoring.bigramFoldOf]] kernel, then the
+    * [[graft.ops.Scoring.knModel]] / [[graft.ops.Scoring.kn3Model]]
+    * tables the batch KN queries fit:
     *
     *   bigrams/abkt=K/       (a, b, cab)   — hash-bucketed by LEFT token
     *   contexts/abkt=K/      (a, ca, n1a)  — same bucketing
@@ -710,16 +634,12 @@ object Incremental {
     import graft.ops.Scoring
     val tfb = Scoring.bigramFoldOf(corpus).cache()
     val bg = tfb.groupBy(col("a"), col("b")).agg(sum(col("tf")).as("cab")).cache()
+    val (ctx, pre, discDf) = Scoring.knModel(bg)
     val vocab = corpus
       .select(explode(graft.functions.TextFns.tokens(col("text"))).as("w"))
       .agg(count_distinct(col("w")).cast("double").as("v"))
     val v = vocab.head().getDouble(0)
-    val disc = bg.agg(
-      (sum(when(col("cab") === 1, 1L).otherwise(0L)).cast("double") /
-        greatest(sum(when(col("cab") === 1, 1L).otherwise(0L)) +
-          lit(2L) * sum(when(col("cab") === 2, 1L).otherwise(0L)), lit(1L)))
-        .as("dd"),
-      count(lit(1)).cast("double").as("tt")).head()
+    val disc = discDf.head()
     // the cuts run through the *From kernels over the SAME cached
     // tfb/bg/tft/tg the model tables write from — one corpus tokenize
     // pass per order instead of one per scoring tier (r15 ADVICE)
@@ -735,12 +655,9 @@ object Incremental {
     val abkt = pmod(xxhash64(col("a")), lit(nBuckets.toLong)).as("abkt")
     bg.select(col("a"), col("b"), col("cab"), abkt)
       .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/bigrams")
-    bg.groupBy(col("a"))
-      .agg(sum(col("cab")).as("ca"), count(lit(1)).as("n1a"))
-      .select(col("a"), col("ca"), col("n1a"), abkt)
+    ctx.select(col("a"), col("ca"), col("n1a"), abkt)
       .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/contexts")
-    bg.groupBy(col("b")).agg(count(lit(1)).as("n1pre"))
-      .select(col("b"), col("n1pre"),
+    pre.select(col("b"), col("n1pre"),
         pmod(xxhash64(col("b")), lit(nBuckets.toLong)).as("bbkt"))
       .write.mode("overwrite").partitionBy("bbkt")
       .parquet(s"$modelDir/continuations")
@@ -751,16 +668,11 @@ object Incremental {
     val tft = Scoring.trigramFoldOf(corpus).cache()
     val tg = tft.groupBy(col("a"), col("b"), col("c"))
       .agg(sum(col("tf")).as("cabc")).cache()
-    val disc3 = tg.agg(
-      (sum(when(col("cabc") === 1, 1L).otherwise(0L)).cast("double") /
-        greatest(sum(when(col("cabc") === 1, 1L).otherwise(0L)) +
-          lit(2L) * sum(when(col("cabc") === 2, 1L).otherwise(0L)), lit(1L)))
-        .as("dd3")).head()
+    val (ctx3, disc3Df) = Scoring.kn3Model(tg)
+    val disc3 = disc3Df.head()
     tg.select(col("a"), col("b"), col("c"), col("cabc"), abkt)
       .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/trigrams")
-    tg.groupBy(col("a"), col("b"))
-      .agg(sum(col("cabc")).as("cab2"), count(lit(1)).as("n1ab"))
-      .select(col("a"), col("b"), col("cab2"), col("n1ab"), abkt)
+    ctx3.select(col("a"), col("b"), col("cab2"), col("n1ab"), abkt)
       .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/contexts3")
     val cutsK3 = Scoring.kn3NllFrom(tfb, bg, tft, tg).agg(
       expr("percentile_disc(0.33333333) WITHIN GROUP (ORDER BY nll_kn3)"),
@@ -783,153 +695,154 @@ object Incremental {
     ()
   }
 
-  /** Continuous CCNet perplexity gate, STREAM-STATIC-JOIN TIER — the
-    * scale path [[continuousPplGate]]'s scaladoc prescribed and r14's
-    * verdict required built: the frozen model lives in the
-    * [[writePplModel]] bucketed parquet layout and each micro-batch's
-    * bigrams JOIN it — the model never transits the driver, so a
-    * web-scale (corpus-superlinear) bigram table costs executor scans,
-    * not a driver OOM. Per batch: the shared
-    * [[graft.ops.Scoring.bigramFoldOf]] fold (map-side combined), the
-    * touched-bucket set (≤ nbkt integers — the only collect in the
-    * path), partition-pruned scans of just those buckets, three
-    * equi-joins, one per-doc agg. AQE broadcasts the batch side when it
-    * is small — the model side is never broadcast.
+  /** A [[writePplModel]] layout loaded for serving at one smoothing tier
+    * — the ONE per-batch scorer every streaming ppl gate runs (the
+    * joined gate's three tiers, the gate-agreement monitor's add-1 leg).
+    * Construction reads the 1-row meta on the driver and fails fast on an
+    * unknown tier, so a typo never serves the wrong model. Each batch
+    * folds through the shared [[graft.ops.Scoring]] kernels, collects its
+    * touched-bucket sets (≤ nbkt integers — the only collect in the
+    * path) and LEFT-joins partition-pruned scans of just those buckets:
+    * the model never transits the driver, and AQE broadcasts the batch
+    * side when it is small — the model side is never broadcast.
     *
-    * `smoothing` serves either certified tier (r14 verdict #4):
     *  - "add1": the q147 arithmetic — unseen pairs/contexts degrade
     *    through (c+1)/(c_a+V) with counts defaulting 0 (the q163
     *    LEFT-join convention; batch-parity with q147's rounded scores).
+    *    Joins bigrams + contexts.
     *  - "kn": the q165 Kneser–Ney fold for IN-MODEL pairs — verbatim
     *    ((c−D) + D·N1+(a,·)·Pcont(b)) / c(a,·), so replaying the fit
     *    corpus reproduces q165's rounded scores exactly; a pair the
     *    model never saw has no continuation mass to interpolate, so
     *    out-of-model pairs fall back to the add-1 tier's smoothing —
     *    total, positive, and documented rather than a log(0) surprise.
+    *    Adds the continuations join.
     *  - "kn3": the q176 trigram fold for in-model trigrams (replaying
     *    the fit corpus reproduces q176's rounded scores exactly), with
     *    the documented degradation ladder below it: unseen trigram
     *    under a seen context → continuation term only; unseen context
-    *    → P_KN2(c|b) alone; unseen bigram inside P2 → add-1. The batch
-    *    side folds to TRIGRAMS and the static side adds the
-    *    trigrams/contexts3 tables plus the bigram tables reprojected
-    *    onto (b, c) — same touched-bucket pruning, three bucket sets.
+    *    → P_KN2(c|b) alone (the dd3 = 0 totality guard included);
+    *    unseen bigram inside P2 → add-1. The batch folds to TRIGRAMS and
+    *    the static side adds the trigrams/contexts3 tables plus the
+    *    bigram tables reprojected onto (b, c) — three bucket sets. A
+    *    model fit on a corpus with no ≥ 3-token document has null kn3
+    *    cuts and refuses this tier at construction. */
+  private final class ServedPplModel(spark: SparkSession, modelDir: String,
+      smoothing: String) {
+    import spark.implicits._
+    import graft.ops.Scoring
+    require(Seq("add1", "kn", "kn3").contains(smoothing),
+      s"smoothing must be one of add1, kn, kn3 (got '$smoothing')")
+    private val meta = spark.read.parquet(s"$modelDir/meta").head()
+    require(smoothing != "kn3" || !meta.isNullAt(meta.fieldIndex("c1_kn3")),
+      "smoothing=kn3 needs a model fit on a corpus with at least one " +
+        ">= 3-token document (the kn3 cuts are null)")
+    /** The tier's q156 tercile cuts. */
+    val c1: Double = meta.getAs[Double](s"c1_$smoothing")
+    val c2: Double = meta.getAs[Double](s"c2_$smoothing")
+    private val nbkt = meta.getAs[Long]("nbkt")
+    private def stat(k: String): Column = lit(meta.getAs[Double](k))
+    private val (v, dd, tt, dd3) = (stat("v"), stat("dd"), stat("tt"), stat("dd3"))
+    // lazy: a trigram-free model has no readable trigram tables, and the
+    // order-2 tiers never touch them
+    private lazy val bigrams = spark.read.parquet(s"$modelDir/bigrams")
+    private lazy val contexts = spark.read.parquet(s"$modelDir/contexts")
+    private lazy val continuations = spark.read.parquet(s"$modelDir/continuations")
+    private lazy val trigrams = spark.read.parquet(s"$modelDir/trigrams")
+    private lazy val contexts3 = spark.read.parquet(s"$modelDir/contexts3")
+
+    /** `bkt` ∈ the buckets `fold`'s token column `c` touches. */
+    private def touched(fold: DataFrame, c: String, bkt: String): Column =
+      col(bkt).isin(fold.select(pmod(xxhash64(col(c)), lit(nbkt)))
+        .distinct().as[Long].collect(): _*)
+
+    /** Scores one micro-batch `b` (doc_id, text): (doc_id, n_pairs, nll2)
+      * for every doc long enough for the tier's order, plus the cached
+      * fold the caller unpersists after its write. */
+    def score(b: DataFrame): (DataFrame, DataFrame) = {
+      val (fold, served, lnP) = if (smoothing == "kn3") {
+        val tft = Scoring.trigramFoldOf(b).cache()
+        val inA = touched(tft, "a", "abkt")
+        val inB = touched(tft, "b", "abkt")
+        val p2v = Scoring.p2vExpr(col("cbc"), col("cb"), col("n1b"),
+          col("n1pre"), dd, tt, v)
+        (tft, tft
+          .join(trigrams.filter(inA)
+            .select(col("a"), col("b"), col("c"), col("cabc")),
+            Seq("a", "b", "c"), "left")
+          .join(contexts3.filter(inA)
+            .select(col("a"), col("b"), col("cab2"), col("n1ab")),
+            Seq("a", "b"), "left")
+          .join(bigrams.filter(inB)
+            .select(col("a").as("b"), col("b").as("c"), col("cab").as("cbc")),
+            Seq("b", "c"), "left")
+          .join(contexts.filter(inB)
+            .select(col("a").as("b"), col("ca").as("cb"), col("n1a").as("n1b")),
+            Seq("b"), "left")
+          .join(continuations.filter(touched(tft, "c", "bbkt"))
+            .select(col("b").as("c"), col("n1pre")), Seq("c"), "left"),
+          Scoring.lnP3Expr(col("cabc"), col("cab2"), col("n1ab"), p2v, dd3))
+      } else {
+        val tfb = Scoring.bigramFoldOf(b).cache()
+        val inA = touched(tfb, "a", "abkt")
+        val withCtx = tfb
+          .join(bigrams.filter(inA).select(col("a"), col("b"), col("cab")),
+            Seq("a", "b"), "left")
+          .join(contexts.filter(inA).select(col("a"), col("ca"), col("n1a")),
+            Seq("a"), "left")
+        if (smoothing == "add1")
+          (tfb, withCtx, Scoring.lnAdd1Expr(col("cab"), col("ca"), v))
+        else (tfb,
+          withCtx.join(continuations.filter(touched(tfb, "b", "bbkt"))
+            .select(col("b"), col("n1pre")), Seq("b"), "left"),
+          Scoring.lnP2Expr(col("cab"), col("ca"), col("n1a"), col("n1pre"),
+            dd, tt, v))
+      }
+      (served.groupBy(col("doc_id"))
+        .agg(sum(col("tf")).cast("long").as("n_pairs"),
+          round(-sum(col("tf") * lnP) / sum(col("tf")), 4).as("nll2")),
+        fold)
+    }
+  }
+
+  /** Continuous CCNet perplexity gate — maintainer #17, the q147/q156
+    * pair (and its q165/q176 Kneser–Ney tiers) serving on the ingest:
+    * each incoming document scores under the FROZEN corpus LM that
+    * [[writePplModel]] laid out in bucketed parquet, through the
+    * stream-static join of [[ServedPplModel]] — a web-scale
+    * (corpus-superlinear) bigram table costs executor scans, never a
+    * driver collect. `smoothing` picks the certified tier: "add1"
+    * (q147), "kn" (q165) or "kn3" (q176); any other name is rejected.
     *
-    * Buckets against the meta cuts of the chosen tier; < 2-token docs
-    * emit `unscored` (the gate never judges what it cannot score).
-    * Output schema matches the broadcast tier: (doc_id, n_pairs, nll2,
-    * bucket). foreachBatch residue class of [[continuousSemanticDedup]]:
-    * a crash between the append and the checkpoint can duplicate one
-    * batch's rows on replay. */
+    * Buckets against the meta cuts of the chosen tier (q156's
+    * percentile_disc values). Emits (doc_id, n_pairs, nll2, bucket);
+    * docs too short for the tier's order emit `unscored` with a null
+    * score — the gate never judges what it cannot score (the
+    * TrainingData.pplGate contract). A word-salad document — common
+    * words, impossible orders — lands in `tail` AT INGEST TIME, before
+    * it ever reaches a batch pipeline. Batch parity: replaying the
+    * training corpus reproduces the q147/q165/q176 score tables'
+    * rounded values exactly (StreamingSpec). foreachBatch residue class
+    * of [[continuousSemanticDedup]]: a crash between the append and the
+    * checkpoint can duplicate one batch's rows on replay. */
   def continuousPplGateJoined(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, modelDir: String,
       outDir: String, checkpointDir: String,
       smoothing: String = "add1"): StreamingQuery = {
-    import spark.implicits._
-    val meta = spark.read.parquet(s"$modelDir/meta").head()
-    val v = meta.getAs[Double]("v")
-    val dd = meta.getAs[Double]("dd")
-    val tt = meta.getAs[Double]("tt")
-    val nbkt = meta.getAs[Long]("nbkt")
-    val (c1, c2) = smoothing match {
-      case "kn3" =>
-        require(!meta.isNullAt(meta.fieldIndex("c1_kn3")),
-          "smoothing=kn3 needs a model fit on a corpus with at least one " +
-            ">= 3-token document (the kn3 cuts are null)")
-        (meta.getAs[Double]("c1_kn3"), meta.getAs[Double]("c2_kn3"))
-      case "kn" => (meta.getAs[Double]("c1_kn"), meta.getAs[Double]("c2_kn"))
-      case _    => (meta.getAs[Double]("c1_add1"), meta.getAs[Double]("c2_add1"))
-    }
-    val dd3 = meta.getAs[Double]("dd3")
-    val bg = spark.read.parquet(s"$modelDir/bigrams")
-    val ctx = spark.read.parquet(s"$modelDir/contexts")
-    val pre = spark.read.parquet(s"$modelDir/continuations")
-    lazy val tg3 = spark.read.parquet(s"$modelDir/trigrams")
-    lazy val ctx3 = spark.read.parquet(s"$modelDir/contexts3")
+    val model = new ServedPplModel(spark, modelDir, smoothing)
     val q = spark.readStream.schema(schema).parquet(inDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val b = batch.select(col("doc_id"), col("text")).cache()
-        val (scores, fold) = if (smoothing == "kn3") {
-          // ORDER-3 SERVE (the q176 model): the batch folds to trigrams;
-          // the static side adds the trigram tables AND the bigram tables
-          // (the latter reproject onto (b, c) for the interpolated
-          // P_KN2(c|b) leg). Degradation ladder, total and documented:
-          // in-model trigram -> the q176 fold verbatim; unseen trigram
-          // under a seen context -> only the continuation term; unseen
-          // context -> P_KN2 alone; unseen bigram inside P2 -> the add-1
-          // tier. Docs with < 3 tokens have no trigram to score and emit
-          // unscored (the < 2-token convention one order up).
-          val tft = graft.ops.Scoring.trigramFoldOf(b)
-            .withColumn("abkt", pmod(xxhash64(col("a")), lit(nbkt)))
-            .withColumn("bbkt", pmod(xxhash64(col("b")), lit(nbkt)))
-            .withColumn("cbkt", pmod(xxhash64(col("c")), lit(nbkt)))
-            .cache()
-          val aB = tft.select(col("abkt")).distinct().as[Long].collect()
-          val bB = tft.select(col("bbkt")).distinct().as[Long].collect()
-          val cB = tft.select(col("cbkt")).distinct().as[Long].collect()
-          // P_KN2(c|b) from the bigram layout: left-token buckets of b,
-          // continuation buckets of c (the shared ladder rung, frozen
-          // model stats bound as literals)
-          val p2v = graft.ops.Scoring.p2vExpr(col("cbc"), col("cb"),
-            col("n1b"), col("n1pre"), lit(dd), lit(tt), lit(v))
-          // the shared order-3 rung, dd3 = 0 totality guard included
-          // (r15 ADVICE) — ONE definition with q206's batch serve
-          val lnP3 = graft.ops.Scoring.lnP3Expr(col("cabc"), col("cab2"),
-            col("n1ab"), p2v, lit(dd3))
-          val out = tft
-            .join(tg3.filter(col("abkt").isin(aB: _*))
-              .select(col("a"), col("b"), col("c"), col("cabc")),
-              Seq("a", "b", "c"), "left")
-            .join(ctx3.filter(col("abkt").isin(aB: _*))
-              .select(col("a"), col("b"), col("cab2"), col("n1ab")),
-              Seq("a", "b"), "left")
-            .join(bg.filter(col("abkt").isin(bB: _*))
-              .select(col("a").as("b"), col("b").as("c"), col("cab").as("cbc")),
-              Seq("b", "c"), "left")
-            .join(ctx.filter(col("abkt").isin(bB: _*))
-              .select(col("a").as("b"), col("ca").as("cb"), col("n1a").as("n1b")),
-              Seq("b"), "left")
-            .join(pre.filter(col("bbkt").isin(cB: _*))
-              .select(col("b").as("c"), col("n1pre")), Seq("c"), "left")
-            .groupBy(col("doc_id"))
-            .agg(sum(col("tf")).cast("long").as("n_pairs"),
-              round(-sum(col("tf") * lnP3) / sum(col("tf")), 4).as("nll2"))
-          (out, tft)
-        } else {
-        val tfb = graft.ops.Scoring.bigramFoldOf(b)
-          .withColumn("abkt", pmod(xxhash64(col("a")), lit(nbkt)))
-          .withColumn("bbkt", pmod(xxhash64(col("b")), lit(nbkt)))
-          .cache()
-        // the touched-bucket sets: bounded by nbkt, never by the model
-        val aB = tfb.select(col("abkt")).distinct().as[Long].collect()
-        val bB = tfb.select(col("bbkt")).distinct().as[Long].collect()
-        val lnP = smoothing match {
-          case "kn" => graft.ops.Scoring.lnP2Expr(col("cab"), col("ca"),
-            col("n1a"), col("n1pre"), lit(dd), lit(tt), lit(v))
-          case _ => log((coalesce(col("cab"), lit(0L)) + 1) /
-            (coalesce(col("ca"), lit(0L)) + lit(v)))
-        }
-        val out = tfb
-          .join(bg.filter(col("abkt").isin(aB: _*))
-            .select(col("a"), col("b"), col("cab")), Seq("a", "b"), "left")
-          .join(ctx.filter(col("abkt").isin(aB: _*))
-            .select(col("a"), col("ca"), col("n1a")), Seq("a"), "left")
-          .join(pre.filter(col("bbkt").isin(bB: _*))
-            .select(col("b"), col("n1pre")), Seq("b"), "left")
-          .groupBy(col("doc_id"))
-          .agg(sum(col("tf")).cast("long").as("n_pairs"),
-            round(-sum(col("tf") * lnP) / sum(col("tf")), 4).as("nll2"))
-        (out, tfb)
-        }
+        val (scores, fold) = model.score(b)
         b.select(col("doc_id"))
           .join(scores, Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
             col("nll2"),
             when(col("nll2").isNull, "unscored")
-              .when(col("nll2") <= lit(c1), "head")
-              .when(col("nll2") <= lit(c2), "middle")
+              .when(col("nll2") <= lit(model.c1), "head")
+              .when(col("nll2") <= lit(model.c2), "middle")
               .otherwise("tail").as("bucket"))
           .write.mode("append").parquet(outDir)
         fold.unpersist(); b.unpersist()
@@ -1122,8 +1035,8 @@ object Incremental {
     * table on the ingest path: each micro-batch flags every doc under
     * the three FROZEN gates (the q97 rule predicate — stateless; the
     * q101 margin from an explicit frozen weights row; the add-1 ppl
-    * tercile against [[writePplModel]]'s c2_add1 cut, scored through
-    * the stream-static join with touched-bucket pruning) and APPENDS
+    * tercile against [[writePplModel]]'s c2_add1 cut, scored by the
+    * joined gate's add-1 tier, [[ServedPplModel]]) and APPENDS
     * its 1-row count partial (n, keeps, pairwise agreements).
     * [[gateAgreementReport]] folds the log into q185's 3-row κ table on
     * demand. The drift alarm this buys: gates that agreed at
@@ -1137,46 +1050,28 @@ object Incremental {
   def continuousGateAgreement(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, pplModelDir: String,
       weights: DataFrame, outDir: String, checkpointDir: String): StreamingQuery = {
-    import spark.implicits._
-    val meta = spark.read.parquet(s"$pplModelDir/meta").head()
-    val v = meta.getAs[Double]("v")
-    val nbkt = meta.getAs[Long]("nbkt")
-    val c2 = meta.getAs[Double]("c2_add1")
-    val bg = spark.read.parquet(s"$pplModelDir/bigrams")
-    val ctx = spark.read.parquet(s"$pplModelDir/contexts")
+    val model = new ServedPplModel(spark, pplModelDir, "add1")
     val wRow = weights.head()
     val q = spark.readStream.schema(schema).parquet(inDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.select(col("doc_id"), col("text")).cache()
         // add-1 scores through the frozen model (the joined gate's add1
-        // leg): in-model pairs replay the q147 fold, unseen pairs take
+        // tier): in-model pairs replay the q147 fold, unseen pairs take
         // the smoothed floor
-        val tfb = graft.ops.Scoring.bigramFoldOf(b)
-          .withColumn("abkt", pmod(xxhash64(col("a")), lit(nbkt)))
-          .cache()
-        val aB = tfb.select(col("abkt")).distinct().as[Long].collect()
-        val lnP = log((coalesce(col("cab"), lit(0L)) + 1) /
-          (coalesce(col("ca"), lit(0L)) + lit(v)))
-        val scores = tfb
-          .join(bg.filter(col("abkt").isin(aB: _*))
-            .select(col("a"), col("b"), col("cab")), Seq("a", "b"), "left")
-          .join(ctx.filter(col("abkt").isin(aB: _*))
-            .select(col("a"), col("ca")), Seq("a"), "left")
-          .groupBy(col("doc_id"))
-          .agg(round(-sum(col("tf") * lnP) / sum(col("tf")), 4).as("nll2"))
+        val (scores, fold) = model.score(b)
         val flags = b
           .join(scores, Seq("doc_id"), "left")
           .select(
             graft.ops.TextOps.ruleGateKeep().cast("long").as("rule"),
             (graft.ops.Curation.marginFromWeights(wRow) > 0)
               .cast("long").as("clf"),
-            (col("nll2").isNull || col("nll2") <= lit(c2))
+            (col("nll2").isNull || col("nll2") <= lit(model.c2))
               .cast("long").as("ppl"))
         graft.ops.Scoring.gateCountsOf(flags)
           .withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(outDir)
-        tfb.unpersist(); b.unpersist()
+        fold.unpersist(); b.unpersist()
         ()
       }
       .option("checkpointLocation", checkpointDir)
@@ -1369,7 +1264,7 @@ object Incremental {
           .groupBy(col("source"), col("term"))
           .agg(count(lit(1)).as("n"))
           .withColumn("tbkt", pmod(
-            xxhash64(concat_ws(" ", col("source"), col("term"))),
+            xxhash64(concat_ws("\u0000", col("source"), col("term"))),
             lit(nBuckets.toLong)))
           .cache()
         val nTok = toks.groupBy(col("source"))

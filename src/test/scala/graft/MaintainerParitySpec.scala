@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * REFLECTS over Incremental's public `continuous*` methods and fails
   * unless each one is mapped here to (its batch twin, the StreamingSpec
   * test that asserts the parity), AND each referenced test actually
-  * exists in StreamingSpec. A 23rd maintainer added without a parity
+  * exists in StreamingSpec. A new maintainer added without a parity
   * test fails this suite by name; a renamed/deleted parity test fails
   * it from the other side.
   */
@@ -39,8 +39,6 @@ class MaintainerParitySpec extends AnyFunSuite {
       "doc-embed refresh cadence: vocab shift degrades coverage")),
     "continuousCrossModalDedup" -> (("ops.Multimodal.crossModalNearKeepOf (q144)",
       "continuous cross-modal dedup admits on joint")),
-    "continuousPplGate" -> (("ops.Scoring.bigramNllOf (q147)",
-      "continuous ppl gate scores the q147 arithmetic")),
     "continuousPplGateJoined" -> (("ops.Scoring bigram/KN/KN3 folds (q147/q165/q176)",
       "joined ppl gate: stream-static join reproduces q147 AND q165")),
     "continuousDecontamScrub" -> (("ops.Dedup span scrub (q175)",

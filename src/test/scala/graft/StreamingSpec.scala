@@ -472,47 +472,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(phd).count() == 1L, "one hash row per mediated survivor")
   }
 
-  test("continuous ppl gate scores the q147 arithmetic and buckets word-salad to tail") {
-    val base = Files.createTempDirectory("graft-pplgate").toString
-    val in = s"$base/in"; val out = s"$base/out"; val ck = s"$base/ck"
-    new java.io.File(in).mkdirs()
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    // training corpus: a repeated phrase structure (its bigrams recur)
-    val corpus = (0 until 30).map { i =>
-      (i.toLong, s"alpha beta gamma delta alpha beta gamma delta tag$i")
-    }.toDF("doc_id", "text").cache()
-
-    // batch reference: the q147 kernel + q156 cuts on the same corpus
-    val ref = graft.ops.Scoring.bigramNllOf(corpus)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-
-    // ingest: the corpus replayed (parity rows), one fluent doc, one
-    // word-salad doc of the SAME vocabulary in impossible orders, one
-    // unscorable
-    corpus.write.parquet(s"$in/b1")
-    Seq((100L, "alpha beta gamma delta"),
-      (101L, "delta alpha gamma beta delta gamma alpha"),
-      (102L, "solo")).toDF("doc_id", "text").write.parquet(s"$in/b2")
-    Incremental.continuousPplGate(spark, s"$in/*", docSchema, corpus, out, ck)
-
-    val got = spark.read.parquet(out).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)), r.getString(3)))).toMap
-    // parity: the streamed corpus rows carry the batch kernel's exact
-    // rounded scores
-    ref.foreach { case (id, (nPairs, nll2)) =>
-      assert(got(id)._1 == nPairs && got(id)._2.contains(nll2),
-        s"doc $id: stream ${got(id)} != batch ($nPairs, $nll2)")
-    }
-    // the live gate: fluent = in-distribution bigrams -> not tail;
-    // salad = same words, unseen orders -> tail; short doc -> unscored
-    assert(got(100L)._3 != "tail", s"fluent doc must not gate out: ${got(100L)}")
-    assert(got(101L)._3 == "tail", s"word-salad must land in tail: ${got(101L)}")
-    assert(got(102L)._3 == "unscored" && got(102L)._2.isEmpty, got(102L).toString)
-    corpus.unpersist()
-  }
-
   test("joined ppl gate: stream-static join reproduces q147 AND q165 rounded scores (r14 #3/#4)") {
     val base = Files.createTempDirectory("graft-pplgate-joined").toString
     val in = s"$base/in"; val model = s"$base/model"
@@ -658,6 +617,25 @@ class StreamingSpec extends AnyFunSuite {
     val nll = r(0).getDouble(2)
     assert(!nll.isNaN && !nll.isInfinite && nll > 0.0,
       s"dd3=0 out-of-model trigram must walk the ladder, got $nll")
+  }
+
+  test("joined ppl gate rejects an unknown smoothing tier before the stream starts") {
+    val base = Files.createTempDirectory("graft-ppl-tier").toString
+    val in = s"$base/in"; val model = s"$base/model"; val out = s"$base/out"
+    new java.io.File(in).mkdirs()
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    val corpus = Seq((0L, "alpha beta gamma"), (1L, "beta gamma delta"))
+      .toDF("doc_id", "text")
+    Incremental.writePplModel(spark, corpus, model, nBuckets = 2)
+    corpus.write.parquet(s"$in/b1")
+    // a case typo must not fall through to the add-1 tier
+    val ex = intercept[IllegalArgumentException] {
+      Incremental.continuousPplGateJoined(
+        spark, s"$in/*", docSchema, model, out, s"$base/ck", smoothing = "KN")
+    }
+    assert(ex.getMessage.contains("add1, kn, kn3"), ex.getMessage)
+    assert(!new java.io.File(out).exists(), "no batch may be served")
   }
 
   test("diversity monitor: streamed partial sums fold to the q184 report (maintainer #20)") {

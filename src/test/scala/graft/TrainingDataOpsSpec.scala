@@ -465,6 +465,16 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("ppl gate rejects an unknown smoothing tier instead of serving add-1") {
+    val docs = spark.createDataFrame(Seq((1L, "alpha beta gamma")))
+      .toDF("doc_id", "text")
+    // a case typo must not fall through to the add-1 tier
+    val ex = intercept[IllegalArgumentException] {
+      ops.Scoring.pplGateKeep(docs, smoothing = "KN")
+    }
+    assert(ex.getMessage.contains("add1, kn"), ex.getMessage)
+  }
+
   test("q142: calibration bins rank the gate label (low bins fail, high bins pass)") {
     val rows = ops.Curation.q142ClassifierCalibration(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
