@@ -35,7 +35,10 @@ import org.apache.spark.sql.graft.GraftInternal
   * over its cached rows, and the driver releases every stage together in
   * its `finally`. Use [[materializeAndRelease]] inside a builder whose
   * caller owns the action; use [[Barriers]] where the same code owns the
-  * action, the count and the end of the run.
+  * action, the count and the end of the run. Its `hold` is the same
+  * lifecycle without the count: each streaming micro-batch
+  * (`Incremental.drain`) and each model writer holds its caches there
+  * and releases them in a `finally`.
   */
 object Caching {
   /** Session conf switch: when "true", return the LAZY result unchanged
@@ -92,6 +95,15 @@ object Caching {
     def apply(df: DataFrame): (Long, DataFrame) = {
       held += df.cache()
       (df.count(), GraftInternal.leafOf(df))
+    }
+
+    /** Caches `df` without an action and holds it for [[release]]: the
+      * per-call cache of a body that runs its own actions on it (a
+      * streaming micro-batch, a model write). Returns `df` itself, cached;
+      * unlike `apply` it adds no job and no leaf. */
+    def hold(df: DataFrame): DataFrame = {
+      held += df.cache()
+      df
     }
 
     def release(): Unit = {

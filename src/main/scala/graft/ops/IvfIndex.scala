@@ -61,11 +61,6 @@ object IvfIndex {
     }
   }
 
-  /** The meta table is absent on pre-r7 layouts (single-assignment era) —
-    * ONLY that case may default; a transient read failure on a real meta
-    * must propagate (a silently dropped n_replicas makes later appends
-    * under-replicate relative to build — the exact failure the scaladoc
-    * warns about). */
   /** Shared by every "absent artifact is a normal state" probe (index
     * bootstrap on first batch, pre-meta layouts): ONLY the missing-path
     * case may be treated as absence — a transient read failure on a real
@@ -78,15 +73,25 @@ object IvfIndex {
     case _ => false
   }
 
-  private def readMetaReplicas(spark: SparkSession, dir: String): Option[Int] =
-    try Some(spark.read.parquet(s"$dir/meta").collect().head.getInt(0))
+  /** Runs `read`; None only when it failed on a missing path
+    * ([[isMissingPath]]) — every other failure propagates. The one form
+    * of the absent-artifact probe. */
+  private[graft] def whenPresent[T](read: => T): Option[T] =
+    try Some(read)
     catch { case e: Throwable if isMissingPath(e) => None }
+
+  /** The meta table is absent on pre-r7 layouts (single-assignment era) —
+    * ONLY that case may default; a transient read failure on a real meta
+    * must propagate (a silently dropped n_replicas makes later appends
+    * under-replicate relative to build — the exact failure the scaladoc
+    * warns about). */
+  private def readMetaReplicas(spark: SparkSession, dir: String): Option[Int] =
+    whenPresent(spark.read.parquet(s"$dir/meta").collect().head.getInt(0))
 
   private[ops] def copyMetaIfPresent(spark: SparkSession, srcDir: String,
       destDir: String): Unit =
-    try spark.read.parquet(s"$srcDir/meta").coalesce(1)
-      .write.mode("overwrite").parquet(s"$destDir/meta")
-    catch { case e: Throwable if isMissingPath(e) => () }
+    whenPresent(spark.read.parquet(s"$srcDir/meta").coalesce(1)
+      .write.mode("overwrite").parquet(s"$destDir/meta"))
 
   /** Unit-normalize a vector (zero vectors pass through). The index routes
     * by L2 distance but SERVES cosine similarity — on unit vectors the two

@@ -1,8 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+
+import graft.ops.Caching
+import graft.ops.IvfIndex.whenPresent
+import graft.sources.SwapProtocol
 
 /** Incremental / resumable processing — SURVEY §2.9.
   *
@@ -22,16 +27,69 @@ object Incremental {
     * processes just the delta — the T1/T2/T4 resume patterns with zero
     * hand-rolled state. */
   def runOnce(spark: SparkSession, inDir: String, schema: org.apache.spark.sql.types.StructType,
-      outDir: String, checkpointDir: String)(transform: DataFrame => DataFrame): StreamingQuery = {
-    val q = transform(spark.readStream.schema(schema).parquet(inDir))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
+      outDir: String, checkpointDir: String)(transform: DataFrame => DataFrame): StreamingQuery =
+    drive(spark, inDir, schema, checkpointDir, None)(
+      transform(_).writeStream.format("parquet").option("path", outDir))
+
+  /** The one streaming drive: reads `schema`-typed parquet under `inDir`
+    * as a file source (`maxFilesPerTrigger` caps each micro-batch), hands
+    * it to `sink`, checkpoints in `checkpointDir` and drains it under
+    * `Trigger.AvailableNow`, returning after the drain. */
+  private def drive(spark: SparkSession, inDir: String,
+      schema: org.apache.spark.sql.types.StructType, checkpointDir: String,
+      maxFilesPerTrigger: Option[Int])(
+      sink: DataFrame => DataStreamWriter[Row]): StreamingQuery = {
+    val reader = spark.readStream.schema(schema)
+    val q = sink(maxFilesPerTrigger
+        .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
+        .parquet(inDir))
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     q // recentProgress stays readable after drain — see progressReport (T3)
+  }
+
+  /** [[drive]] into a `foreachBatch` maintainer: `body` gets each
+    * micro-batch, its checkpointed batchId, and `hold`, the batch's cache
+    * handle ([[graft.ops.Caching.Barriers.hold]]). Every frame the body
+    * holds is released when the batch ends, in a `finally`, so a batch
+    * that throws fails the stream and leaks nothing into the session. */
+  private def drain(spark: SparkSession, inDir: String,
+      schema: org.apache.spark.sql.types.StructType, checkpointDir: String,
+      maxFilesPerTrigger: Option[Int] = None)(
+      body: (DataFrame, Long, DataFrame => DataFrame) => Unit): StreamingQuery =
+    drive(spark, inDir, schema, checkpointDir, maxFilesPerTrigger)(
+      _.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val held = new Caching.Barriers
+        try body(batch, batchId, held.hold) finally held.release()
+      })
+
+  /** One merge of a swap-published state table (maintainers #25/#26/#27):
+    * completes a crashed swap, unions the live state (absent before the
+    * first drain) with the batch's partial `part`, and publishes
+    * `merge(union)` through [[graft.sources.SwapProtocol.writeSwapped]].
+    * The merge plan reads the LIVE state; it stays in place (readable,
+    * crash-intact) until the tmp write has fully materialized. */
+  private def mergeSwapped(s: SparkSession, stateDir: String, part: DataFrame)(
+      merge: DataFrame => DataFrame): Unit = {
+    val dst = new Path(stateDir)
+    val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
+    SwapProtocol.recover(fs, dst)
+    val next = merge(
+      if (fs.exists(dst)) s.read.parquet(stateDir).unionByName(part) else part)
+    SwapProtocol.writeSwapped(fs, dst) { tmp => next.write.parquet(tmp.toString) }
+  }
+
+  /** The READER side of a swap-published table: completes a crashed swap
+    * only if the live dir is gone (recoverForRead) — a report racing a
+    * live compaction must never delete the writer's in-flight tmp (r19
+    * review) — then reads it. */
+  private def readSwapped(spark: SparkSession, dir: String): DataFrame = {
+    val dst = new Path(dir)
+    SwapProtocol.recoverForRead(
+      dst.getFileSystem(spark.sparkContext.hadoopConfiguration), dst)
+    spark.read.parquet(dir)
   }
 
   /** T3 (embeddingsWithGPU.py:231-247): the reference hand-computes rows/sec
@@ -103,58 +161,44 @@ object Incremental {
       indexDir: String, checkpointDir: String,
       retentionScores: Option[DataFrame] = None): StreamingQuery = {
     import graft.ops.MinHashIndex
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.cache()
-        // within-batch: the self-query pairs every near-dup in BOTH
-        // orientations — drop each doc that loses its pairwise pick
-        // (retention rank when scored, earliest doc_id otherwise)
-        val selfPairs = MinHashIndex.query(MinHashIndex.build(b), b)
-          .filter(col("corpus_id") =!= col("batch_id"))
-        val selfDups = (retentionScores match {
-          case None => selfPairs.filter(col("corpus_id") < col("batch_id"))
-          case Some(sc) =>
-            val scores = sc.select(col("doc_id"), col("score"))
-            selfPairs
-              .join(scores.select(col("doc_id").as("batch_id"),
-                col("score").as("score_b")), Seq("batch_id"), "left")
-              .join(scores.select(col("doc_id").as("corpus_id"),
-                col("score").as("score_c")), Seq("corpus_id"), "left")
-              .na.fill(Map("score_b" -> Double.MinValue,
-                "score_c" -> Double.MinValue))
-              .filter(col("score_c") > col("score_b") ||
-                (col("score_c") === col("score_b") &&
-                  col("corpus_id") < col("batch_id")))
-        }).select(col("batch_id").as("doc_id")).distinct()
-        val inBatch = b.join(selfDups, Seq("doc_id"), "left_anti")
-        // against the index (absent on the very first batch)
-        // absent on the very first batch — ONLY that case may bootstrap; a
-        // transient read failure on a real index must fail the batch, not
-        // silently re-admit the whole corpus as novel
-        val indexed =
-          try Some(MinHashIndex.load(s, indexDir))
-          catch { case e: Throwable if graft.ops.IvfIndex.isMissingPath(e) => None }
-        val kept = indexed match {
-          case Some(idx) =>
-            val hits = MinHashIndex.query(idx, inBatch)
-              .select(col("batch_id").as("doc_id")).distinct()
-            inBatch.join(hits, Seq("doc_id"), "left_anti")
-          case None => inBatch
-        }
-        val keptC = kept.cache()
-        keptC.write.mode("append").parquet(outDir)
-        MinHashIndex.build(keptC).write.mode("append").parquet(indexDir)
-        keptC.unpersist()
-        b.unpersist()
-        ()
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
+      val s = batch.sparkSession
+      val b = hold(batch)
+      // within-batch: the self-query pairs every near-dup in BOTH
+      // orientations — drop each doc that loses its pairwise pick
+      // (retention rank when scored, earliest doc_id otherwise)
+      val selfPairs = MinHashIndex.query(MinHashIndex.build(b), b)
+        .filter(col("corpus_id") =!= col("batch_id"))
+      val selfDups = (retentionScores match {
+        case None => selfPairs.filter(col("corpus_id") < col("batch_id"))
+        case Some(sc) =>
+          val scores = sc.select(col("doc_id"), col("score"))
+          selfPairs
+            .join(scores.select(col("doc_id").as("batch_id"),
+              col("score").as("score_b")), Seq("batch_id"), "left")
+            .join(scores.select(col("doc_id").as("corpus_id"),
+              col("score").as("score_c")), Seq("corpus_id"), "left")
+            .na.fill(Map("score_b" -> Double.MinValue,
+              "score_c" -> Double.MinValue))
+            .filter(col("score_c") > col("score_b") ||
+              (col("score_c") === col("score_b") &&
+                col("corpus_id") < col("batch_id")))
+      }).select(col("batch_id").as("doc_id")).distinct()
+      val inBatch = b.join(selfDups, Seq("doc_id"), "left_anti")
+      // against the index: absent on the very first batch — ONLY that
+      // case may bootstrap; a transient read failure on a real index must
+      // fail the batch, not silently re-admit the whole corpus as novel
+      val kept = whenPresent(MinHashIndex.load(s, indexDir)) match {
+        case Some(idx) =>
+          val hits = MinHashIndex.query(idx, inBatch)
+            .select(col("batch_id").as("doc_id")).distinct()
+          inBatch.join(hits, Seq("doc_id"), "left_anti")
+        case None => inBatch
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      val keptC = hold(kept)
+      keptC.write.mode("append").parquet(outDir)
+      MinHashIndex.build(keptC).write.mode("append").parquet(indexDir)
+    }
   }
 
   /** Continuous SEMANTIC dedup (the embedding twin of
@@ -181,49 +225,36 @@ object Incremental {
       indexDir: String, checkpointDir: String, t: Double = 0.9,
       nProbe: Int = 4): StreamingQuery = {
     import graft.ops.{Curation, IvfIndex}
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.select(col("vec_id"), col("embedding")).cache()
-        val nB = b.count()
-        if (nB > 0L) {
-          // missing-path-only bootstrap probe (see the fuzzy twin above)
-          val idxOpt =
-            try Some(IvfIndex.load(s, indexDir))
-            catch { case e: Throwable if IvfIndex.isMissingPath(e) => None }
-          // codebook size never exceeds the rows it is fit on (a tiny
-          // first batch must not ask KMeans for more centers than points)
-          def fitCells(n: Long): Int =
-            math.min(n, math.min(1024L, math.max(4L, n / 64L))).toInt
-          // blocking codebook: the index's if it exists (batch routing
-          // must agree with member routing), else a fresh fit on the batch
-          val codebook = idxOpt.map(_.centroids).getOrElse(
-            IvfIndex.build(s, b, nCells = fitCells(nB), seed = 7L,
-              nReplicas = 1).centroids)
-          val kept = Curation.semanticAdmit(s, b, idxOpt, codebook, t, nProbe)
-            .cache()
-          val nKept = kept.count()
-          kept.write.mode("append").parquet(outDir)
-          idxOpt match {
-            case Some(_) => IvfIndex.append(s, indexDir, kept)
-            case None if nKept > 0L =>
-              // bootstrap: survivors as initial members (codebook refit on
-              // the kept set — the admission codebook served only blocking)
-              IvfIndex.save(s, IvfIndex.build(s, kept,
-                nCells = fitCells(nKept), seed = 7L, nReplicas = 1), indexDir)
-            case None => () // nothing admitted: bootstrap on a later batch
-          }
-          kept.unpersist()
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
+      val s = batch.sparkSession
+      val b = hold(batch.select(col("vec_id"), col("embedding")))
+      val nB = b.count()
+      if (nB > 0L) {
+        // missing-path-only bootstrap probe (see the fuzzy twin above)
+        val idxOpt = whenPresent(IvfIndex.load(s, indexDir))
+        // codebook size never exceeds the rows it is fit on (a tiny
+        // first batch must not ask KMeans for more centers than points)
+        def fitCells(n: Long): Int =
+          math.min(n, math.min(1024L, math.max(4L, n / 64L))).toInt
+        // blocking codebook: the index's if it exists (batch routing
+        // must agree with member routing), else a fresh fit on the batch
+        val codebook = idxOpt.map(_.centroids).getOrElse(
+          IvfIndex.build(s, b, nCells = fitCells(nB), seed = 7L,
+            nReplicas = 1).centroids)
+        val kept = hold(Curation.semanticAdmit(s, b, idxOpt, codebook, t, nProbe))
+        val nKept = kept.count()
+        kept.write.mode("append").parquet(outDir)
+        idxOpt match {
+          case Some(_) => IvfIndex.append(s, indexDir, kept)
+          case None if nKept > 0L =>
+            // bootstrap: survivors as initial members (codebook refit on
+            // the kept set — the admission codebook served only blocking)
+            IvfIndex.save(s, IvfIndex.build(s, kept,
+              nCells = fitCells(nKept), seed = 7L, nReplicas = 1), indexDir)
+          case None => () // nothing admitted: bootstrap on a later batch
         }
-        b.unpersist()
-        ()
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   /** Continuous DECONTAMINATION (the streaming tier of q82): each
@@ -246,23 +277,14 @@ object Incremental {
     val hit = udf { (ghs: Seq[Long]) =>
       ghs != null && ghs.exists(bc.value.mightContainLong)
     }
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flagged = batch.withColumn("contaminated",
-          hit(graft.functions.TextFns.distinctGramHashes(col("text"), 5))).cache()
-        flagged.filter(!col("contaminated")).drop("contaminated")
-          .write.mode("append").parquet(cleanDir)
-        flagged.filter(col("contaminated")).drop("contaminated")
-          .write.mode("append").parquet(quarantineDir)
-        flagged.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
+      val flagged = hold(batch.withColumn("contaminated",
+        hit(graft.functions.TextFns.distinctGramHashes(col("text"), 5))))
+      flagged.filter(!col("contaminated")).drop("contaminated")
+        .write.mode("append").parquet(cleanDir)
+      flagged.filter(col("contaminated")).drop("contaminated")
+        .write.mode("append").parquet(quarantineDir)
+    }
   }
 
   /** Continuous boilerplate scrub (the streaming tier of q110): each
@@ -356,18 +378,6 @@ object Incremental {
     runOnce(spark, inDir, schema, outDir, checkpointDir)(
       graft.ops.Multimodal.imageAHash(_))
 
-  /** Continuous document EMBEDDING under a FROZEN trained model — model
-    * INFERENCE riding the ingest (the continuousAnnIngest maintainer
-    * routes vectors into the index; this one PRODUCES them): each
-    * incoming document pools the [[graft.ml.WordVec]] vectors of its
-    * tokens (token-instance mean, OOV dropped — q155's pooling, as a
-    * per-row JVM kernel over the broadcast word→vector map, so the
-    * whole stage is a stateless narrow map: no explode, no aggregation,
-    * streaming-legal as-is). The model is trained once in batch and
-    * broadcast (vocab-bounded driver state — the DSIR frozen-model
-    * discipline); per-batch cost is tokenize + hash lookups. Emits
-    * (doc_id, dvec, n_known); n_known = 0 rows carry a zero vector for
-    * downstream quarantine. Exactly-once per input file. */
   /** The q155 pooling (token-instance mean, OOV dropped) as a per-row
     * JVM kernel over a broadcast word→vector map — ONE copy shared by the
     * frozen-model maintainer and the refreshing one, so the two serving
@@ -399,6 +409,18 @@ object Incremental {
       }.toDF("doc_id", "dvec", "n_known")
   }
 
+  /** Continuous document EMBEDDING under a FROZEN trained model — model
+    * INFERENCE riding the ingest (the continuousAnnIngest maintainer
+    * routes vectors into the index; this one PRODUCES them): each
+    * incoming document pools the [[graft.ml.WordVec]] vectors of its
+    * tokens (token-instance mean, OOV dropped — q155's pooling, as a
+    * per-row JVM kernel over the broadcast word→vector map, so the
+    * whole stage is a stateless narrow map: no explode, no aggregation,
+    * streaming-legal as-is). The model is trained once in batch and
+    * broadcast (vocab-bounded driver state — the DSIR frozen-model
+    * discipline); per-batch cost is tokenize + hash lookups. Emits
+    * (doc_id, dvec, n_known); n_known = 0 rows carry a zero vector for
+    * downstream quarantine. Exactly-once per input file. */
   def continuousDocEmbed(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, wordVecs: DataFrame,
       outDir: String, checkpointDir: String): StreamingQuery = {
@@ -465,47 +487,39 @@ object Incremental {
     var (servedV, servedMap) = loadServed(spark)
     var bc = spark.sparkContext.broadcast(servedMap)
 
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val dimNow = bc.value.headOption.map(_._2.length).getOrElse(dim)
-        poolDocs(batch, bc, dimNow)
-          .withColumn("model_v", lit(servedV))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        if (refitEvery > 0 && (batchId + 1) % refitEvery == 0) {
-          val v = new Path(s"$modelDir/$VersionsSubdir/v${"%012d".format(batchId)}")
-          fs.delete(v, true)
-          graft.ml.WordVec.fit(
-              s.read.schema(schema).parquet(inDir).filter(col("text").isNotNull),
-              dim = dim, minCount = minCount)
-            .write.mode("overwrite").parquet(s"$v/vecs")
-          require(fs.createNewFile(new Path(v, CommitMarker)) ||
-              fs.exists(new Path(v, CommitMarker)),
-            s"failed to commit $v")
-          committedVersions.dropRight(2).foreach(p => fs.delete(p, true))
-          val (nv, nm) = loadServed(s)
-          servedV = nv
-          // release the superseded model's broadcast blocks — this
-          // batch's pooling already completed (the write above is an
-          // action), so nothing references it; without the release,
-          // stale vector maps accumulate across refits (r14 ADVICE).
-          // unpersist, NOT destroy: a failure-recovery replay of a batch
-          // whose captured plan still holds the old handle can re-fetch
-          // under unpersist (Spark re-broadcasts on demand) but fails
-          // hard after destroy — same executor-memory release either
-          // way (r15 ADVICE)
-          val prev = bc
-          bc = s.sparkContext.broadcast(nm)
-          prev.unpersist()
-        }
-        ()
+    drain(spark, inDir, schema, checkpointDir) { (batch, batchId, _) =>
+      val s = batch.sparkSession
+      val dimNow = bc.value.headOption.map(_._2.length).getOrElse(dim)
+      poolDocs(batch, bc, dimNow)
+        .withColumn("model_v", lit(servedV))
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      if (refitEvery > 0 && (batchId + 1) % refitEvery == 0) {
+        val v = new Path(s"$modelDir/$VersionsSubdir/v${"%012d".format(batchId)}")
+        fs.delete(v, true)
+        graft.ml.WordVec.fit(
+            s.read.schema(schema).parquet(inDir).filter(col("text").isNotNull),
+            dim = dim, minCount = minCount)
+          .write.mode("overwrite").parquet(s"$v/vecs")
+        require(fs.createNewFile(new Path(v, CommitMarker)) ||
+            fs.exists(new Path(v, CommitMarker)),
+          s"failed to commit $v")
+        committedVersions.dropRight(2).foreach(p => fs.delete(p, true))
+        val (nv, nm) = loadServed(s)
+        servedV = nv
+        // release the superseded model's broadcast blocks — this
+        // batch's pooling already completed (the write above is an
+        // action), so nothing references it; without the release,
+        // stale vector maps accumulate across refits (r14 ADVICE).
+        // unpersist, NOT destroy: a failure-recovery replay of a batch
+        // whose captured plan still holds the old handle can re-fetch
+        // under unpersist (Spark re-broadcasts on demand) but fails
+        // hard after destroy — same executor-memory release either
+        // way (r15 ADVICE)
+        val prev = bc
+        bc = s.sparkContext.broadcast(nm)
+        prev.unpersist()
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   /** Continuous CROSS-MODAL dedup — maintainer #18, the q144 closure as
@@ -537,71 +551,59 @@ object Incremental {
       fpDir: String, phashDir: String, checkpointDir: String,
       hashBits: Int = 64): StreamingQuery = {
     import graft.ops.Multimodal
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.cache()
-        // one decode per blob; undecodable media = no image identity
-        // (the doc still dedups on text — admission noise handling is
-        // the funnel's job, not the dedup maintainer's)
-        val hashed = Multimodal.imageAHash(
-            b.filter(col("media").isNotNull).select(col("doc_id"), col("media")))
-          .filter(col("decoded"))
-          .select(col("doc_id"), col("ahash")).cache()
-        // within-batch: the full q144 closure at batch size
-        val selfKeep = Multimodal.crossModalNearKeepOf(
-          b.select(col("doc_id"), col("text")),
-          hashed.select(col("doc_id"), lit(true).as("decoded"), col("ahash")),
-          hashBits)
-        val inBatch = b
-          .join(selfKeep.filter(col("doc_id") === col("keep_id")).select("doc_id"),
-            Seq("doc_id"))
-          .withColumn("fp", graft.functions.TextFns.fingerprint(col("text")))
-          .cache()
-        // against the persisted state (absent only on the very first
-        // batch — a transient read failure must fail the batch, not
-        // re-admit the corpus as novel)
-        def loadState(dir: String): Option[DataFrame] =
-          try { val df = s.read.parquet(dir); df.head(1); Some(df) }
-          catch { case e: Throwable if graft.ops.IvfIndex.isMissingPath(e) => None }
-        val textHit = loadState(fpDir) match {
-          case Some(fps) => inBatch
-            .join(fps.select(col("fp")).distinct(), Seq("fp"), "left_semi")
-            .select(col("doc_id"))
-          case None => s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
-        }
-        val mediaHit = loadState(phashDir) match {
-          case Some(ph) =>
-            val qBands = Multimodal.withPhashProbes(
-                inBatch.select(col("doc_id")).join(hashed, Seq("doc_id")), hashBits)
-              .select(col("band"), col("bhash"), col("doc_id"),
-                col("ahash").as("bh"))
-            val iBands = Multimodal.withPhashBands(
-                ph.select(col("ahash")).distinct(), hashBits)
-              .select(col("band"), col("bhash"), col("ahash").as("ih"))
-            qBands.join(iBands, Seq("band", "bhash"))
-              .filter(bit_count(col("bh").bitwiseXOR(col("ih"))) <=
-                Multimodal.phashHamMax(hashBits))
-              .select(col("doc_id")).distinct()
-          case None => s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
-        }
-        val kept = inBatch
-          .join(textHit.unionByName(mediaHit).distinct(), Seq("doc_id"), "left_anti")
-          .cache()
-        kept.drop("fp").write.mode("append").parquet(outDir)
-        kept.select(col("fp"), col("doc_id")).write.mode("append").parquet(fpDir)
-        kept.select(col("doc_id"))
-          .join(hashed, Seq("doc_id"))
-          .write.mode("append").parquet(phashDir)
-        kept.unpersist(); inBatch.unpersist(); hashed.unpersist(); b.unpersist()
-        ()
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
+      val s = batch.sparkSession
+      val b = hold(batch)
+      // one decode per blob; undecodable media = no image identity
+      // (the doc still dedups on text — admission noise handling is
+      // the funnel's job, not the dedup maintainer's)
+      val hashed = hold(Multimodal.imageAHash(
+          b.filter(col("media").isNotNull).select(col("doc_id"), col("media")))
+        .filter(col("decoded"))
+        .select(col("doc_id"), col("ahash")))
+      // within-batch: the full q144 closure at batch size
+      val selfKeep = Multimodal.crossModalNearKeepOf(
+        b.select(col("doc_id"), col("text")),
+        hashed.select(col("doc_id"), lit(true).as("decoded"), col("ahash")),
+        hashBits)
+      val inBatch = hold(b
+        .join(selfKeep.filter(col("doc_id") === col("keep_id")).select("doc_id"),
+          Seq("doc_id"))
+        .withColumn("fp", graft.functions.TextFns.fingerprint(col("text"))))
+      // against the persisted state (absent only on the very first
+      // batch — a transient read failure must fail the batch, not
+      // re-admit the corpus as novel)
+      def loadState(dir: String): Option[DataFrame] =
+        whenPresent { val df = s.read.parquet(dir); df.head(1); df }
+      val textHit = loadState(fpDir) match {
+        case Some(fps) => inBatch
+          .join(fps.select(col("fp")).distinct(), Seq("fp"), "left_semi")
+          .select(col("doc_id"))
+        case None => s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      val mediaHit = loadState(phashDir) match {
+        case Some(ph) =>
+          val qBands = Multimodal.withPhashProbes(
+              inBatch.select(col("doc_id")).join(hashed, Seq("doc_id")), hashBits)
+            .select(col("band"), col("bhash"), col("doc_id"),
+              col("ahash").as("bh"))
+          val iBands = Multimodal.withPhashBands(
+              ph.select(col("ahash")).distinct(), hashBits)
+            .select(col("band"), col("bhash"), col("ahash").as("ih"))
+          qBands.join(iBands, Seq("band", "bhash"))
+            .filter(bit_count(col("bh").bitwiseXOR(col("ih"))) <=
+              Multimodal.phashHamMax(hashBits))
+            .select(col("doc_id")).distinct()
+        case None => s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
+      }
+      val kept = hold(inBatch
+        .join(textHit.unionByName(mediaHit).distinct(), Seq("doc_id"), "left_anti"))
+      kept.drop("fp").write.mode("append").parquet(outDir)
+      kept.select(col("fp"), col("doc_id")).write.mode("append").parquet(fpDir)
+      kept.select(col("doc_id"))
+        .join(hashed, Seq("doc_id"))
+        .write.mode("append").parquet(phashDir)
+    }
   }
 
   /** Persist the FROZEN LM model layout the ppl-gate maintainers serve
@@ -632,67 +634,68 @@ object Incremental {
       nBuckets: Int = 64): Unit = {
     import spark.implicits._
     import graft.ops.Scoring
-    val tfb = Scoring.bigramFoldOf(corpus).cache()
-    val bg = tfb.groupBy(col("a"), col("b")).agg(sum(col("tf")).as("cab")).cache()
-    val (ctx, pre, discDf) = Scoring.knModel(bg)
-    val vocab = corpus
-      .select(explode(graft.functions.TextFns.tokens(col("text"))).as("w"))
-      .agg(count_distinct(col("w")).cast("double").as("v"))
-    val v = vocab.head().getDouble(0)
-    val disc = discDf.head()
-    // the cuts run through the *From kernels over the SAME cached
-    // tfb/bg/tft/tg the model tables write from — one corpus tokenize
-    // pass per order instead of one per scoring tier (r15 ADVICE)
-    val cutsA = Scoring.bigramNllFrom(tfb, bg, vocab).agg(
-      expr("percentile_disc(0.33333333) WITHIN GROUP (ORDER BY nll2)"),
-      expr("percentile_disc(0.66666667) WITHIN GROUP (ORDER BY nll2)")).head()
-    val cutsK = Scoring.knNllFrom(tfb, bg).agg(
-      expr("percentile_disc(0.33333333) WITHIN GROUP (ORDER BY nll_kn)"),
-      expr("percentile_disc(0.66666667) WITHIN GROUP (ORDER BY nll_kn)")).head()
-    require(!cutsA.isNullAt(0),
-      "writePplModel needs a training corpus with at least one scorable " +
-        "(>= 2 token) document to place the tercile cuts")
-    val abkt = pmod(xxhash64(col("a")), lit(nBuckets.toLong)).as("abkt")
-    bg.select(col("a"), col("b"), col("cab"), abkt)
-      .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/bigrams")
-    ctx.select(col("a"), col("ca"), col("n1a"), abkt)
-      .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/contexts")
-    pre.select(col("b"), col("n1pre"),
-        pmod(xxhash64(col("b")), lit(nBuckets.toLong)).as("bbkt"))
-      .write.mode("overwrite").partitionBy("bbkt")
-      .parquet(s"$modelDir/continuations")
-    // the order-3 layer (the q176 model): trigram counts + (a,b) contexts
-    // in the same left-token bucket layout, D3 and the kn3 cuts in meta.
-    // Nullable cuts: a corpus with no >= 3-token doc still serves the
-    // order-2 tiers; requesting smoothing="kn3" against it fails loudly.
-    val tft = Scoring.trigramFoldOf(corpus).cache()
-    val tg = tft.groupBy(col("a"), col("b"), col("c"))
-      .agg(sum(col("tf")).as("cabc")).cache()
-    val (ctx3, disc3Df) = Scoring.kn3Model(tg)
-    val disc3 = disc3Df.head()
-    tg.select(col("a"), col("b"), col("c"), col("cabc"), abkt)
-      .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/trigrams")
-    ctx3.select(col("a"), col("b"), col("cab2"), col("n1ab"), abkt)
-      .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/contexts3")
-    val cutsK3 = Scoring.kn3NllFrom(tfb, bg, tft, tg).agg(
-      expr("percentile_disc(0.33333333) WITHIN GROUP (ORDER BY nll_kn3)"),
-      expr("percentile_disc(0.66666667) WITHIN GROUP (ORDER BY nll_kn3)")).head()
-    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
-      if (r.isNullAt(i)) None else Some(r.getDouble(i))
-    // a corpus with no >= 3-token document has an EMPTY trigram table, so
-    // the D3 aggregate is null — record 0.0 (the kn3 cuts are null too,
-    // so the kn3 tier refuses loudly) and keep the order-2 promise: such
-    // a corpus still writes a servable add-1/KN model (r15 ADVICE)
-    val dd3v = if (disc3.isNullAt(0)) 0.0 else disc3.getDouble(0)
-    Seq((v, disc.getDouble(0), disc.getDouble(1), nBuckets.toLong,
-        cutsA.getDouble(0), cutsA.getDouble(1),
-        cutsK.getDouble(0), cutsK.getDouble(1),
-        dd3v, opt(cutsK3, 0), opt(cutsK3, 1)))
-      .toDF("v", "dd", "tt", "nbkt", "c1_add1", "c2_add1", "c1_kn", "c2_kn",
-        "dd3", "c1_kn3", "c2_kn3")
-      .coalesce(1).write.mode("overwrite").parquet(s"$modelDir/meta")
-    tg.unpersist(); tft.unpersist(); bg.unpersist(); tfb.unpersist()
-    ()
+    val held = new Caching.Barriers
+    try {
+      val tfb = held.hold(Scoring.bigramFoldOf(corpus))
+      val bg = held.hold(tfb.groupBy(col("a"), col("b")).agg(sum(col("tf")).as("cab")))
+      val (ctx, pre, discDf) = Scoring.knModel(bg)
+      val vocab = corpus
+        .select(explode(graft.functions.TextFns.tokens(col("text"))).as("w"))
+        .agg(count_distinct(col("w")).cast("double").as("v"))
+      val v = vocab.head().getDouble(0)
+      val disc = discDf.head()
+      // the cuts run through the *From kernels over the SAME cached
+      // tfb/bg/tft/tg the model tables write from — one corpus tokenize
+      // pass per order instead of one per scoring tier (r15 ADVICE)
+      val cutsA = Scoring.bigramNllFrom(tfb, bg, vocab).agg(
+        expr("percentile_disc(0.33333333) WITHIN GROUP (ORDER BY nll2)"),
+        expr("percentile_disc(0.66666667) WITHIN GROUP (ORDER BY nll2)")).head()
+      val cutsK = Scoring.knNllFrom(tfb, bg).agg(
+        expr("percentile_disc(0.33333333) WITHIN GROUP (ORDER BY nll_kn)"),
+        expr("percentile_disc(0.66666667) WITHIN GROUP (ORDER BY nll_kn)")).head()
+      require(!cutsA.isNullAt(0),
+        "writePplModel needs a training corpus with at least one scorable " +
+          "(>= 2 token) document to place the tercile cuts")
+      val abkt = pmod(xxhash64(col("a")), lit(nBuckets.toLong)).as("abkt")
+      bg.select(col("a"), col("b"), col("cab"), abkt)
+        .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/bigrams")
+      ctx.select(col("a"), col("ca"), col("n1a"), abkt)
+        .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/contexts")
+      pre.select(col("b"), col("n1pre"),
+          pmod(xxhash64(col("b")), lit(nBuckets.toLong)).as("bbkt"))
+        .write.mode("overwrite").partitionBy("bbkt")
+        .parquet(s"$modelDir/continuations")
+      // the order-3 layer (the q176 model): trigram counts + (a,b) contexts
+      // in the same left-token bucket layout, D3 and the kn3 cuts in meta.
+      // Nullable cuts: a corpus with no >= 3-token doc still serves the
+      // order-2 tiers; requesting smoothing="kn3" against it fails loudly.
+      val tft = held.hold(Scoring.trigramFoldOf(corpus))
+      val tg = held.hold(tft.groupBy(col("a"), col("b"), col("c"))
+        .agg(sum(col("tf")).as("cabc")))
+      val (ctx3, disc3Df) = Scoring.kn3Model(tg)
+      val disc3 = disc3Df.head()
+      tg.select(col("a"), col("b"), col("c"), col("cabc"), abkt)
+        .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/trigrams")
+      ctx3.select(col("a"), col("b"), col("cab2"), col("n1ab"), abkt)
+        .write.mode("overwrite").partitionBy("abkt").parquet(s"$modelDir/contexts3")
+      val cutsK3 = Scoring.kn3NllFrom(tfb, bg, tft, tg).agg(
+        expr("percentile_disc(0.33333333) WITHIN GROUP (ORDER BY nll_kn3)"),
+        expr("percentile_disc(0.66666667) WITHIN GROUP (ORDER BY nll_kn3)")).head()
+      def opt(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
+        if (r.isNullAt(i)) None else Some(r.getDouble(i))
+      // a corpus with no >= 3-token document has an EMPTY trigram table, so
+      // the D3 aggregate is null — record 0.0 (the kn3 cuts are null too,
+      // so the kn3 tier refuses loudly) and keep the order-2 promise: such
+      // a corpus still writes a servable add-1/KN model (r15 ADVICE)
+      val dd3v = if (disc3.isNullAt(0)) 0.0 else disc3.getDouble(0)
+      Seq((v, disc.getDouble(0), disc.getDouble(1), nBuckets.toLong,
+          cutsA.getDouble(0), cutsA.getDouble(1),
+          cutsK.getDouble(0), cutsK.getDouble(1),
+          dd3v, opt(cutsK3, 0), opt(cutsK3, 1)))
+        .toDF("v", "dd", "tt", "nbkt", "c1_add1", "c2_add1", "c1_kn", "c2_kn",
+          "dd3", "c1_kn3", "c2_kn3")
+        .coalesce(1).write.mode("overwrite").parquet(s"$modelDir/meta")
+    } finally held.release()
   }
 
   /** A [[writePplModel]] layout loaded for serving at one smoothing tier
@@ -757,16 +760,16 @@ object Incremental {
         .distinct().as[Long].collect(): _*)
 
     /** Scores one micro-batch `b` (doc_id, text): (doc_id, n_pairs, nll2)
-      * for every doc long enough for the tier's order, plus the cached
-      * fold the caller unpersists after its write. */
-    def score(b: DataFrame): (DataFrame, DataFrame) = {
-      val (fold, served, lnP) = if (smoothing == "kn3") {
-        val tft = Scoring.trigramFoldOf(b).cache()
+      * for every doc long enough for the tier's order. The batch's fold is
+      * cached through `hold`, the batch's cache handle. */
+    def score(b: DataFrame, hold: DataFrame => DataFrame): DataFrame = {
+      val (served, lnP) = if (smoothing == "kn3") {
+        val tft = hold(Scoring.trigramFoldOf(b))
         val inA = touched(tft, "a", "abkt")
         val inB = touched(tft, "b", "abkt")
         val p2v = Scoring.p2vExpr(col("cbc"), col("cb"), col("n1b"),
           col("n1pre"), dd, tt, v)
-        (tft, tft
+        (tft
           .join(trigrams.filter(inA)
             .select(col("a"), col("b"), col("c"), col("cabc")),
             Seq("a", "b", "c"), "left")
@@ -783,7 +786,7 @@ object Incremental {
             .select(col("b").as("c"), col("n1pre")), Seq("c"), "left"),
           Scoring.lnP3Expr(col("cabc"), col("cab2"), col("n1ab"), p2v, dd3))
       } else {
-        val tfb = Scoring.bigramFoldOf(b).cache()
+        val tfb = hold(Scoring.bigramFoldOf(b))
         val inA = touched(tfb, "a", "abkt")
         val withCtx = tfb
           .join(bigrams.filter(inA).select(col("a"), col("b"), col("cab")),
@@ -791,17 +794,16 @@ object Incremental {
           .join(contexts.filter(inA).select(col("a"), col("ca"), col("n1a")),
             Seq("a"), "left")
         if (smoothing == "add1")
-          (tfb, withCtx, Scoring.lnAdd1Expr(col("cab"), col("ca"), v))
-        else (tfb,
+          (withCtx, Scoring.lnAdd1Expr(col("cab"), col("ca"), v))
+        else (
           withCtx.join(continuations.filter(touched(tfb, "b", "bbkt"))
             .select(col("b"), col("n1pre")), Seq("b"), "left"),
           Scoring.lnP2Expr(col("cab"), col("ca"), col("n1a"), col("n1pre"),
             dd, tt, v))
       }
-      (served.groupBy(col("doc_id"))
+      served.groupBy(col("doc_id"))
         .agg(sum(col("tf")).cast("long").as("n_pairs"),
-          round(-sum(col("tf") * lnP) / sum(col("tf")), 4).as("nll2")),
-        fold)
+          round(-sum(col("tf") * lnP) / sum(col("tf")), 4).as("nll2"))
     }
   }
 
@@ -830,29 +832,19 @@ object Incremental {
       outDir: String, checkpointDir: String,
       smoothing: String = "add1"): StreamingQuery = {
     val model = new ServedPplModel(spark, modelDir, smoothing)
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.select(col("doc_id"), col("text")).cache()
-        val (scores, fold) = model.score(b)
-        b.select(col("doc_id"))
-          .join(scores, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-            col("nll2"),
-            when(col("nll2").isNull, "unscored")
-              .when(col("nll2") <= lit(model.c1), "head")
-              .when(col("nll2") <= lit(model.c2), "middle")
-              .otherwise("tail").as("bucket"))
-          .write.mode("append").parquet(outDir)
-        fold.unpersist(); b.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
+      val b = hold(batch.select(col("doc_id"), col("text")))
+      b.select(col("doc_id"))
+        .join(model.score(b, hold), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
+          col("nll2"),
+          when(col("nll2").isNull, "unscored")
+            .when(col("nll2") <= lit(model.c1), "head")
+            .when(col("nll2") <= lit(model.c2), "middle")
+            .otherwise("tail").as("bucket"))
+        .write.mode("append").parquet(outDir)
+    }
   }
 
   /** The frozen eval-gram index the streaming decontamination scrub
@@ -907,36 +899,26 @@ object Incremental {
     val k = meta.getAs[Long]("k").toInt
     val idx = spark.read.parquet(s"$indexDir/spans")
     val norm = graft.functions.TextFns.normText(col("text"))
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.select(col("doc_id"), col("text"))
-          .filter(col("text").isNotNull).cache()
-        val spans = b
-          .select(col("doc_id"), explode(graft.ops.Dedup.spanKernel(k)(norm)).as("sp"))
-          .select(col("doc_id"), col("sp._1").as("start"), col("sp._2").as("h"))
-          .withColumn("hbkt", pmod(xxhash64(col("h")), lit(nbkt)))
-          .cache()
-        // the touched-bucket set: bounded by nbkt, never by the index
-        val touched = spans.select(col("hbkt")).distinct().as[Long].collect()
-        val perDoc = spans
-          .join(idx.filter(col("hbkt").isin(touched: _*)).select(col("h")),
-            Seq("h"), "left_semi")
-          .groupBy(col("doc_id")).agg(collect_list(col("start")).as("starts"))
-        b.join(perDoc, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            graft.ops.Dedup.cleanKernel(k)(norm, col("starts")).as("r"))
-          .select(col("doc_id"), col("r._1").as("n_tokens"),
-            col("r._2").as("n_cov"), col("r._3").as("clean_text"))
-          .write.mode("append").parquet(outDir)
-        spans.unpersist(); b.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
+      val b = hold(batch.select(col("doc_id"), col("text"))
+        .filter(col("text").isNotNull))
+      val spans = hold(b
+        .select(col("doc_id"), explode(graft.ops.Dedup.spanKernel(k)(norm)).as("sp"))
+        .select(col("doc_id"), col("sp._1").as("start"), col("sp._2").as("h"))
+        .withColumn("hbkt", pmod(xxhash64(col("h")), lit(nbkt))))
+      // the touched-bucket set: bounded by nbkt, never by the index
+      val touched = spans.select(col("hbkt")).distinct().as[Long].collect()
+      val perDoc = spans
+        .join(idx.filter(col("hbkt").isin(touched: _*)).select(col("h")),
+          Seq("h"), "left_semi")
+        .groupBy(col("doc_id")).agg(collect_list(col("start")).as("starts"))
+      b.join(perDoc, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          graft.ops.Dedup.cleanKernel(k)(norm, col("starts")).as("r"))
+        .select(col("doc_id"), col("r._1").as("n_tokens"),
+          col("r._2").as("n_cov"), col("r._3").as("clean_text"))
+        .write.mode("append").parquet(outDir)
+    }
   }
 
   /** The frozen SIF doc-embedding model the streaming diversity monitor
@@ -952,18 +934,19 @@ object Incremental {
     val wv = wordvecs.getOrElse(
       graft.ml.WordVec.fit(corpus.filter(col("text").isNotNull),
         minCount = minCount))
-    val freq = corpus
-      .select(explode(graft.functions.TextFns.tokens(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("n")).cache()
-    val tot = freq.agg(sum(col("n")).cast("double")).head().getDouble(0)
-    wv.join(freq, Seq("word"))
-      .select(col("word"), col("vec"), col("n"),
-        pmod(xxhash64(col("word")), lit(nBuckets.toLong)).as("wbkt"))
-      .write.mode("overwrite").partitionBy("wbkt").parquet(s"$modelDir/vecs")
-    Seq((tot, nBuckets.toLong)).toDF("tot", "nbkt")
-      .coalesce(1).write.mode("overwrite").parquet(s"$modelDir/meta")
-    freq.unpersist()
-    ()
+    val held = new Caching.Barriers
+    try {
+      val freq = held.hold(corpus
+        .select(explode(graft.functions.TextFns.tokens(col("text"))).as("word"))
+        .groupBy(col("word")).agg(count(lit(1)).as("n")))
+      val tot = freq.agg(sum(col("n")).cast("double")).head().getDouble(0)
+      wv.join(freq, Seq("word"))
+        .select(col("word"), col("vec"), col("n"),
+          pmod(xxhash64(col("word")), lit(nBuckets.toLong)).as("wbkt"))
+        .write.mode("overwrite").partitionBy("wbkt").parquet(s"$modelDir/vecs")
+      Seq((tot, nBuckets.toLong)).toDF("tot", "nbkt")
+        .coalesce(1).write.mode("overwrite").parquet(s"$modelDir/meta")
+    } finally held.release()
   }
 
   /** Continuous embedding-DIVERSITY monitor (maintainer #20) — the
@@ -991,44 +974,34 @@ object Incremental {
     val tot = meta.getAs[Double]("tot")
     val nbkt = meta.getAs[Long]("nbkt")
     val vecs = spark.read.parquet(s"$modelDir/vecs")
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tf = batch.filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"),
-            explode(graft.functions.TextFns.tokens(col("text"))).as("word"))
-          .withColumn("wbkt", pmod(xxhash64(col("word")), lit(nbkt)))
-          .cache()
-        val touched = tf.select(col("wbkt")).distinct().as[Long].collect()
-        val dv = tf
-          .join(vecs.filter(col("wbkt").isin(touched: _*))
-            .select(col("word"), col("vec"), col("n")), Seq("word"))
-          .select(col("doc_id"), col("source"),
-            (lit(0.001) / (lit(0.001) + col("n") / lit(tot))).as("wt"),
-            posexplode(col("vec")).as(Seq("i", "x")))
-          .groupBy(col("doc_id"), col("source"), col("i"))
-          .agg((sum(col("wt") * col("x")) / count(lit(1))).as("x"))
-          .groupBy(col("doc_id"), col("source"))
-          .agg(expr("transform(array_sort(collect_list(struct(i, x))), s -> s.x)")
-            .as("dv"))
-          .withColumn("nrm", sqrt(expr(
-            "aggregate(zip_with(dv, dv, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")))
-          .filter(col("nrm") > 0.0)
-        dv.select(col("source"), col("nrm"),
-            posexplode(col("dv")).as(Seq("pos", "x")))
-          .select(col("source"), col("pos"), (col("x") / col("nrm")).as("u"))
-          .groupBy(col("source"), col("pos"))
-          .agg(sum(col("u")).as("s_u"), count(lit(1)).as("n"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        tf.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(spark, inDir, schema, checkpointDir) { (batch, batchId, hold) =>
+      val tf = hold(batch.filter(col("text").isNotNull)
+        .select(col("doc_id"), col("source"),
+          explode(graft.functions.TextFns.tokens(col("text"))).as("word"))
+        .withColumn("wbkt", pmod(xxhash64(col("word")), lit(nbkt))))
+      val touched = tf.select(col("wbkt")).distinct().as[Long].collect()
+      val dv = tf
+        .join(vecs.filter(col("wbkt").isin(touched: _*))
+          .select(col("word"), col("vec"), col("n")), Seq("word"))
+        .select(col("doc_id"), col("source"),
+          (lit(0.001) / (lit(0.001) + col("n") / lit(tot))).as("wt"),
+          posexplode(col("vec")).as(Seq("i", "x")))
+        .groupBy(col("doc_id"), col("source"), col("i"))
+        .agg((sum(col("wt") * col("x")) / count(lit(1))).as("x"))
+        .groupBy(col("doc_id"), col("source"))
+        .agg(expr("transform(array_sort(collect_list(struct(i, x))), s -> s.x)")
+          .as("dv"))
+        .withColumn("nrm", sqrt(expr(
+          "aggregate(zip_with(dv, dv, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")))
+        .filter(col("nrm") > 0.0)
+      dv.select(col("source"), col("nrm"),
+          posexplode(col("dv")).as(Seq("pos", "x")))
+        .select(col("source"), col("pos"), (col("x") / col("nrm")).as("u"))
+        .groupBy(col("source"), col("pos"))
+        .agg(sum(col("u")).as("s_u"), count(lit(1)).as("n"))
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(outDir)
+    }
   }
 
   /** Continuous GATE-AGREEMENT monitor (maintainer #21) — q185's κ
@@ -1052,33 +1025,23 @@ object Incremental {
       weights: DataFrame, outDir: String, checkpointDir: String): StreamingQuery = {
     val model = new ServedPplModel(spark, pplModelDir, "add1")
     val wRow = weights.head()
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.select(col("doc_id"), col("text")).cache()
-        // add-1 scores through the frozen model (the joined gate's add1
-        // tier): in-model pairs replay the q147 fold, unseen pairs take
-        // the smoothed floor
-        val (scores, fold) = model.score(b)
-        val flags = b
-          .join(scores, Seq("doc_id"), "left")
-          .select(
-            graft.ops.TextOps.ruleGateKeep().cast("long").as("rule"),
-            (graft.ops.Curation.marginFromWeights(wRow) > 0)
-              .cast("long").as("clf"),
-            (col("nll2").isNull || col("nll2") <= lit(model.c2))
-              .cast("long").as("ppl"))
-        graft.ops.Scoring.gateCountsOf(flags)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        fold.unpersist(); b.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(spark, inDir, schema, checkpointDir) { (batch, batchId, hold) =>
+      val b = hold(batch.select(col("doc_id"), col("text")))
+      // add-1 scores through the frozen model (the joined gate's add1
+      // tier): in-model pairs replay the q147 fold, unseen pairs take
+      // the smoothed floor
+      val flags = b
+        .join(model.score(b, hold), Seq("doc_id"), "left")
+        .select(
+          graft.ops.TextOps.ruleGateKeep().cast("long").as("rule"),
+          (graft.ops.Curation.marginFromWeights(wRow) > 0)
+            .cast("long").as("clf"),
+          (col("nll2").isNull || col("nll2") <= lit(model.c2))
+            .cast("long").as("ppl"))
+      graft.ops.Scoring.gateCountsOf(flags)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(outDir)
+    }
   }
 
   /** Read-side fold of the gate-agreement log → q185's 3-row κ table
@@ -1121,40 +1084,24 @@ object Incremental {
     * class of [[continuousSemanticDedup]]. */
   def continuousNoveltyMonitor(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.CorpusReports.gramCountsOf(
-            batch.select(col("source"), col("text")))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drain(spark, inDir, schema, checkpointDir) { (batch, batchId, _) =>
+      graft.ops.CorpusReports.gramCountsOf(
+          batch.select(col("source"), col("text")))
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Read-side fold of the novelty log → the q197 table over every doc
     * streamed so far (per-(source, gram) totals re-aggregated from the
     * integer partials, then the shared per-source fold). Completes any
     * compaction swap a crash left in flight before reading, so the
     * report never sees a missing live path. */
-  def noveltyReport(spark: SparkSession, outDir: String): DataFrame = {
-    val dst = new org.apache.hadoop.fs.Path(outDir)
-    // READER path: complete a crashed swap only if the live dir is gone
-    // (recoverForRead) - a report racing a live compaction must never
-    // delete the writer's in-flight tmp (r19 review)
-    graft.sources.SwapProtocol.recoverForRead(
-      dst.getFileSystem(spark.sparkContext.hadoopConfiguration), dst)
+  def noveltyReport(spark: SparkSession, outDir: String): DataFrame =
     graft.ops.CorpusReports.noveltyFoldOf(
-      spark.read.parquet(outDir)
+      readSwapped(spark, outDir)
         .groupBy(col("source"), col("g"))
         .agg(sum(col("n")).as("n")))
-  }
 
   /** Compact the novelty log: unlike maintainers #20/#21 (whose partials
     * are sources×dim- or 1-row-per-batch-bounded), #23's per-batch
@@ -1172,10 +1119,9 @@ object Incremental {
     * subsequent batches append alongside the rollup. [[noveltyReport]]
     * is invariant under compaction. */
   def compactNoveltyLog(spark: SparkSession, outDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val dst = new Path(outDir)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.SwapProtocol.writeSwapped(fs, dst) { tmp =>
+    SwapProtocol.writeSwapped(fs, dst) { tmp =>
       // the rollup plan reads the LIVE dst — it stays in place (readable,
       // crash-intact) until the tmp write below has fully materialized
       spark.read.parquet(outDir)
@@ -1206,10 +1152,9 @@ object Incremental {
   // does not compact on every drain
   def compactNoveltyLogIfNeeded(spark: SparkSession, outDir: String,
       growthRatio: Double = 4.0, minRollupRows: Long = 1000L): Boolean = {
-    import org.apache.hadoop.fs.Path
     val dst = new Path(outDir)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.SwapProtocol.recover(fs, dst)
+    SwapProtocol.recover(fs, dst)
     if (!fs.exists(dst)) return false
     val byKind = spark.read.parquet(outDir)
       .groupBy(col("batch_id") === -1L)
@@ -1247,53 +1192,39 @@ object Incremental {
       checkpointDir: String, nBuckets: Int = 64,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     import spark.implicits._
-    import org.apache.hadoop.fs.Path
     val logDir = s"$outDir/terms"
     // the curve's batch granularity is the source's read limit —
     // AvailableNow honors maxFilesPerTrigger, so a deployment picks the
     // curve resolution here (None = one point per drain)
-    val reader0 = spark.readStream.schema(schema)
-    val reader = maxFilesPerTrigger
-      .fold(reader0)(n => reader0.option("maxFilesPerTrigger", n.toString))
-    val q = reader.parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val toks = batch
-          .select(col("source"),
-            explode(graft.functions.TextFns.tokens(col("text"))).as("term"))
-          .groupBy(col("source"), col("term"))
-          .agg(count(lit(1)).as("n"))
-          .withColumn("tbkt", pmod(
-            xxhash64(concat_ws("\u0000", col("source"), col("term"))),
-            lit(nBuckets.toLong)))
-          .cache()
-        val nTok = toks.groupBy(col("source"))
-          .agg(sum(col("n")).cast("long").as("n_tok"))
-        val fs = new Path(logDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val touched = toks.select(col("tbkt")).distinct().as[Long].collect()
-        val newTerms =
-          if (!fs.exists(new Path(logDir))) toks.select(col("source"), col("term"), col("tbkt"))
-          else toks.select(col("source"), col("term"), col("tbkt"))
-            .join(spark.read.parquet(logDir)
-                .filter(col("term").isNotNull && col("tbkt").isin(touched: _*))
-                .select(col("source"), col("term")),
-              Seq("source", "term"), "left_anti")
-        newTerms
-          .select(lit(batchId).as("batch_id"), col("source"), col("term"),
-            col("tbkt"), lit(null).cast("long").as("n_tok"))
-          .unionByName(nTok.select(lit(batchId).as("batch_id"), col("source"),
-            lit(null).cast("string").as("term"), lit(-1L).as("tbkt"),
-            col("n_tok")))
-          .write.mode("append").partitionBy("tbkt").parquet(logDir)
-        toks.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(spark, inDir, schema, checkpointDir, maxFilesPerTrigger) { (batch, batchId, hold) =>
+      val toks = hold(batch
+        .select(col("source"),
+          explode(graft.functions.TextFns.tokens(col("text"))).as("term"))
+        .groupBy(col("source"), col("term"))
+        .agg(count(lit(1)).as("n"))
+        .withColumn("tbkt", pmod(
+          xxhash64(concat_ws("\u0000", col("source"), col("term"))),
+          lit(nBuckets.toLong))))
+      val nTok = toks.groupBy(col("source"))
+        .agg(sum(col("n")).cast("long").as("n_tok"))
+      val fs = new Path(logDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val touched = toks.select(col("tbkt")).distinct().as[Long].collect()
+      val newTerms =
+        if (!fs.exists(new Path(logDir))) toks.select(col("source"), col("term"), col("tbkt"))
+        else toks.select(col("source"), col("term"), col("tbkt"))
+          .join(spark.read.parquet(logDir)
+              .filter(col("term").isNotNull && col("tbkt").isin(touched: _*))
+              .select(col("source"), col("term")),
+            Seq("source", "term"), "left_anti")
+      newTerms
+        .select(lit(batchId).as("batch_id"), col("source"), col("term"),
+          col("tbkt"), lit(null).cast("long").as("n_tok"))
+        .unionByName(nTok.select(lit(batchId).as("batch_id"), col("source"),
+          lit(null).cast("string").as("term"), lit(-1L).as("tbkt"),
+          col("n_tok")))
+        .write.mode("append").partitionBy("tbkt").parquet(logDir)
+    }
   }
 
   /** Read-side fold of the vocab-growth log → (source, batch_id,
@@ -1340,60 +1271,35 @@ object Incremental {
   def continuousExactNnRef(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, probes: DataFrame,
       outDir: String, checkpointDir: String): StreamingQuery = {
-    import org.apache.hadoop.fs.Path
     // register on the OUTER session before start(): the micro-batch
     // executes in a cloned session whose function registry snapshots the
     // outer one — an inside-only registration leaves cosine_sim
     // unresolvable on the first drain
     graft.plans.GraftExtensions.register(spark)
-    val stateDir = s"$outDir/top3"
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        graft.plans.GraftExtensions.register(s)
-        val dst = new Path(stateDir)
-        val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
-        graft.sources.SwapProtocol.recover(fs, dst)
-        val batchTop = graft.ops.Similarity.exactTop3Scored(
-          batch.select(col("vec_id"), col("embedding")), probes)
-        val union =
-          if (fs.exists(dst)) s.read.parquet(stateDir).unionByName(batchTop)
-          else batchTop
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id"))
-          .orderBy(col("cos_raw").desc, col("nn_id"))
-        val next = union
-          .groupBy(col("vec_id"), col("nn_id"))
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, _) =>
+      val s = batch.sparkSession
+      graft.plans.GraftExtensions.register(s)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("vec_id"))
+        .orderBy(col("cos_raw").desc, col("nn_id"))
+      mergeSwapped(s, s"$outDir/top3", graft.ops.Similarity.exactTop3Scored(
+          batch.select(col("vec_id"), col("embedding")), probes)) {
+        _.groupBy(col("vec_id"), col("nn_id"))
           .agg(max(col("cos_raw")).as("cos_raw"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .select(col("vec_id"), col("nn_id"), col("cos_raw"))
-        // the plan reads the LIVE state; it stays in place (readable,
-        // crash-intact) until the tmp write has fully materialized
-        graft.sources.SwapProtocol.writeSwapped(fs, dst) { tmp =>
-          next.write.parquet(tmp.toString)
-        }
-        ()
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   /** Read the maintained exact reference: (vec_id, nn_id, cos_raw),
     * completing any crashed swap first. Equals the batch
     * `exactTop3Scored` over everything ingested — the parity contract
     * (StreamingSpec maintainer #25). */
-  def exactNnRefReport(spark: SparkSession, outDir: String): DataFrame = {
-    val dst = new org.apache.hadoop.fs.Path(s"$outDir/top3")
-    graft.sources.SwapProtocol.recoverForRead( // reader path: see noveltyReport
-      dst.getFileSystem(spark.sparkContext.hadoopConfiguration), dst)
-    spark.read.parquet(s"$outDir/top3")
+  def exactNnRefReport(spark: SparkSession, outDir: String): DataFrame =
+    readSwapped(spark, s"$outDir/top3")
       .orderBy(col("vec_id"), col("cos_raw").desc, col("nn_id"))
-  }
 
   /** The per-drain RECALL read maintainer #25 exists for: serve the
     * probe batch through a live [[graft.ops.IvfIndex]] (the q99 pruned
@@ -1439,44 +1345,20 @@ object Incremental {
   def continuousDistinctMonitor(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, outDir: String,
       checkpointDir: String, k: Int = 256): StreamingQuery = {
-    import org.apache.hadoop.fs.Path
     require(k >= 2, s"kmv k must be >= 2, got $k")
-    val stateDir = s"$outDir/kmv"
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val dst = new Path(stateDir)
-        val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
-        graft.sources.SwapProtocol.recover(fs, dst)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("source")).orderBy(col("u"))
-        // batch-side bottom-k FIRST (the decomposition): the merge then
-        // ranks ≤ 2k rows per source, never the batch's distinct set
-        val batchK = batch
-          .select(col("source"), graft.ops.Relational.mdUniform(
-            graft.functions.TextFns.fingerprint(col("text"))).as("u"))
-          .distinct()
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= k)
-          .select(col("source"), col("u"))
-        val union =
-          if (fs.exists(dst)) s.read.parquet(stateDir).unionByName(batchK)
-          else batchK
-        val next = union.distinct()
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= k)
-          .select(col("source"), col("u"))
-        graft.sources.SwapProtocol.writeSwapped(fs, dst) { tmp =>
-          next.write.parquet(tmp.toString)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, _) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("source")).orderBy(col("u"))
+      def bottomK(df: DataFrame): DataFrame = df.distinct()
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= k)
+        .select(col("source"), col("u"))
+      // batch-side bottom-k FIRST (the decomposition): the merge then
+      // ranks ≤ 2k rows per source, never the batch's distinct set
+      mergeSwapped(batch.sparkSession, s"$outDir/kmv", bottomK(batch
+        .select(col("source"), graft.ops.Relational.mdUniform(
+          graft.functions.TextFns.fingerprint(col("text"))).as("u"))))(bottomK)
+    }
   }
 
   /** Read the maintained sketch as the per-source distinct estimate:
@@ -1485,11 +1367,8 @@ object Incremental {
     * floor((k-1)/u_k) saturated — so the report equals the batch UDAF
     * over everything ingested (the parity contract). `k` must match the
     * maintainer's. */
-  def distinctReport(spark: SparkSession, outDir: String, k: Int = 256): DataFrame = {
-    val dst = new org.apache.hadoop.fs.Path(s"$outDir/kmv")
-    graft.sources.SwapProtocol.recoverForRead( // reader path: see noveltyReport
-      dst.getFileSystem(spark.sparkContext.hadoopConfiguration), dst)
-    spark.read.parquet(s"$outDir/kmv")
+  def distinctReport(spark: SparkSession, outDir: String, k: Int = 256): DataFrame =
+    readSwapped(spark, s"$outDir/kmv")
       .groupBy(col("source"))
       .agg(count(lit(1)).cast("long").as("n_kept"), max(col("u")).as("u_k"))
       .select(col("source"), col("n_kept"),
@@ -1497,7 +1376,6 @@ object Incremental {
           .otherwise(floor(lit((k - 1).toDouble) / col("u_k")).cast("long"))
           .as("kmv_nd"))
       .orderBy(col("source"))
-  }
 
   /** Maintainer #27: continuous SAMPLED-QUANTILE monitor — the
     * streaming tier q219 prices: per source, the (u, doc_id, n_chars)
@@ -1519,53 +1397,29 @@ object Incremental {
   def continuousQuantileMonitor(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, outDir: String,
       checkpointDir: String, k: Int = 128): StreamingQuery = { // k priced by q219 (k=128 holds every per-source quartile within the certified band)
-    import org.apache.hadoop.fs.Path
     require(k >= 1, s"sample size k must be >= 1, got $k")
-    val stateDir = s"$outDir/sample"
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val dst = new Path(stateDir)
-        val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
-        graft.sources.SwapProtocol.recover(fs, dst)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("source")).orderBy(col("u"), col("doc_id"))
-        def bottomK(df: DataFrame): DataFrame = df
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= k)
-          .select(col("source"), col("u"), col("doc_id"), col("n_chars"))
-        def mergeKeys(df: DataFrame): DataFrame = df
-          .groupBy(col("source"), col("u"), col("doc_id"))
-          .agg(min(col("n_chars")).as("n_chars"))
-        val batchK = bottomK(mergeKeys(batch
-          .select(col("source"), graft.ops.Relational.mdUniform(col("doc_id")).as("u"),
-            col("doc_id"), col("n_chars"))))
-        val union =
-          if (fs.exists(dst)) s.read.parquet(stateDir).unionByName(batchK)
-          else batchK
-        val next = bottomK(mergeKeys(union))
-        graft.sources.SwapProtocol.writeSwapped(fs, dst) { tmp =>
-          next.write.parquet(tmp.toString)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, _) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("source")).orderBy(col("u"), col("doc_id"))
+      def bottomK(df: DataFrame): DataFrame = df
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= k)
+        .select(col("source"), col("u"), col("doc_id"), col("n_chars"))
+      def mergeKeys(df: DataFrame): DataFrame = df
+        .groupBy(col("source"), col("u"), col("doc_id"))
+        .agg(min(col("n_chars")).as("n_chars"))
+      mergeSwapped(batch.sparkSession, s"$outDir/sample", bottomK(mergeKeys(batch
+        .select(col("source"), graft.ops.Relational.mdUniform(col("doc_id")).as("u"),
+          col("doc_id"), col("n_chars")))))(df => bottomK(mergeKeys(df)))
+    }
   }
 
   /** Read the maintained sample as per-source quantiles: (source,
     * n_sample, p25, p50, p75) via the same percentile_disc the q72/q219
     * certified kernels use — equals the q219 batch sample at the same k
     * over everything ingested (the parity contract). */
-  def quantileReport(spark: SparkSession, outDir: String): DataFrame = {
-    val dst = new org.apache.hadoop.fs.Path(s"$outDir/sample")
-    graft.sources.SwapProtocol.recoverForRead( // reader path: see noveltyReport
-      dst.getFileSystem(spark.sparkContext.hadoopConfiguration), dst)
-    spark.read.parquet(s"$outDir/sample")
+  def quantileReport(spark: SparkSession, outDir: String): DataFrame =
+    readSwapped(spark, s"$outDir/sample")
       .groupBy(col("source"))
       .agg(count(lit(1)).cast("long").as("n_sample"),
         expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY n_chars)")
@@ -1575,7 +1429,6 @@ object Incremental {
         expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY n_chars)")
           .cast("long").as("p75"))
       .orderBy(col("source"))
-  }
 
   /** Continuous media admission gate — the streaming twin of q149 (the
     * media rule gate): each micro-batch's blobs decode to metadata
@@ -1639,13 +1492,9 @@ object Incremental {
     * yet) reads as empty, the bootstrap-probe discipline. */
   def mediaNearDupHits(spark: SparkSession, hitsDir: String): DataFrame = {
     import spark.implicits._
-    val rows =
-      try spark.read.parquet(hitsDir)
-      catch {
-        case e: Throwable if graft.ops.IvfIndex.isMissingPath(e) =>
-          Seq.empty[(Long, Long, Long)].toDF("batch_id", "corpus_id", "hamming")
-      }
-    rows.dropDuplicates("batch_id", "corpus_id")
+    whenPresent(spark.read.parquet(hitsDir))
+      .getOrElse(Seq.empty[(Long, Long, Long)].toDF("batch_id", "corpus_id", "hamming"))
+      .dropDuplicates("batch_id", "corpus_id")
   }
 
   /** Continuous benchmark-saturation maintenance (the streaming twin of
@@ -1698,13 +1547,8 @@ object Incremental {
       .select(col("doc_id"),
         explode(graft.functions.TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-    val hitRows =
-      try spark.read.parquet(hitsDir)
-      catch {
-        case e: Throwable if graft.ops.IvfIndex.isMissingPath(e) =>
-          Seq.empty[(Long, Long)].toDF("doc_id", "gh")
-      }
-    val hits = hitRows
+    val hits = whenPresent(spark.read.parquet(hitsDir))
+      .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "gh"))
       .dropDuplicates("doc_id", "gh")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
     tot.join(hits, Seq("doc_id"), "left")
@@ -1749,51 +1593,35 @@ object Incremental {
     val hit = udf { (ghs: Seq[Long]) =>
       ghs != null && ghs.exists(bc.value.contains)
     }
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch
-          .select(col("doc_id"), col("source"), col("text"),
-            graft.ops.TextOps.ruleGateKeep().as("keep_gate"),
-            graft.functions.TextFns.fingerprint(col("text")).as("fp"),
-            hit(graft.functions.TextFns.distinctGramHashes(col("text"), 5))
-              .as("contaminated"))
-          .cache()
-        val batchCanon = b.filter(col("keep_gate"))
-          .groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id"))
-        // absent only before the first batch — the bootstrap-probe
-        // discipline: a transient read failure on real state must fail
-        // the batch, not re-admit every clone as canonical
-        val known =
-          try s.read.parquet(fpDir).select(col("fp")).distinct()
-            .withColumn("seen", lit(true))
-          catch {
-            case e: Throwable if graft.ops.IvfIndex.isMissingPath(e) =>
-              Seq.empty[(String, Boolean)].toDF("fp", "seen")
-          }
-        val isCanon = col("keep_gate") && col("doc_id") === col("keep_id") &&
-          !coalesce(col("seen"), lit(false))
-        val flags = b
-          .join(batchCanon, Seq("fp"), "left")
-          .join(known, Seq("fp"), "left")
-          .select(col("doc_id"), col("source"), col("fp"),
-            col("keep_gate").cast("long").as("s1"),
-            isCanon.cast("long").as("s2"),
-            (isCanon && !col("contaminated")).cast("long").as("s3"))
-          .cache()
-        flags.drop("fp").write.mode("append").parquet(flagsDir)
-        flags.filter(col("s2") === 1L).select(col("fp"))
-          .write.mode("append").parquet(fpDir)
-        flags.unpersist()
-        b.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
+      val s = batch.sparkSession
+      val b = hold(batch
+        .select(col("doc_id"), col("source"), col("text"),
+          graft.ops.TextOps.ruleGateKeep().as("keep_gate"),
+          graft.functions.TextFns.fingerprint(col("text")).as("fp"),
+          hit(graft.functions.TextFns.distinctGramHashes(col("text"), 5))
+            .as("contaminated")))
+      val batchCanon = b.filter(col("keep_gate"))
+        .groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id"))
+      // absent only before the first batch — the bootstrap-probe
+      // discipline: a transient read failure on real state must fail
+      // the batch, not re-admit every clone as canonical
+      val known = whenPresent(s.read.parquet(fpDir))
+        .fold(Seq.empty[(String, Boolean)].toDF("fp", "seen"))(
+          _.select(col("fp")).distinct().withColumn("seen", lit(true)))
+      val isCanon = col("keep_gate") && col("doc_id") === col("keep_id") &&
+        !coalesce(col("seen"), lit(false))
+      val flags = hold(b
+        .join(batchCanon, Seq("fp"), "left")
+        .join(known, Seq("fp"), "left")
+        .select(col("doc_id"), col("source"), col("fp"),
+          col("keep_gate").cast("long").as("s1"),
+          isCanon.cast("long").as("s2"),
+          (isCanon && !col("contaminated")).cast("long").as("s3")))
+      flags.drop("fp").write.mode("append").parquet(flagsDir)
+      flags.filter(col("s2") === 1L).select(col("fp"))
+        .write.mode("append").parquet(fpDir)
+    }
   }
 
   /** The q127 report over the maintained flag table: per-source survivor
@@ -1810,14 +1638,9 @@ object Incremental {
     * reconcile-downstream discipline as the DSIR twin. */
   def gateFunnelReport(spark: SparkSession, flagsDir: String): DataFrame = {
     import spark.implicits._
-    val flags =
-      try spark.read.parquet(flagsDir)
-      catch {
-        case e: Throwable if graft.ops.IvfIndex.isMissingPath(e) =>
-          Seq.empty[(Long, String, Long, Long, Long)]
-            .toDF("doc_id", "source", "s1", "s2", "s3")
-      }
-    flags
+    whenPresent(spark.read.parquet(flagsDir))
+      .getOrElse(Seq.empty[(Long, String, Long, Long, Long)]
+        .toDF("doc_id", "source", "s1", "s2", "s3"))
       .groupBy(col("doc_id"), col("source"))
       .agg(max(col("s1")).as("s1"), max(col("s2")).as("s2"), max(col("s3")).as("s3"))
       .groupBy(col("source"))
@@ -1852,35 +1675,25 @@ object Incremental {
       t: Double = 0.35, nProbe: Int = 8): StreamingQuery = {
     import graft.ops.IvfIndex
     val idx = IvfIndex.load(spark, evalIndexDir)
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.select(col("vec_id"), col("embedding")).cache()
-        if (b.count() > 0L) {
-          // excludeSelf = false: corpus vec_ids and benchmark-index ids
-          // are UNRELATED id spaces here — a numeric collision is a real
-          // match, not a self-pair (the batch q111 direction, where the
-          // benchmark is a corpus subset, keeps the default)
-          val hits = IvfIndex.searchThreshold(s, idx, b, t, nProbe,
-              excludeSelf = false)
-            .groupBy(col("query_id").as("vec_id"))
-            .agg(max(col("cos")).as("max_cos"), count(lit(1)).as("n_matches"))
-          val flagged = b.join(broadcast(hits), Seq("vec_id"), "left").cache()
-          flagged.filter(col("max_cos").isNotNull)
-            .write.mode("append").parquet(quarantineDir)
-          flagged.filter(col("max_cos").isNull).drop("max_cos", "n_matches")
-            .write.mode("append").parquet(cleanDir)
-          flagged.unpersist()
-        }
-        b.unpersist()
-        ()
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
+      val s = batch.sparkSession
+      val b = hold(batch.select(col("vec_id"), col("embedding")))
+      if (b.count() > 0L) {
+        // excludeSelf = false: corpus vec_ids and benchmark-index ids
+        // are UNRELATED id spaces here — a numeric collision is a real
+        // match, not a self-pair (the batch q111 direction, where the
+        // benchmark is a corpus subset, keeps the default)
+        val hits = IvfIndex.searchThreshold(s, idx, b, t, nProbe,
+            excludeSelf = false)
+          .groupBy(col("query_id").as("vec_id"))
+          .agg(max(col("cos")).as("max_cos"), count(lit(1)).as("n_matches"))
+        val flagged = hold(b.join(broadcast(hits), Seq("vec_id"), "left"))
+        flagged.filter(col("max_cos").isNotNull)
+          .write.mode("append").parquet(quarantineDir)
+        flagged.filter(col("max_cos").isNull).drop("max_cos", "n_matches")
+          .write.mode("append").parquet(cleanDir)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   /** Continuous DSIR importance scoring (q105 in incremental form): each
@@ -1906,28 +1719,18 @@ object Incremental {
       selectedDir: String, rejectedDir: String,
       checkpointDir: String): StreamingQuery = {
     val slots = graft.ops.Curation.dsirModelSlots(spark, modelDir)
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // barrier (the q105 discipline): three derived columns; without it
-        // CollapseProject re-runs the bigram kernel once per reference
-        val scored = batch
-          .withColumn("p", graft.ops.Curation.dsirWeightPair(slots))
-          .cache()
-        val routed = scored
-          .withColumn("n_grams", element_at(col("p"), 1))
-          .withColumn("w_micro", element_at(col("p"), 2))
-          .drop("p")
-        routed.filter(col("w_micro") > 0).write.mode("append").parquet(selectedDir)
-        routed.filter(col("w_micro") <= 0).write.mode("append").parquet(rejectedDir)
-        scored.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
+      // barrier (the q105 discipline): three derived columns; without it
+      // CollapseProject re-runs the bigram kernel once per reference
+      val scored = hold(batch
+        .withColumn("p", graft.ops.Curation.dsirWeightPair(slots)))
+      val routed = scored
+        .withColumn("n_grams", element_at(col("p"), 1))
+        .withColumn("w_micro", element_at(col("p"), 2))
+        .drop("p")
+      routed.filter(col("w_micro") > 0).write.mode("append").parquet(selectedDir)
+      routed.filter(col("w_micro") <= 0).write.mode("append").parquet(rejectedDir)
+    }
   }
 
   /** Continuous temperature-mix ADMISSION (q107 in incremental form):
@@ -1948,20 +1751,12 @@ object Incremental {
     val rates = spark.read.parquet(ratesDir).select(col("lang"), col("thr16"))
     val h16 = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
       .cast("long")
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.join(broadcast(rates), Seq("lang"))
-          .filter(h16 < col("thr16"))
-          .drop("thr16")
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(spark, inDir, schema, checkpointDir) { (batch, _, _) =>
+      batch.join(broadcast(rates), Seq("lang"))
+        .filter(h16 < col("thr16"))
+        .drop("thr16")
+        .write.mode("append").parquet(outDir)
+    }
   }
 
   /** Continuous ANN INGEST (M8 in incremental form — the third persisted-
@@ -1998,22 +1793,25 @@ object Incremental {
     * dir that resolve ignores and the replayed cadence redoes — no
     * startup recovery step, no renames at all (object-store friendly).
     * Codebook drift is the documented limit (periodic offline rebuild
-    * re-centers the cells). */
-  /** `sqDir`: when set, the [[graft.ops.IvfSq]] bandwidth tier is
+    * re-centers the cells).
+    *
+    * `sqDir`: when set, the [[graft.ops.IvfSq]] bandwidth tier is
     * RE-DERIVED after each cadence compaction (same versioned-commit
     * discipline), so the quantized copy tracks the ingested index instead
     * of going stale — the operational answer to IvfSq's derived-artifact
     * note. Between compactions the SQ tier lags by the appended batches
     * (bounded by the cadence), which is the usual serving-index refresh
-    * contract. */
-  /** `rebuildEvery`: every Mth cadence compaction becomes a full
+    * contract.
+    *
+    * `rebuildEvery`: every Mth cadence compaction becomes a full
     * [[graft.ops.IvfIndex.rebuildTo]] — codebook refit on the CURRENT
     * contents, the automated answer to append-drift (the refit sample is
     * bounded, so the extra cost over a plain compaction is one
     * broadcast-sized KMeans fit). Keyed off the checkpointed batchId like
     * the compaction cadence, so a replayed batch re-lands on the same
-    * schedule and rewrites the same version. */
-  /** `pqDir`: when set, the [[graft.ops.IvfPq]] compression tier is
+    * schedule and rewrites the same version.
+    *
+    * `pqDir`: when set, the [[graft.ops.IvfPq]] compression tier is
     * RE-DERIVED after each cadence compaction, exactly like `sqDir`
     * (same versioned commit, same lag bound). Cell means, codebooks, and
     * codes all re-anchor to the raw snapshot just committed; a stale PQ
@@ -2048,53 +1846,45 @@ object Incremental {
           .foreach(p => fs.delete(p, true))
     }
 
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.ops.IvfIndex.append(s, indexDir, batch)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          // version name = batchId → a replayed cadence batch rewrites the
-          // SAME version (deleted first if half-written) — idempotent
-          val v = new org.apache.hadoop.fs.Path(
-            s"$indexDir/$VersionsSubdir/v${"%012d".format(batchId)}")
-          fs.delete(v, true)
-          // every rebuildEvery-th compaction refits the codebook on the
-          // current contents (drift recovery); count is derived from the
-          // checkpointed batchId, so replay is schedule-stable
-          val nthCompaction = (batchId + 1) / compactEvery
-          if (rebuildEvery > 0 && nthCompaction % rebuildEvery == 0)
-            graft.ops.IvfIndex.rebuildTo(s, indexDir, v.toString)
-          else
-            graft.ops.IvfIndex.compactTo(s, indexDir, v.toString)
-          commitAndRetain(indexDir, v)
-          sqDir.foreach { sd =>
-            val sv = new org.apache.hadoop.fs.Path(
-              s"$sd/$VersionsSubdir/v${"%012d".format(batchId)}")
-            fs.delete(sv, true)
-            graft.ops.IvfSq.quantizeTo(s, indexDir, sv.toString)
-            commitAndRetain(sd, sv)
-          }
-          // the PQ tier re-derives on the same cadence and publication
-          // discipline — cell means, codebooks, and codes all anchor to
-          // the raw snapshot just committed (residuals drift with the
-          // codebook, so a stale PQ copy degrades, never misserves: the
-          // exact rerank reads the raw index)
-          pqDir.foreach { pd =>
-            val pv = new org.apache.hadoop.fs.Path(
-              s"$pd/$VersionsSubdir/v${"%012d".format(batchId)}")
-            fs.delete(pv, true)
-            graft.ops.IvfPq.trainTo(s, indexDir, pv.toString)
-            commitAndRetain(pd, pv)
-          }
+    drain(spark, inDir, schema, checkpointDir) { (batch, batchId, _) =>
+      val s = batch.sparkSession
+      graft.ops.IvfIndex.append(s, indexDir, batch)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+        // version name = batchId → a replayed cadence batch rewrites the
+        // SAME version (deleted first if half-written) — idempotent
+        val v = new org.apache.hadoop.fs.Path(
+          s"$indexDir/$VersionsSubdir/v${"%012d".format(batchId)}")
+        fs.delete(v, true)
+        // every rebuildEvery-th compaction refits the codebook on the
+        // current contents (drift recovery); count is derived from the
+        // checkpointed batchId, so replay is schedule-stable
+        val nthCompaction = (batchId + 1) / compactEvery
+        if (rebuildEvery > 0 && nthCompaction % rebuildEvery == 0)
+          graft.ops.IvfIndex.rebuildTo(s, indexDir, v.toString)
+        else
+          graft.ops.IvfIndex.compactTo(s, indexDir, v.toString)
+        commitAndRetain(indexDir, v)
+        sqDir.foreach { sd =>
+          val sv = new org.apache.hadoop.fs.Path(
+            s"$sd/$VersionsSubdir/v${"%012d".format(batchId)}")
+          fs.delete(sv, true)
+          graft.ops.IvfSq.quantizeTo(s, indexDir, sv.toString)
+          commitAndRetain(sd, sv)
         }
-        ()
+        // the PQ tier re-derives on the same cadence and publication
+        // discipline — cell means, codebooks, and codes all anchor to
+        // the raw snapshot just committed (residuals drift with the
+        // codebook, so a stale PQ copy degrades, never misserves: the
+        // exact rerank reads the raw index)
+        pqDir.foreach { pd =>
+          val pv = new org.apache.hadoop.fs.Path(
+            s"$pd/$VersionsSubdir/v${"%012d".format(batchId)}")
+          fs.delete(pv, true)
+          graft.ops.IvfPq.trainTo(s, indexDir, pv.toString)
+          commitAndRetain(pd, pv)
+        }
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   /** Custom stateful streaming operator (§2.9's stateful-ops completion):

@@ -10,68 +10,71 @@ import org.scalatest.funsuite.AnyFunSuite
   * hand-written per maintainer — exactly the per-query gap that let
   * r14's q171 land red. This spec closes the class structurally: it
   * REFLECTS over Incremental's public `continuous*` methods and fails
-  * unless each one is mapped here to (its batch twin, the StreamingSpec
-  * test that asserts the parity), AND each referenced test actually
-  * exists in StreamingSpec. A new maintainer added without a parity
-  * test fails this suite by name; a renamed/deleted parity test fails
-  * it from the other side.
+  * unless each one is mapped here to (its batch kernel, the StreamingSpec
+  * test that asserts the parity), each named kernel exists, AND each
+  * referenced test actually exists in StreamingSpec. A new maintainer
+  * added without a parity test fails this suite by name; a
+  * renamed/deleted parity test or kernel fails it from the other side.
   */
 class MaintainerParitySpec extends AnyFunSuite {
 
-  /** maintainer method -> (batch twin it must reproduce,
-    *                        the StreamingSpec test name asserting it). */
+  /** maintainer method -> (the batch kernel it must reproduce, the
+    * StreamingSpec test name asserting it). The kernel is the member the
+    * maintainer calls ("graft.ops.TextOps.runCollapseKernel") or, where
+    * it runs its own copy of the arithmetic, its batch twin's registered
+    * query ("q110_boilerplate", a [[SparkEntry.queries]] key). */
   private val parity: Map[String, (String, String)] = Map(
-    "continuousFuzzyDedup" -> (("ops.Dedup minhash keep-set (q38)",
+    "continuousFuzzyDedup" -> (("graft.ops.MinHashIndex.query",
       "continuous fuzzy dedup drops near-dups within and across batches")),
-    "continuousSemanticDedup" -> (("ops.Dedup.semanticKeepOf (q103)",
+    "continuousSemanticDedup" -> (("graft.ops.Curation.semanticAdmit",
       "continuous semantic dedup drops near-dup embeddings")),
-    "continuousDecontam" -> (("ops.Dedup bloom decontam (q82)",
+    "continuousDecontam" -> (("q82_bloom_decontam",
       "continuous decontamination quarantines sketch hits")),
-    "continuousBoilerplateScrub" -> (("ops.TextOps boilerplate (q110)",
+    "continuousBoilerplateScrub" -> (("q110_boilerplate",
       "continuous boilerplate scrub equals the batch q110")),
-    "continuousRunCollapse" -> (("ops.TextOps run collapse (q133)",
+    "continuousRunCollapse" -> (("graft.ops.TextOps.runCollapseKernel",
       "continuous run collapse equals the batch q133")),
-    "continuousMediaHash" -> (("ops.Multimodal aHash table (q139)",
+    "continuousMediaHash" -> (("graft.ops.Multimodal.imageAHash",
       "continuous media hashing equals the batch aHash")),
-    "continuousDocEmbed" -> (("ops.Ml SIF pooling over frozen WordVec (q155)",
+    "continuousDocEmbed" -> (("q155_docvec_similar",
       "continuous doc-embed pools the frozen WordVec model")),
-    "continuousDocEmbedRefresh" -> (("ml.WordVec refit + same pooling",
+    "continuousDocEmbedRefresh" -> (("q155_docvec_similar",
       "doc-embed refresh cadence: vocab shift degrades coverage")),
-    "continuousCrossModalDedup" -> (("ops.Multimodal.crossModalNearKeepOf (q144)",
+    "continuousCrossModalDedup" -> (("graft.ops.Multimodal.crossModalNearKeepOf",
       "continuous cross-modal dedup admits on joint")),
-    "continuousPplGateJoined" -> (("ops.Scoring bigram/KN/KN3 folds (q147/q165/q176)",
+    "continuousPplGateJoined" -> (("graft.ops.Scoring.bigramFoldOf",
       "joined ppl gate: stream-static join reproduces q147 AND q165")),
-    "continuousDecontamScrub" -> (("ops.Dedup span scrub (q175)",
+    "continuousDecontamScrub" -> (("graft.ops.Dedup.cleanKernel",
       "decontam scrub maintainer: stream-static join reproduces the q175")),
-    "continuousDiversityMonitor" -> (("ops.Ml.sourceDocvecDiversityOver (q184)",
+    "continuousDiversityMonitor" -> (("q184_source_docvec_diversity",
       "diversity monitor: streamed partial sums fold to the q184")),
-    "continuousGateAgreement" -> (("ops.Scoring kappa kernels (q185)",
+    "continuousGateAgreement" -> (("graft.ops.Scoring.gateCountsOf",
       "gate-agreement monitor folds to the q185")),
-    "continuousMediaGate" -> (("ops.Multimodal media gate (q149)",
+    "continuousMediaGate" -> (("graft.ops.Multimodal.mediaGate",
       "continuous media gate equals the batch q149")),
-    "continuousMediaNearDup" -> (("ml.PhashIndex serve (q140)",
+    "continuousMediaNearDup" -> (("graft.ops.Multimodal.withPhashProbes",
       "continuous media near-dup probe equals the PhashIndex")),
-    "continuousEvalSaturation" -> (("ops.Scoring eval saturation (q117)",
+    "continuousEvalSaturation" -> (("q117_eval_saturation",
       "continuous eval saturation equals batch q117")),
-    "continuousGateFunnel" -> (("ops.Scoring gate funnel (q127)",
+    "continuousGateFunnel" -> (("q127_gate_funnel",
       "continuous gate funnel equals batch q127")),
-    "continuousSemanticDecontam" -> (("ops.Dedup semantic decontam (q111)",
+    "continuousSemanticDecontam" -> (("graft.ops.IvfIndex.searchThreshold",
       "continuous semantic decontam quarantines near-benchmark")),
-    "continuousDsirScoring" -> (("ops.Curation DSIR weights (q105)",
+    "continuousDsirScoring" -> (("graft.ops.Curation.dsirWeightPair",
       "continuous DSIR scoring routes by the persisted model")),
-    "continuousTempMixAdmit" -> (("ops.Curation temperature mix (q183)",
+    "continuousTempMixAdmit" -> (("q107_temp_mix",
       "continuous temp-mix admission matches the batch admit")),
-    "continuousAnnIngest" -> (("ml.IvfIndex serve (q45/q99)",
+    "continuousAnnIngest" -> (("graft.ops.IvfIndex.append",
       "continuous ANN ingest appends micro-batches")),
-    "continuousNoveltyMonitor" -> (("ops.CorpusReports novelty fold (q197)",
+    "continuousNoveltyMonitor" -> (("graft.ops.CorpusReports.gramCountsOf",
       "novelty monitor folds to the q197 kernel's table")),
-    "continuousVocabGrowth" -> (("ops.CorpusReports q200 totals (final curve point)",
+    "continuousVocabGrowth" -> (("q200_heaps_fit",
       "vocab-growth monitor: cumulative curve ends at the batch totals")),
-    "continuousExactNnRef" -> (("ops.Similarity.exactTop3Scored (q201/q207/q208/q209 reference)",
+    "continuousExactNnRef" -> (("graft.ops.Similarity.exactTop3Scored",
       "exact-NN reference maintainer equals the batch exactTop3Scored")),
-    "continuousDistinctMonitor" -> (("plans.KmvDistinct via ops.Relational.mdUniform (q92/q212)",
+    "continuousDistinctMonitor" -> (("graft.ops.Relational.mdUniform",
       "distinct monitor equals the certified kmv_distinct under any split")),
-    "continuousQuantileMonitor" -> (("ops.CorpusReports bottom-k sample kernel (q219)",
+    "continuousQuantileMonitor" -> (("q219_sample_quantile_sweep",
       "quantile monitor equals the batch bottom-k sample under any split")))
 
   test("every continuous* maintainer is mapped to a batch twin + parity test") {
@@ -88,6 +91,20 @@ class MaintainerParitySpec extends AnyFunSuite {
     assert(stale.isEmpty,
       s"registry entries with no matching maintainer (renamed/removed?): " +
         s"${stale.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("every named kernel is a registered query or an existing member") {
+    val queries = SparkEntry.queries.keySet
+    val missing = parity.values.map(_._1).toSeq.distinct.filterNot { k =>
+      if (k.matches("q[0-9]+_.*")) queries.contains(k)
+      else {
+        val (obj, member) = k.splitAt(k.lastIndexOf('.'))
+        scala.util.Try(Class.forName(obj + "$")).toOption
+          .exists(_.getMethods.exists(_.getName == member.drop(1)))
+      }
+    }
+    assert(missing.isEmpty,
+      s"kernels named in the registry that do not exist: ${missing.sorted.mkString(", ")}")
   }
 
   test("every registered parity test exists in StreamingSpec") {

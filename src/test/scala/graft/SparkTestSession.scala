@@ -15,4 +15,11 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Ids of the session's cached RDDs; local checkpoints are deliberate
+    * session pins, not caches. Equal sets before and after a run show
+    * that the run leaked no cache. */
+  def cachedRdds: Set[Int] =
+    get.sparkContext.getPersistentRDDs.values
+      .filterNot(_.isCheckpointed).map(_.id).toSet
 }

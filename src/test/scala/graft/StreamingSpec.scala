@@ -14,6 +14,7 @@ class StreamingSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.get
   import spark.implicits._
+  import SparkTestSession.cachedRdds
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("v", DoubleType)))
@@ -638,6 +639,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(!new java.io.File(out).exists(), "no batch may be served")
   }
 
+  test("writePplModel refuses a corpus with no >= 2-token document and leaks no cached frame") {
+    val model = Files.createTempDirectory("graft-ppl-refused").toString + "/model"
+    // every doc is one token: the fold is empty, so no tercile cut exists
+    val corpus = Seq((0L, "alpha"), (1L, "beta"), (2L, "alpha"))
+      .toDF("doc_id", "text")
+    val before = cachedRdds
+    val ex = intercept[IllegalArgumentException] {
+      Incremental.writePplModel(spark, corpus, model, nBuckets = 2)
+    }
+    assert(ex.getMessage.contains("scorable"), ex.getMessage)
+    assert(cachedRdds == before, s"leaked: ${cachedRdds -- before}")
+  }
+
   test("diversity monitor: streamed partial sums fold to the q184 report (maintainer #20)") {
     val base = Files.createTempDirectory("graft-divmon").toString
     val in = s"$base/in"; val model = s"$base/model"
@@ -1010,6 +1024,28 @@ class StreamingSpec extends AnyFunSuite {
       ((r(1), r(2), r(3), r(5)))).toMap
     assert(byPair("rule_clf") == ((20L, 20L, 10L, 0.0)), byPair.toString)
     corpus.unpersist()
+  }
+
+  test("a maintainer batch that throws fails the stream and leaks no cached frame") {
+    val base = Files.createTempDirectory("graft-batch-leak").toString
+    val in = s"$base/in"; val idx = s"$base/idx"; val out = s"$base/out"
+    new java.io.File(in).mkdirs()
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    val quoted = (1 to 8).map(i => s"e$i").mkString(" ")
+    Incremental.writeEvalGramIndex(spark, Seq((0L, quoted)).toDF("doc_id", "text"),
+      idx, nBuckets = 4)
+    Seq((10L, s"t1 t2 $quoted t3"), (11L, "u1 u2 u3 u4 u5 u6 u7 u8 u9"))
+      .toDF("doc_id", "text").write.parquet(s"$in/b1")
+    // the output path is a plain file: the batch caches its docs and
+    // spans, materializes them for the touched-bucket collect, and only
+    // then fails on the append
+    Files.write(java.nio.file.Paths.get(out), "not a directory".getBytes)
+    val before = cachedRdds
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Incremental.continuousDecontamScrub(spark, s"$in/*", docSchema, idx, out, s"$base/ck")
+    }
+    assert(cachedRdds == before, s"leaked: ${cachedRdds -- before}")
   }
 
   test("decontam scrub maintainer: stream-static join reproduces the q175 batch scrub") {

@@ -373,8 +373,7 @@ class TrainingDataPipelineSpec extends AnyFunSuite {
   }
 
   test("a run that fails mid-funnel releases every stage barrier it cached") {
-    def cachedRdds = spark.sparkContext.getPersistentRDDs.values
-      .filterNot(_.isCheckpointed).map(_.id).toSet
+    import SparkTestSession.cachedRdds
     // no text column: the run fails at decontamination, after the input,
     // checked, validated, gated, ppl_gated and clean barriers are cached
     val noTextEval = Seq(1000L).toDF("doc_id")

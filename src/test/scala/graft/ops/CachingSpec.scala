@@ -14,12 +14,7 @@ class CachingSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkTestSession.get
   import spark.implicits._
-
-  /** Ids of the cached RDDs; local checkpoints are deliberate session
-    * pins, not caches. */
-  private def cachedRdds: Set[Int] =
-    spark.sparkContext.getPersistentRDDs.values
-      .filterNot(_.isCheckpointed).map(_.id).toSet
+  import SparkTestSession.cachedRdds
 
   private def multiset(df: DataFrame): Map[Seq[Any], Int] =
     df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
