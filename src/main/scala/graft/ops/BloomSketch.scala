@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
+
+import graft.functions.TextFns
 
 /** Persistable Bloom sketch over a Long column — the compact, shippable
   * summary behind sketch-side decontamination (q82 batch tier;
@@ -21,6 +24,23 @@ object BloomSketch {
   def build(df: DataFrame, column: String,
       expectedItems: Long = 1L << 16, fpp: Double = 0.01): BloomFilter =
     df.stat.bloomFilter(column, expectedItems, fpp)
+
+  /** The sketch of an eval set's distinct 5-gram hashes (q82's gram kernel). */
+  def ofEvalGrams(evalDocs: DataFrame): BloomFilter =
+    build(evalDocs
+      .select(explode(TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
+      .distinct(), "gh")
+
+  /** The Bloom drop predicate over a row's `text`: the sketch admits one
+    * of its distinct 5-gram hashes. One UDF over the per-doc hash array
+    * (no explode, no shuffle), the sketch broadcast once per call. */
+  def contaminated(spark: SparkSession, sketch: BloomFilter): Column = {
+    val bc = spark.sparkContext.broadcast(sketch)
+    val hit = udf { (ghs: Seq[Long]) =>
+      ghs != null && ghs.exists(bc.value.mightContainLong)
+    }
+    hit(TextFns.distinctGramHashes(col("text"), 5))
+  }
 
   /** Persist as `dir` (1-row parquet, binary column `sketch`). */
   def save(spark: SparkSession, sketch: BloomFilter, dir: String): Unit = {

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -75,23 +76,32 @@ object CorpusReports {
     * Same shared gram kernel as q69 ([[TextFns.distinctGramHashes]]);
     * ratio rounded at 4 like the ANN surface. */
   val q117EvalSaturation: Q = (s, d) => {
-    val sh = Tables.documents(s, d)
-      .select(col("doc_id"),
-        explode(TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
+    val sh = evalGramsOf(Tables.documents(s, d))
       .cache() // both the eval and train branches read it
     val evalG = sh.filter(col("doc_id") < 50)
-    val hits = evalG
-      .join(sh.filter(col("doc_id") >= 50).select(col("gh")), Seq("gh"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
     Caching.materializeAndRelease(
-      evalG.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-        .join(hits, Seq("doc_id"), "left")
-        .na.fill(Map("n_hit" -> 0L))
-        .select(col("doc_id"), col("n_grams"), col("n_hit"),
-          round(col("n_hit") / col("n_grams"), 4).as("saturation"))
-        .orderBy(col("doc_id")),
+      saturationFoldOf(evalG,
+        evalG.join(sh.filter(col("doc_id") >= 50).select(col("gh")), Seq("gh"), "left_semi")),
       sh)
   }
+
+  /** (doc_id, gh): each doc's distinct 5-gram hashes (q117's gram rows). */
+  private[graft] def evalGramsOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      explode(TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
+
+  /** The q117 fold: per eval doc of `evalG` (doc_id, gh), its gram count,
+    * its count of distinct `hits` (doc_id, gh) pairs and their ratio —
+    * shared with [[graft.streaming.Incremental.evalSaturationReport]]. */
+  private[graft] def saturationFoldOf(evalG: DataFrame,
+      hits: DataFrame): DataFrame =
+    evalG.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
+      .join(hits.groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit")),
+        Seq("doc_id"), "left")
+      .na.fill(Map("n_hit" -> 0L))
+      .select(col("doc_id"), col("n_grams"), col("n_hit"),
+        round(col("n_hit") / col("n_grams"), 4).as("saturation"))
+      .orderBy(col("doc_id"))
 
   /** Cross-source duplication matrix: for every source pair, how many
     * exact-content fingerprints they share — the feed-provenance report
@@ -164,11 +174,7 @@ object CorpusReports {
       .agg(sum(col("nt")).cast("long").as("n_tok"),
         sum(when(col("doc_id") <= col("cut"), col("nt")).otherwise(0L))
           .cast("long").as("n_tok_half"))
-    val vv = docs
-      .select(col("source"), col("doc_id"),
-        explode(TextFns.tokens(col("text"))).as("term"))
-      .groupBy(col("source"), col("term"))
-      .agg(min(col("doc_id")).as("first_doc"))
+    val vv = sourceTermsOf(docs)
       .join(med, Seq("source"))
       .groupBy(col("source"))
       .agg(count(lit(1)).cast("long").as("v_full"),
@@ -183,6 +189,16 @@ object CorpusReports {
           .as("heaps_beta"))
       .orderBy(col("source"))
   }
+
+  /** The q200 per-(source, term) fold over `TextFns.tokens`: occurrence
+    * count `n` and first `doc_id` (the vocabulary-growth monitor folds
+    * each micro-batch through it). */
+  private[graft] def sourceTermsOf(docs: DataFrame): DataFrame =
+    docs
+      .select(col("source"), col("doc_id"),
+        explode(TextFns.tokens(col("text"))).as("term"))
+      .groupBy(col("source"), col("term"))
+      .agg(count(lit(1)).as("n"), min(col("doc_id")).as("first_doc"))
 
   /** q197: 4-GRAM NOVELTY per source — the template-farm detector one
     * level below q180's burstiness: total 4-gram occurrences, distinct
@@ -602,13 +618,9 @@ object CorpusReports {
     * prices k for the streaming tier. One ranked pass at max(k) feeds
     * every cut (the prefix doctrine). */
   val q219SampleQuantileSweep: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(s, d)
-      .select(col("source"), col("doc_id"), col("n_chars"),
-        Relational.mdUniform(col("doc_id")).as("u"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("source")).orderBy(col("u"), col("doc_id"))))
-      .filter(col("rn") <= SweepSampleKs.max)
+    val docs = sampleBottomKOf(Tables.documents(s, d)
+        .select(col("source"), col("doc_id"), col("n_chars"),
+          Relational.mdUniform(col("doc_id")).as("u")), SweepSampleKs.max)
       .cache()
     val exact = Tables.documents(s, d).groupBy(col("source"))
       .agg(expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY n_chars)")
@@ -631,6 +643,15 @@ object CorpusReports {
       docs)
   }
 
+  /** The q219 sample window: per source, the rows ranked `rn` ≤ k by
+    * (u, doc_id). Bottom-k is mergeable, so the quantile monitor runs it
+    * on each batch and on each state merge. */
+  private[graft] def sampleBottomKOf(df: DataFrame, k: Int): DataFrame =
+    df.withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col("source")).orderBy(col("u"), col("doc_id"))))
+      .filter(col("rn") <= k)
+
   /** Gate-funnel (loss accounting) report: per source, the document counts
     * surviving each stage of the standard curation cascade — raw → rule
     * gate (the q97-certified predicate) → exact dedup among gate
@@ -649,39 +670,55 @@ object CorpusReports {
   /** The funnel over an arbitrary (doc_id, source, text) frame — the unit
     * tests plant gate-failures / clones / contaminated docs against it.
     * Eval split = doc_id < 50 (the q69 convention). */
-  private[graft] def gateFunnelOf(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val train = docs.filter(col("doc_id") >= 50)
-      .select(col("doc_id"), col("source"), col("text"),
-        TextOps.ruleGateKeep().as("keep_gate"),
-        TextFns.fingerprint(col("text")).as("fp"))
-      .cache()
-    val canon = train.filter(col("keep_gate"))
-      .groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id"))
-    val evalVocab = docs.filter(col("doc_id") < 50)
-      .select(explode(TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
-      .distinct()
-    val contam = train.filter(col("keep_gate"))
-      .select(col("doc_id"), explode(TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
-      .join(evalVocab, Seq("gh"), "left_semi")
-      .select(col("doc_id")).distinct()
-      .withColumn("contaminated", lit(true))
-    val isCanon = col("keep_gate") && col("doc_id") === col("keep_id")
+  private[graft] def gateFunnelOf(docs: DataFrame): DataFrame = {
+    val train = gateColumnsOf(docs.filter(col("doc_id") >= 50)).cache()
     Caching.materializeAndRelease(
-      train
-        .join(canon, Seq("fp"), "left")
-        .join(contam, Seq("doc_id"), "left")
-        .withColumn("s1", col("keep_gate").cast("long"))
-        .withColumn("s2", isCanon.cast("long"))
-        .withColumn("s3", (isCanon && !coalesce(col("contaminated"), lit(false))).cast("long"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_raw"),
-          sum(col("s1")).cast("long").as("n_gate"),
-          sum(col("s2")).cast("long").as("n_dedup"),
-          sum(col("s3")).cast("long").as("n_clean"))
-        .orderBy(col("source")),
+      gateFunnelFoldOf(gateFlagsOf(train, docs.filter(col("doc_id") < 50), None)),
       train)
   }
+
+  /** (doc_id, source, text, keep_gate, fp): the rule-gate verdict and the
+    * exact-dedup fingerprint the q127 cascade reads. */
+  private[graft] def gateColumnsOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"), col("text"),
+      TextOps.ruleGateKeep().as("keep_gate"),
+      TextFns.fingerprint(col("text")).as("fp"))
+
+  /** The q127 per-doc flags (doc_id, source, fp, s1, s2, s3) over
+    * [[gateColumnsOf]] rows: s1 = passes the rule gate; s2 = also the
+    * min-doc_id survivor of its fingerprint, which is not in `seen` (fp);
+    * s3 = also shares no 5-gram with `evalDocs`. The streaming funnel
+    * ([[graft.streaming.Incremental.continuousGateFunnel]]) runs it per
+    * micro-batch with its persisted fingerprints as `seen`. */
+  private[graft] def gateFlagsOf(train: DataFrame, evalDocs: DataFrame,
+      seen: Option[DataFrame]): DataFrame = {
+    val canon = train.filter(col("keep_gate"))
+      .groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id"))
+    val contam = evalGramsOf(train.filter(col("keep_gate")))
+      .join(evalGramsOf(evalDocs).select(col("gh")).distinct(), Seq("gh"), "left_semi")
+      .select(col("doc_id")).distinct()
+      .withColumn("contaminated", lit(true))
+    val known = seen.map(_.select(col("fp")).distinct().withColumn("seen", lit(true)))
+    val isCanon = col("keep_gate") && col("doc_id") === col("keep_id") &&
+      known.fold(lit(true))(_ => !coalesce(col("seen"), lit(false)))
+    val canonical = train.join(canon, Seq("fp"), "left")
+    known.fold(canonical)(canonical.join(_, Seq("fp"), "left"))
+      .join(contam, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("source"), col("fp"),
+        col("keep_gate").cast("long").as("s1"),
+        isCanon.cast("long").as("s2"),
+        (isCanon && !coalesce(col("contaminated"), lit(false))).cast("long").as("s3"))
+  }
+
+  /** The q127 per-source fold of (source, s1, s2, s3) flag rows, shared
+    * with [[graft.streaming.Incremental.gateFunnelReport]]. */
+  private[graft] def gateFunnelFoldOf(flags: DataFrame): DataFrame =
+    flags.groupBy(col("source"))
+      .agg(count(lit(1)).as("n_raw"),
+        sum(col("s1")).cast("long").as("n_gate"),
+        sum(col("s2")).cast("long").as("n_dedup"),
+        sum(col("s3")).cast("long").as("n_clean"))
+      .orderBy(col("source"))
 
   /** q150: the DATA CARD — the one-table release report a dataset ships
     * with (per source: volume, exact-dup rate, mean heuristic quality,

@@ -730,12 +730,10 @@ object Curation {
     * exported, the q101/q105 model-artifact pattern. */
   val q107TempMix: Q = (s, d) => {
     val rates = tempMix(s, d).select(col("lang"), col("thr16"))
-    val h16 = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-      .cast("long")
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), TextFns.tokenCount(col("text")).as("ntoks"))
       .join(broadcast(rates), Seq("lang"))
-      .withColumn("admitted", (h16 < col("thr16")).cast("long"))
+      .withColumn("admitted", tempMixAdmit.cast("long"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("ntoks")).cast("long").as("tokens_in"),
@@ -743,6 +741,15 @@ object Curation {
         sum(col("ntoks") * col("admitted")).cast("long").as("tokens_kept"))
       .orderBy(col("lang"))
   }
+
+  /** The q107 admit decision of a row joined to its language's rate: the
+    * md5-prefix integer of `doc_id` under `thr16` — deterministic per
+    * document, so the batch report and the streaming admission
+    * ([[graft.streaming.Incremental.continuousTempMixAdmit]]) decide
+    * identically. */
+  private[graft] val tempMixAdmit: Column =
+    conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
+      .cast("long") < col("thr16")
 
   // ---------------------------------------------------------------- q108
 

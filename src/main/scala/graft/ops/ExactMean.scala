@@ -55,8 +55,9 @@ import org.apache.spark.sql.functions._
   * 4)` over CONTINUOUS embedding components (|x| ≤ 1 by the unit-norm /
   * bounded-feature invariants); the q42 certification precedent, also
   * q182 (`Similarity.diversityOf`), q203 (label/global component
-  * means), q155's doc-vector pooling (`ops/Ml`), q184's source
-  * diversity fold (`ops/Ml`). Order-dependent in the last ulps; round-4
+  * means), and two sum/count means of the same class: q155's
+  * doc-vector pooling (`Ml.meanPoolOf`) and q184's source diversity
+  * fold (`Ml.diversityFold`). Order-dependent in the last ulps; round-4
   * absorbs it because the mean error of summing n bounded components is
   * ≲ n·ε — at the oracle's scale ≈ 1e-12, and even at 1e9-row groups
   * ≈ 1e-7 against a 5e-5 boundary half-width (a <0.2 % worst-case

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,15 +51,39 @@ object IvfIndex {
     * its files and needs a plain retry). Uncommitted version dirs (crash
     * mid-compaction) are ignored and redone on replay. */
   def resolve(spark: SparkSession, dir: String): String = {
-    val vroot = new org.apache.hadoop.fs.Path(dir, VersionsSubdir)
-    val fs = vroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(vroot)) dir
-    else {
-      val committed = fs.listStatus(vroot).filter(_.isDirectory).map(_.getPath)
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, CommitMarker)))
-        .sortBy(_.getName)
-      if (committed.isEmpty) dir else committed.last.toString
-    }
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    committedVersions(fs, dir).lastOption.fold(dir)(_.toString)
+  }
+
+  /** The committed `root/versions/v*` dirs, oldest first (empty when
+    * `root` has no versions dir yet) — the one listing under [[resolve]]
+    * and every versioned maintainer. */
+  private[graft] def committedVersions(fs: FileSystem, root: String): Seq[Path] = {
+    val vroot = new Path(root, VersionsSubdir)
+    if (!fs.exists(vroot)) Seq.empty
+    else fs.listStatus(vroot).filter(_.isDirectory).map(_.getPath)
+      .filter(p => fs.exists(new Path(p, CommitMarker)))
+      .sortBy(_.getName).toSeq
+  }
+
+  /** The version dir a maintenance cadence at `batchId` writes under
+    * `root` — named by the checkpointed batchId, so a replayed cadence
+    * rewrites the same version. */
+  private[graft] def versionPath(root: String, batchId: Long): Path =
+    new Path(s"$root/$VersionsSubdir/v${"%012d".format(batchId)}")
+
+  /** Commits the freshly written `version` under `root` (its
+    * [[CommitMarker]] create is the publish point), then reclaims every
+    * committed version older than the PREVIOUS one, which stays a full
+    * cadence for in-flight readers. Returns the committed versions as
+    * listed after the commit, the reclaimed ones included. */
+  private[graft] def commitAndRetain(fs: FileSystem, root: String,
+      version: Path): Seq[Path] = {
+    val marker = new Path(version, CommitMarker)
+    require(fs.createNewFile(marker) || fs.exists(marker), s"failed to commit $version")
+    val committed = committedVersions(fs, root)
+    committed.dropRight(2).foreach(fs.delete(_, true))
+    committed
   }
 
   /** Shared by every "absent artifact is a normal state" probe (index
@@ -211,7 +236,7 @@ object IvfIndex {
       (centroids, readMetaReplicas(spark, d).getOrElse(1))
     }
     val sig = try {
-      val p = new org.apache.hadoop.fs.Path(s"$d/centroids")
+      val p = new Path(s"$d/centroids")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.listStatus(p).map(st =>
         s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ml.{Embed, Topics}
@@ -152,12 +152,13 @@ object Ml {
     val wv = graft.ml.WordVec.fitted(s, d)
     val dvecs = graft.Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(graft.functions.TextFns.tokens(col("text"))).as("word"))
+        posexplode(graft.functions.TextFns.tokens(col("text"))).as(Seq("pos", "word")))
       .join(broadcast(wv), Seq("word"))
-      .select(col("doc_id"), posexplode(col("vec")).as(Seq("i", "x")))
-      .groupBy(col("doc_id"), col("i")).agg(avg(col("x")).as("x")) // float-mean: precedent
       .groupBy(col("doc_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(i, x))), s -> s.x)").as("dv"))
+      .agg(array_sort(collect_list(struct(col("pos"), col("vec")))).as("pv"))
+      .select(col("doc_id"), transform(col("pv"), _.getField("vec")).as("vs"))
+      .select(col("doc_id"),
+        meanPoolOf(col("vs"), size(element_at(col("vs"), 1))).getField("dvec").as("dv"))
       .withColumn("nrm", sqrt(expr(
         "aggregate(zip_with(dv, dv, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")))
       .filter(col("nrm") > 0.0)
@@ -178,6 +179,18 @@ object Ml {
           col("cos"))
         .orderBy(col("probe_id"), col("rank")),
       dvecs)
+  }
+
+  /** The q155 pooling of one doc's in-model token vectors `vs`
+    * (array<array<double>>, token order): struct(dvec = their mean over
+    * `dim` components, n_known = how many); no vector pools to zeros.
+    * Shared with the streaming embedders. */
+  private[graft] def meanPoolOf(vs: Column, dim: Column): Column = {
+    val n = size(vs)
+    val total = aggregate(vs, array_repeat(lit(0.0), dim),
+      (acc, v) => zip_with(acc, v, _ + _))
+    struct(transform(total, _ / greatest(n, lit(1))).as("dvec"),
+      n.cast("long").as("n_known"))
   }
 
   /** q161: SIF-weighted document embeddings (Arora, Liang & Ma 2017,
@@ -264,22 +277,30 @@ object Ml {
     // in-model word, and SIF weights are only ever read for in-model words.
     val tfm = tf.join(broadcast(wv), Seq("word"))
     val freq = tfm.groupBy(col("word")).agg(count(lit(1)).as("n"))
-    val dvecs = tfm
-      .join(broadcast(freq), Seq("word"))
-      .crossJoin(broadcast(tot))
-      .select(col("doc_id"),
-        (lit(0.001) / (lit(0.001) + col("n") / col("t"))).as("wt"),
-        posexplode(col("vec")).as(Seq("i", "x")))
-      .groupBy(col("doc_id"), col("i"))
+    val dvecs = sifPoolOf(
+        tfm.join(broadcast(freq), Seq("word")).crossJoin(broadcast(tot)),
+        Seq("doc_id"), col("t"))
+      .cache()
+    (dvecs, tf)
+  }
+
+  /** The q161 SIF pooling of token rows carrying the word's `vec` and
+    * corpus count `n` (corpus total `tot`): per `keys` group, dv = the
+    * mean of a/(a + n/tot)·vec (a = 1e-3) and its norm `nrm`; zero
+    * vectors drop. Shared with the streaming diversity monitor. */
+  private[graft] def sifPoolOf(tokVecs: DataFrame,
+      keys: Seq[String], tot: Column): DataFrame =
+    tokVecs
+      .select(keys.map(col) ++ Seq(
+        (lit(0.001) / (lit(0.001) + col("n") / tot)).as("wt"),
+        posexplode(col("vec")).as(Seq("i", "x"))): _*)
+      .groupBy((keys :+ "i").map(col): _*)
       .agg((sum(col("wt") * col("x")) / count(lit(1))).as("x"))
-      .groupBy(col("doc_id"))
+      .groupBy(keys.map(col): _*)
       .agg(expr("transform(array_sort(collect_list(struct(i, x))), s -> s.x)").as("dv"))
       .withColumn("nrm", sqrt(expr(
         "aggregate(zip_with(dv, dv, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")))
       .filter(col("nrm") > 0.0)
-      .cache()
-    (dvecs, tf)
-  }
 
   /** q184: per-SOURCE diversity of the TRAINED doc embeddings — the q182
     * collapse diagnostic pointed at the corpus itself: for each source,
@@ -314,16 +335,27 @@ object Ml {
       dvecs, tf)
   }
 
-  /** The per-source ‖mean-unit-vector‖² fold over a (doc_id, dv, nrm)
-    * table — one definition under both the artifact and live paths. */
-  private def diversityFoldOf(dvecs: org.apache.spark.sql.DataFrame,
-      src: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  /** The per-source ‖mean-unit-vector‖² over a (doc_id, dv, nrm) table
+    * and its (doc_id, source) map: the fold of one partial. */
+  private def diversityFoldOf(dvecs: DataFrame,
+      src: DataFrame): DataFrame =
+    diversityFold(diversityPartialOf(dvecs.join(src, Seq("doc_id"))))
+
+  /** The q184 partial of (source, dv, nrm) rows: per (source, pos), the
+    * unit-component sum `s_u` and doc count `n`. */
+  private[graft] def diversityPartialOf(dvecs: DataFrame): DataFrame =
     dvecs
-      .join(src, Seq("doc_id"))
       .select(col("source"), col("nrm"), posexplode(col("dv")).as(Seq("pos", "x")))
       .select(col("source"), col("pos"), (col("x") / col("nrm")).as("u"))
       .groupBy(col("source"), col("pos"))
-      .agg(avg(col("u")).as("c"), count(lit(1)).as("n")) // float-mean: precedent
+      .agg(sum(col("u")).as("s_u"), count(lit(1)).as("n"))
+
+  /** The q184 fold of (source, pos, s_u, n) partials → (source, n_docs,
+    * diversity = 1 − ‖Σu/n‖²), shared with the streaming report. */
+  private[graft] def diversityFold(partials: DataFrame): DataFrame =
+    partials
+      .groupBy(col("source"), col("pos"))
+      .agg((sum(col("s_u")) / sum(col("n"))).as("c"), sum(col("n")).as("n"))
       .groupBy(col("source"))
       .agg(max(col("n")).cast("long").as("n_docs"),
         round(lit(1.0) - sum(col("c") * col("c")), 4).as("diversity"))

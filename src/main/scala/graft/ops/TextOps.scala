@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -782,14 +782,42 @@ object TextOps {
       collapsed)
   }
 
+  /** The word trigrams of a ≥ 3-token `toks` array, by start position. */
+  private val trigrams: Column = expr("transform(sequence(0, size(toks)-3), " +
+    "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")
+
   /** Positioned trigram rows of a tokenized corpus — shared by the scrub
     * and the gram-set export. */
   private def gramRowsOf(docs: DataFrame): DataFrame =
     docs.filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), posexplode(expr(
-        "transform(sequence(0, size(toks)-3), " +
-          "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"))
-        .as(Seq("pos", "gram")))
+      .select(col("doc_id"), posexplode(trigrams).as(Seq("pos", "gram")))
+
+  /** The q110 row step over (doc_id, toks, cov): drop the token positions
+    * in `cov` (null = none), reassemble in order → (doc_id, n_tokens,
+    * n_dropped, clean_text); null `toks` gives null counts and "". */
+  private def scrubRowsOf(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("cov", coalesce(col("cov"), typedLit(Array.empty[Int])))
+      .withColumn("clean",
+        filter(col("toks"), (_, i) => !array_contains(col("cov"), i)))
+      .select(col("doc_id"),
+        size(col("toks")).cast("long").as("n_tokens"),
+        (size(col("toks")) - size(col("clean"))).cast("long").as("n_dropped"),
+        concat_ws(" ", col("clean")).as("clean_text"))
+
+  /** The q110 scrub of (doc_id, text) rows under a FROZEN gram set
+    * ([[boilerplateGramsOf]]'s fit): the batch scrub's tokens, trigrams
+    * and row step, with coverage probed per row from the set — a narrow
+    * map, so the streaming twin's append file sink takes it. */
+  private[graft] def boilerplateScrubUnder(grams: Seq[String])(input: DataFrame): DataFrame = {
+    val starts = filter(
+      transform(trigrams, (g, i) => when(g.isin(grams: _*), i).otherwise(lit(-1))),
+      _ >= 0)
+    scrubRowsOf(input
+      .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
+      .withColumn("cov", when(size(col("toks")) >= 3,
+        flatten(transform(starts, p => array(p, p + 1, p + 2))))))
+  }
 
   /** The qualifying boilerplate grams (df·100 ≥ N, integer math). */
   private def boilerOf(grams: DataFrame, nDocs: Long): DataFrame =
@@ -824,15 +852,7 @@ object TextOps {
         explode(array(col("pos"), col("pos") + 1, col("pos") + 2)).as("cp"))
       .groupBy(col("doc_id")).agg(collect_set(col("cp")).as("cov"))
     Caching.materializeAndRelease(
-      docs.join(cov, Seq("doc_id"), "left")
-        .withColumn("cov", coalesce(col("cov"), typedLit(Array.empty[Int])))
-        .withColumn("clean",
-          filter(col("toks"), (_, i) => !array_contains(col("cov"), i)))
-        .select(col("doc_id"),
-          size(col("toks")).cast("long").as("n_tokens"),
-          (size(col("toks")) - size(col("clean"))).cast("long").as("n_dropped"),
-          concat_ws(" ", col("clean")).as("clean_text"))
-        .orderBy(col("doc_id")),
+      scrubRowsOf(docs.join(cov, Seq("doc_id"), "left")).orderBy(col("doc_id")),
       docs)
   }
 

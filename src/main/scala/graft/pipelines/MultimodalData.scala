@@ -232,15 +232,8 @@ object MultimodalData {
     val ((nDecontaminated, decontaminated), tDecontaminated) = timed(evalDocs match {
       case None => (nCanonical, canonical)
       case Some(ev) =>
-        val evalGrams = ev
-          .select(explode(TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
-          .distinct()
-        val sketch = BloomSketch.build(evalGrams, "gh")
-        val bc = spark.sparkContext.broadcast(sketch)
-        val contaminated = udf { (ghs: Seq[Long]) =>
-          ghs != null && ghs.exists(bc.value.mightContainLong)
-        }
-        barrier(canonical.filter(!contaminated(TextFns.distinctGramHashes(col("text"), 5))))
+        barrier(canonical.filter(
+          !BloomSketch.contaminated(spark, BloomSketch.ofEvalGrams(ev))))
     })
 
     // 5. weighted mixing (q83 semantics) + sharded export; flat 1-copy

@@ -227,15 +227,7 @@ object TrainingData {
     // the doc (q175)
     val ((nDecontaminated, decontaminated), tDecontaminated) = timed(barrier(decontam match {
       case "drop" =>
-        val evalGrams = evalDocs
-          .select(explode(TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
-          .distinct()
-        val sketch = BloomSketch.build(evalGrams, "gh")
-        val bc = spark.sparkContext.broadcast(sketch)
-        val contaminated = udf { (ghs: Seq[Long]) =>
-          ghs != null && ghs.exists(bc.value.mightContainLong)
-        }
-        clean.filter(!contaminated(TextFns.distinctGramHashes(col("text"), 5)))
+        clean.filter(!BloomSketch.contaminated(spark, BloomSketch.ofEvalGrams(evalDocs)))
       case _ =>
         // span scrub (q175's kernels, maintainer #19's batch twin): cut
         // the 8-token spans shared with the eval set, keep the rest of

@@ -265,21 +265,18 @@ object Incremental {
     * NEVER reach the clean output; ~fpp of clean documents quarantine
     * spuriously, the conservative trade a streaming gate wants (the exact
     * batch tier, q82's verify join, re-checks quarantine offline). The
-    * probe is one UDF over the per-doc gram-hash array — no explode, no
-    * shuffle: a pure scan pass per batch, with the fixed-size sketch
-    * broadcast once. Exactly-once per input file via the checkpoint. */
+    * probe is the pipelines' Bloom drop predicate
+    * ([[graft.ops.BloomSketch.contaminated]]) — no explode, no shuffle: a
+    * pure scan pass per batch, with the fixed-size sketch broadcast once.
+    * Exactly-once per input file via the checkpoint. */
   def continuousDecontam(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, cleanDir: String,
       quarantineDir: String, sketchDir: String,
       checkpointDir: String): StreamingQuery = {
-    val sketch = graft.ops.BloomSketch.load(spark, sketchDir)
-    val bc = spark.sparkContext.broadcast(sketch)
-    val hit = udf { (ghs: Seq[Long]) =>
-      ghs != null && ghs.exists(bc.value.mightContainLong)
-    }
+    val contaminated = graft.ops.BloomSketch.contaminated(spark,
+      graft.ops.BloomSketch.load(spark, sketchDir))
     drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
-      val flagged = hold(batch.withColumn("contaminated",
-        hit(graft.functions.TextFns.distinctGramHashes(col("text"), 5))))
+      val flagged = hold(batch.withColumn("contaminated", contaminated))
       flagged.filter(!col("contaminated")).drop("contaminated")
         .write.mode("append").parquet(cleanDir)
       flagged.filter(col("contaminated")).drop("contaminated")
@@ -294,56 +291,19 @@ object Incremental {
     * a corpus-global statistic, so the stream serves a batch fit rather
     * than re-estimating per batch (the DSIR frozen-model discipline).
     * The set is bounded by construction (≤ grams-per-doc / df-fraction,
-    * corpus-size independent), broadcast once; the per-batch work is one
-    * tokenize + hash-probe + rebuild kernel pass — no explode, no
-    * shuffle, throughput scan-bound regardless of corpus history. The
-    * kernel mirrors the batch scrub exactly (same normalization, same
-    * trigram coverage, order-preserving reassembly): stream output on a
-    * corpus equals the batch q110 output given the same gram set, which
-    * StreamingSpec asserts row-for-row. Exactly-once per input file via
-    * the checkpoint. */
+    * corpus-size independent) and read once. The per-batch work is the
+    * q110 row kernel ([[graft.ops.TextOps.boilerplateScrubUnder]]: the
+    * batch scrub's tokens, trigrams and reassembly, coverage by a set
+    * probe) — no explode, no shuffle, so the append file sink takes it.
+    * Stream output on a corpus equals the batch q110 output given the
+    * same gram set, null text included, which StreamingSpec asserts row
+    * for row. Exactly-once per input file via the checkpoint. */
   def continuousBoilerplateScrub(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, outDir: String,
       gramsDir: String, checkpointDir: String): StreamingQuery = {
-    val grams = spark.read.parquet(gramsDir)
-      .select("gram").collect().map(_.getString(0)).toSet
-    val bc = spark.sparkContext.broadcast(grams)
-    val scrub = udf { (text: String) =>
-      if (text == null) null
-      else {
-        val toks = graft.functions.TextFns.normTextJvm(text).split(" ")
-        val covered = new Array[Boolean](toks.length)
-        var i = 0
-        while (i + 3 <= toks.length) {
-          if (bc.value.contains(toks(i) + " " + toks(i + 1) + " " + toks(i + 2))) {
-            covered(i) = true; covered(i + 1) = true; covered(i + 2) = true
-          }
-          i += 1
-        }
-        val kept = new StringBuilder
-        var nDrop = 0L
-        var j = 0
-        while (j < toks.length) {
-          if (covered(j)) nDrop += 1
-          else {
-            if (kept.nonEmpty) kept.append(' ')
-            kept.append(toks(j))
-          }
-          j += 1
-        }
-        (toks.length.toLong, nDrop, kept.toString)
-      }
-    }
-    runOnce(spark, inDir, schema, outDir, checkpointDir) { df =>
-      // null text mirrors the batch kernel exactly: size(null) is null
-      // under Spark's default sizeOfNull, so n_tokens/n_dropped are null
-      // and concat_ws renders clean_text as "" — the stream/batch
-      // row-equality contract covers the null row too (spec-planted)
-      df.withColumn("s", when(col("text").isNotNull, scrub(col("text"))))
-        .select(col("doc_id"), col("s._1").as("n_tokens"),
-          col("s._2").as("n_dropped"),
-          coalesce(col("s._3"), lit("")).as("clean_text"))
-    }
+    val grams = spark.read.parquet(gramsDir).select("gram").collect().map(_.getString(0)).toSeq
+    runOnce(spark, inDir, schema, outDir, checkpointDir)(
+      graft.ops.TextOps.boilerplateScrubUnder(grams))
   }
 
   /** Continuous in-document repetition scrub — the streaming twin of q133
@@ -378,56 +338,41 @@ object Incremental {
     runOnce(spark, inDir, schema, outDir, checkpointDir)(
       graft.ops.Multimodal.imageAHash(_))
 
-  /** The q155 pooling (token-instance mean, OOV dropped) as a per-row
-    * JVM kernel over a broadcast word→vector map — ONE copy shared by the
-    * frozen-model maintainer and the refreshing one, so the two serving
-    * modes cannot drift. */
+  /** The q155 pooling ([[graft.ops.Ml.meanPoolOf]]) of (doc_id, text)
+    * rows under a broadcast word→vector map: (doc_id, dvec, n_known) —
+    * ONE copy shared by the frozen-model maintainer and the refreshing
+    * one. The map lookup is the only per-row JVM code: the append file
+    * sink forbids the batch twin's join-and-group. */
   private def poolDocs(df: DataFrame,
       bc: org.apache.spark.broadcast.Broadcast[Map[String, Array[Double]]],
       dim: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val toks =
-            if (text == null) Array.empty[String]
-            else graft.functions.TextFns.normTextJvm(text)
-              .split(" ").filter(_.nonEmpty)
-          val sum = new Array[Double](dim)
-          var n = 0
-          toks.foreach { t =>
-            bc.value.get(t).foreach { v =>
-              var i = 0
-              while (i < dim) { sum(i) += v(i); i += 1 }
-              n += 1
-            }
-          }
-          if (n > 0) { var i = 0; while (i < dim) { sum(i) /= n; i += 1 } }
-          (id, sum.toSeq, n.toLong)
-        }
-      }.toDF("doc_id", "dvec", "n_known")
+    val known = udf { (toks: Seq[String]) =>
+      if (toks == null) Seq.empty[Array[Double]] else toks.flatMap(bc.value.get)
+    }
+    df.select(col("doc_id"), graft.ops.Ml.meanPoolOf(
+        known(graft.functions.TextFns.tokens(col("text"))), lit(dim)).as("p"))
+      .select(col("doc_id"), col("p.dvec").as("dvec"), col("p.n_known").as("n_known"))
   }
+
+  /** A (word, vec) model table as the driver-side map [[poolDocs]] broadcasts. */
+  private def vecMapOf(wordVecs: DataFrame): Map[String, Array[Double]] =
+    wordVecs.select(col("word"), col("vec")).collect()
+      .map(r => r.getString(0) -> r.getSeq[Double](1).toArray).toMap
 
   /** Continuous document EMBEDDING under a FROZEN trained model — model
     * INFERENCE riding the ingest (the continuousAnnIngest maintainer
     * routes vectors into the index; this one PRODUCES them): each
     * incoming document pools the [[graft.ml.WordVec]] vectors of its
-    * tokens (token-instance mean, OOV dropped — q155's pooling, as a
-    * per-row JVM kernel over the broadcast word→vector map, so the
-    * whole stage is a stateless narrow map: no explode, no aggregation,
-    * streaming-legal as-is). The model is trained once in batch and
-    * broadcast (vocab-bounded driver state — the DSIR frozen-model
-    * discipline); per-batch cost is tokenize + hash lookups. Emits
-    * (doc_id, dvec, n_known); n_known = 0 rows carry a zero vector for
-    * downstream quarantine. Exactly-once per input file. */
+    * tokens through q155's pooling ([[poolDocs]]), a stateless narrow
+    * map: no explode, no aggregation, streaming-legal as-is. The model is
+    * trained once in batch and broadcast (vocab-bounded driver state —
+    * the DSIR frozen-model discipline); per-batch cost is tokenize + hash
+    * lookups. Emits (doc_id, dvec, n_known); n_known = 0 rows carry a
+    * zero vector for downstream quarantine. Exactly-once per input file. */
   def continuousDocEmbed(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType, wordVecs: DataFrame,
       outDir: String, checkpointDir: String): StreamingQuery = {
-    import spark.implicits._
-    val vecMap: Map[String, Array[Double]] = wordVecs
-      .select(col("word"), col("vec")).as[(String, Seq[Double])]
-      .collect().map { case (w, v) => w -> v.toArray }.toMap
+    val vecMap = vecMapOf(wordVecs)
     val dim = vecMap.headOption.map(_._2.length).getOrElse(0)
     val bc = spark.sparkContext.broadcast(vecMap)
     runOnce(spark, inDir, schema, outDir, checkpointDir)(poolDocs(_, bc, dim))
@@ -438,18 +383,18 @@ object Incremental {
     * ingest degrades pooling coverage — new words are OOV under the old
     * model — until a refit sees them): every `refitEvery`-th batch
     * refits [[graft.ml.WordVec]] on EVERYTHING ingested so far and
-    * publishes it under the [[graft.ops.IvfIndex.rebuildTo]] versioned-
-    * commit discipline (version dir named by the checkpointed batchId —
-    * idempotent under replay; COMMITTED marker; previous version retained
-    * one full cadence for in-flight readers; a restart resolves the
-    * highest committed version, so the serving model survives the
-    * process). Rows embedded between refits serve the current committed
-    * model — the bounded-lag contract every serving tier here shares
-    * (the SQ/PQ re-derivation note) — and each output row carries
-    * `model_v` so downstream can re-embed stale rows after a refresh.
-    * Exactly-once: each batch writes `outDir/batch=<id>` with overwrite —
-    * a replayed batch rewrites the same path (and re-lands on the same
-    * refit schedule, rewriting the same version dir).
+    * publishes it under the versioned commit of
+    * [[graft.ops.IvfIndex.commitAndRetain]] (version dir named by the
+    * checkpointed batchId — idempotent under replay; COMMITTED marker;
+    * previous version retained one full cadence for in-flight readers; a
+    * restart resolves the highest committed version, so the serving
+    * model survives the process). Rows embedded between refits serve the
+    * current committed model — the bounded-lag contract every serving
+    * tier here shares (the SQ/PQ re-derivation note) — and each output
+    * row carries `model_v` so downstream can re-embed stale rows after a
+    * refresh. Exactly-once: each batch writes `outDir/batch=<id>` with
+    * overwrite — a replayed batch rewrites the same path (and re-lands on
+    * the same refit schedule, rewriting the same version dir).
     *
     * Scale shape: per-batch cost is the narrow pooling map; the refit is
     * one corpus-sized pair pass + vocab-bounded factorization (the
@@ -459,31 +404,17 @@ object Incremental {
       schema: org.apache.spark.sql.types.StructType, modelDir: String,
       outDir: String, checkpointDir: String, refitEvery: Int,
       dim: Int = 16, minCount: Long = 1L): StreamingQuery = {
-    import graft.ops.IvfIndex.{CommitMarker, VersionsSubdir}
-    import org.apache.hadoop.fs.Path
+    import graft.ops.IvfIndex
     val fs = new Path(modelDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    def committedVersions: Seq[Path] = {
-      val vroot = new Path(modelDir, VersionsSubdir)
-      if (!fs.exists(vroot)) Seq.empty
-      else fs.listStatus(vroot).filter(_.isDirectory).map(_.getPath)
-        .filter(p => fs.exists(new Path(p, CommitMarker)))
-        .sortBy(_.getName).toSeq
-    }
     // resolve the highest committed model (restart-safe); empty map before
     // the first refit — every token OOV, zero vectors, n_known = 0
-    def loadServed(s: SparkSession): (Long, Map[String, Array[Double]]) = {
-      import s.implicits._
-      committedVersions.lastOption match {
+    def loadServed(s: SparkSession): (Long, Map[String, Array[Double]]) =
+      IvfIndex.committedVersions(fs, modelDir).lastOption match {
         case None => (-1L, Map.empty)
         case Some(p) =>
-          val m = s.read.parquet(s"$p/vecs")
-            .select(col("word"), col("vec")).as[(String, Seq[Double])]
-            .collect().map { case (w, v) => w -> v.toArray }.toMap
-          (p.getName.stripPrefix("v").toLong, m)
+          (p.getName.stripPrefix("v").toLong, vecMapOf(s.read.parquet(s"$p/vecs")))
       }
-    }
     var (servedV, servedMap) = loadServed(spark)
     var bc = spark.sparkContext.broadcast(servedMap)
 
@@ -494,16 +425,13 @@ object Incremental {
         .withColumn("model_v", lit(servedV))
         .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       if (refitEvery > 0 && (batchId + 1) % refitEvery == 0) {
-        val v = new Path(s"$modelDir/$VersionsSubdir/v${"%012d".format(batchId)}")
+        val v = IvfIndex.versionPath(modelDir, batchId)
         fs.delete(v, true)
         graft.ml.WordVec.fit(
             s.read.schema(schema).parquet(inDir).filter(col("text").isNotNull),
             dim = dim, minCount = minCount)
           .write.mode("overwrite").parquet(s"$v/vecs")
-        require(fs.createNewFile(new Path(v, CommitMarker)) ||
-            fs.exists(new Path(v, CommitMarker)),
-          s"failed to commit $v")
-        committedVersions.dropRight(2).foreach(p => fs.delete(p, true))
+        IvfIndex.commitAndRetain(fs, modelDir, v)
         val (nv, nm) = loadServed(s)
         servedV = nv
         // release the superseded model's broadcast blocks — this
@@ -573,8 +501,7 @@ object Incremental {
       // against the persisted state (absent only on the very first
       // batch — a transient read failure must fail the batch, not
       // re-admit the corpus as novel)
-      def loadState(dir: String): Option[DataFrame] =
-        whenPresent { val df = s.read.parquet(dir); df.head(1); df }
+      def loadState(dir: String): Option[DataFrame] = whenPresent(s.read.parquet(dir))
       val textHit = loadState(fpDir) match {
         case Some(fps) => inBatch
           .join(fps.select(col("fp")).distinct(), Seq("fp"), "left_semi")
@@ -954,12 +881,14 @@ object Incremental {
     * micro-batch's documents pool to SIF vectors under the FROZEN
     * [[writeDocvecModel]] tables (stream-static join with touched-bucket
     * pruning — the [[continuousPplGateJoined]] discipline; the model is
-    * vocabulary-sized and never driver-collected), and the batch APPENDS
-    * its per-(source, dim) partial sums of unit components + doc counts.
+    * vocabulary-sized and never driver-collected) through q161's pooling
+    * ([[graft.ops.Ml.sifPoolOf]]), and the batch APPENDS q184's
+    * per-(source, dim) partial ([[graft.ops.Ml.diversityPartialOf]]).
     * [[diversityReport]] folds the accumulated partials into the q184
-    * table at read time — per source, 1 − ‖mean unit vector‖² over every
-    * doc streamed so far. A source whose diversity collapses mid-stream
-    * is a feed gone template (the monitor catches it between releases;
+    * table at read time through q184's own fold — per source,
+    * 1 − ‖mean unit vector‖² over every doc streamed so far. A source
+    * whose diversity collapses mid-stream is a feed gone template (the
+    * monitor catches it between releases;
     * q184 certifies the same number on the batch corpus). State is the
     * APPEND LOG, not a mutable table — replaying the fit corpus through
     * the monitor reproduces q184's rounded report, which StreamingSpec
@@ -980,25 +909,11 @@ object Incremental {
           explode(graft.functions.TextFns.tokens(col("text"))).as("word"))
         .withColumn("wbkt", pmod(xxhash64(col("word")), lit(nbkt))))
       val touched = tf.select(col("wbkt")).distinct().as[Long].collect()
-      val dv = tf
-        .join(vecs.filter(col("wbkt").isin(touched: _*))
-          .select(col("word"), col("vec"), col("n")), Seq("word"))
-        .select(col("doc_id"), col("source"),
-          (lit(0.001) / (lit(0.001) + col("n") / lit(tot))).as("wt"),
-          posexplode(col("vec")).as(Seq("i", "x")))
-        .groupBy(col("doc_id"), col("source"), col("i"))
-        .agg((sum(col("wt") * col("x")) / count(lit(1))).as("x"))
-        .groupBy(col("doc_id"), col("source"))
-        .agg(expr("transform(array_sort(collect_list(struct(i, x))), s -> s.x)")
-          .as("dv"))
-        .withColumn("nrm", sqrt(expr(
-          "aggregate(zip_with(dv, dv, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")))
-        .filter(col("nrm") > 0.0)
-      dv.select(col("source"), col("nrm"),
-          posexplode(col("dv")).as(Seq("pos", "x")))
-        .select(col("source"), col("pos"), (col("x") / col("nrm")).as("u"))
-        .groupBy(col("source"), col("pos"))
-        .agg(sum(col("u")).as("s_u"), count(lit(1)).as("n"))
+      val dv = graft.ops.Ml.sifPoolOf(
+        tf.join(vecs.filter(col("wbkt").isin(touched: _*))
+          .select(col("word"), col("vec"), col("n")), Seq("word")),
+        Seq("doc_id", "source"), lit(tot))
+      graft.ops.Ml.diversityPartialOf(dv)
         .withColumn("batch_id", lit(batchId))
         .write.mode("append").parquet(outDir)
     }
@@ -1061,13 +976,7 @@ object Incremental {
   /** Read-side fold of the monitor's append log → the q184 table
     * (source, n_docs, diversity) over every doc streamed so far. */
   def diversityReport(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir)
-      .groupBy(col("source"), col("pos"))
-      .agg((sum(col("s_u")) / sum(col("n"))).as("c"), sum(col("n")).as("n"))
-      .groupBy(col("source"))
-      .agg(max(col("n")).cast("long").as("n_docs"),
-        round(lit(1.0) - sum(col("c") * col("c")), 4).as("diversity"))
-      .orderBy(col("source"))
+    graft.ops.Ml.diversityFold(spark.read.parquet(outDir))
 
   /** Continuous 4-GRAM NOVELTY monitor — maintainer #23, the q197
     * template-farm detector as an ingest alarm: a source whose novelty
@@ -1178,12 +1087,13 @@ object Incremental {
     *
     * State is a BUCKETED first-seen term log (`pmod(xxhash64(source ‖
     * term), nbkt)` — the writePplModel layout discipline): each batch
-    * folds to per-source term counts, anti-joins the touched buckets of
-    * the log (≤ nbkt ints are the only driver data), and appends its NEW
-    * terms plus one per-source token-count row IN ONE WRITE (term rows
-    * and stat rows share the table, `term IS NULL` marking stats, so
-    * there is no torn-state window between two logs). The log is
-    * Heaps-bounded (vocabulary-sized, never corpus-sized);
+    * folds to per-source term counts through q200's term fold
+    * ([[graft.ops.CorpusReports.sourceTermsOf]]), anti-joins the touched
+    * buckets of the log (≤ nbkt ints are the only driver data), and
+    * appends its NEW terms plus one per-source token-count row IN ONE
+    * WRITE (term rows and stat rows share the table, `term IS NULL`
+    * marking stats, so there is no torn-state window between two logs).
+    * The log is Heaps-bounded (vocabulary-sized, never corpus-sized);
     * [[vocabGrowthReport]] folds it into the per-batch cumulative curve
     * with a per-source window over batch-count-bounded rows. foreachBatch
     * residue class of [[continuousSemanticDedup]]. */
@@ -1197,11 +1107,7 @@ object Incremental {
     // AvailableNow honors maxFilesPerTrigger, so a deployment picks the
     // curve resolution here (None = one point per drain)
     drain(spark, inDir, schema, checkpointDir, maxFilesPerTrigger) { (batch, batchId, hold) =>
-      val toks = hold(batch
-        .select(col("source"),
-          explode(graft.functions.TextFns.tokens(col("text"))).as("term"))
-        .groupBy(col("source"), col("term"))
-        .agg(count(lit(1)).as("n"))
+      val toks = hold(graft.ops.CorpusReports.sourceTermsOf(batch)
         .withColumn("tbkt", pmod(
           xxhash64(concat_ws("\u0000", col("source"), col("term"))),
           lit(nBuckets.toLong))))
@@ -1385,7 +1291,9 @@ object Incremental {
     * #25/#26 decomposition) and hash-deterministic. State is ≤
     * sources × k rows through [[graft.sources.SwapProtocol]]; each
     * drain pays one batch pass + a state-sized merge. Unlike a GK/
-    * t-digest sketch the sample is engine-neutral: [[quantileReport]]
+    * t-digest sketch the sample is engine-neutral: the batch side and
+    * every merge rank through q219's own window
+    * ([[graft.ops.CorpusReports.sampleBottomKOf]]), so [[quantileReport]]
     * equals the q219 batch kernel over everything ingested, exactly,
     * under any split (StreamingSpec maintainer #27). Replay is
     * idempotent: u is deterministic per doc_id, and the merge keys on
@@ -1399,12 +1307,9 @@ object Incremental {
       checkpointDir: String, k: Int = 128): StreamingQuery = { // k priced by q219 (k=128 holds every per-source quartile within the certified band)
     require(k >= 1, s"sample size k must be >= 1, got $k")
     drain(spark, inDir, schema, checkpointDir) { (batch, _, _) =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source")).orderBy(col("u"), col("doc_id"))
-      def bottomK(df: DataFrame): DataFrame = df
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .select(col("source"), col("u"), col("doc_id"), col("n_chars"))
+      def bottomK(df: DataFrame): DataFrame =
+        graft.ops.CorpusReports.sampleBottomKOf(df, k)
+          .select(col("source"), col("u"), col("doc_id"), col("n_chars"))
       def mergeKeys(df: DataFrame): DataFrame = df
         .groupBy(col("source"), col("u"), col("doc_id"))
         .agg(min(col("n_chars")).as("n_chars"))
@@ -1498,44 +1403,37 @@ object Incremental {
   }
 
   /** Continuous benchmark-saturation maintenance (the streaming twin of
-    * q117): the eval suite is FROZEN — its distinct 5-gram hashes are
-    * computed once, keyed by eval doc, and broadcast (benchmark-sized
-    * state, corpus-independent) — and each corpus micro-batch contributes
-    * the eval grams it contains as (eval doc, gram) hit rows appended
-    * through the FILE SINK, so exactly-once comes from the sink's
-    * checkpoint-atomic commit (no foreachBatch replay residue). Per-batch
-    * work is one gram-kernel pass plus a broadcast membership probe —
-    * stateless, no shuffle, scan-bound regardless of corpus history.
-    * Duplicate hits (the same gram seen in later batches) are expected
-    * and collapse in [[evalSaturationReport]]'s aggregation; saturation
-    * is monotone in ingest — the live form of "this eval number is
-    * expiring". Contract: stream the TRAIN split — the maintainer does
-    * not filter eval ids out of the stream (the two id spaces may be
-    * unrelated, the searchThreshold excludeSelf lesson), so streaming
-    * the eval docs themselves would trivially saturate them. */
+    * q117): the eval suite is FROZEN, and each corpus micro-batch
+    * contributes the eval grams it contains as (eval doc, gram) hit rows —
+    * a stream-static inner join of the batch's gram rows against the eval
+    * suite's (doc_id, gh) table, both from q117's gram kernel
+    * ([[graft.ops.CorpusReports.evalGramsOf]]). The join is legal under
+    * the append FILE SINK, so exactly-once comes from the sink's
+    * checkpoint-atomic commit (no foreachBatch replay residue), and the
+    * eval table never transits the driver. Duplicate hits (the same gram
+    * seen in later batches) are expected and collapse in
+    * [[evalSaturationReport]]'s aggregation; saturation is monotone in
+    * ingest — the live form of "this eval number is expiring". Contract:
+    * stream the TRAIN split — the maintainer does not filter eval ids out
+    * of the stream (the two id spaces may be unrelated, the
+    * searchThreshold excludeSelf lesson), so streaming the eval docs
+    * themselves would trivially saturate them. */
   def continuousEvalSaturation(spark: SparkSession, inDir: String,
       schema: org.apache.spark.sql.types.StructType,
       evalDocs: DataFrame, hitsDir: String, checkpointDir: String): StreamingQuery = {
-    import spark.implicits._
-    val byGh: Map[Long, Array[Long]] = evalDocs
-      .select(col("doc_id"),
-        explode(graft.functions.TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
-      .as[(Long, Long)].collect()
-      .groupBy(_._2).map { case (gh, xs) => gh -> xs.map(_._1).sorted }
-    val bc = spark.sparkContext.broadcast(byGh)
+    val evalG = graft.ops.CorpusReports.evalGramsOf(evalDocs)
     runOnce(spark, inDir, schema, hitsDir, checkpointDir) { df =>
-      df.select(explode(
-          graft.functions.TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
-        .as[Long]
-        .flatMap(gh => bc.value.getOrElse(gh, Array.emptyLongArray).map(ed => (ed, gh)))
-        .toDF("doc_id", "gh")
+      graft.ops.CorpusReports.evalGramsOf(df).select(col("gh"))
+        .join(evalG, Seq("gh"))
+        .select(col("doc_id"), col("gh"))
     }
   }
 
-  /** The q117 report over the maintained hit table: per eval doc, total
-    * distinct grams, grams seen anywhere in the ingested corpus, and the
-    * saturation ratio — row-identical to the batch q117 on the same
-    * corpus (StreamingSpec asserts it). dropDuplicates absorbs the
+  /** The q117 report over the maintained hit table, through q117's own
+    * fold ([[graft.ops.CorpusReports.saturationFoldOf]]): per eval doc,
+    * total distinct grams, grams seen anywhere in the ingested corpus,
+    * and the saturation ratio — row-identical to the batch q117 on the
+    * same corpus (StreamingSpec asserts it). dropDuplicates absorbs the
     * cross-batch repeat hits by design. Before any ingest (no hit table
     * yet) the report is all-zeros rather than an error — only a MISSING
     * path takes that branch; a transient read failure on a real table
@@ -1543,33 +1441,25 @@ object Incremental {
   def evalSaturationReport(spark: SparkSession, evalDocs: DataFrame,
       hitsDir: String): DataFrame = {
     import spark.implicits._
-    val tot = evalDocs
-      .select(col("doc_id"),
-        explode(graft.functions.TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-    val hits = whenPresent(spark.read.parquet(hitsDir))
-      .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "gh"))
-      .dropDuplicates("doc_id", "gh")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
-    tot.join(hits, Seq("doc_id"), "left")
-      .na.fill(Map("n_hit" -> 0L))
-      .select(col("doc_id"), col("n_grams"), col("n_hit"),
-        round(col("n_hit") / col("n_grams"), 4).as("saturation"))
-      .orderBy(col("doc_id"))
+    graft.ops.CorpusReports.saturationFoldOf(
+      graft.ops.CorpusReports.evalGramsOf(evalDocs),
+      whenPresent(spark.read.parquet(hitsDir))
+        .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "gh"))
+        .dropDuplicates("doc_id", "gh"))
   }
 
   /** Continuous gate-funnel accounting (the streaming twin of q127): each
     * micro-batch of documents is annotated with its curation-cascade
-    * verdicts — rule gate (stateless predicate), exact-dedup canonical
-    * (within-batch min doc_id per fingerprint, then against the
-    * PERSISTED fingerprint set: first-admitted-wins, the streaming-dedup
-    * admission convention), and decontamination (FROZEN eval gram
-    * vocabulary broadcast as a hash set — the benchmark is a release
-    * artifact, the [[continuousDecontam]] discipline, exact here because
-    * the eval split is benchmark-sized). Per-doc flag rows append to
-    * `flagsDir`; admitted canonical fingerprints append to `fpDir` (the
-    * operator's restartable state). [[gateFunnelReport]] aggregates the
-    * flag table by source — row-identical to the batch q127 when
+    * verdicts by q127's own flag kernel
+    * ([[graft.ops.CorpusReports.gateFlagsOf]]) — rule gate (stateless
+    * predicate), exact-dedup canonical (within-batch min doc_id per
+    * fingerprint, then against the PERSISTED fingerprint set:
+    * first-admitted-wins, the streaming-dedup admission convention), and
+    * decontamination (a semi-join against the FROZEN eval gram
+    * vocabulary, exact, as in the batch query). Per-doc flag rows append
+    * to `flagsDir`; admitted canonical fingerprints append to `fpDir`
+    * (the operator's restartable state). [[gateFunnelReport]] aggregates
+    * the flag table by source — row-identical to the batch q127 when
     * ingestion is doc_id-ordered (then first-admitted = min doc_id);
     * out-of-order ingestion diverges only in WHICH clone is canonical,
     * never in the counts' stage telescoping. Exactly-once per input file
@@ -1586,38 +1476,15 @@ object Incremental {
       schema: org.apache.spark.sql.types.StructType, evalDocs: DataFrame,
       flagsDir: String, fpDir: String, checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    val evalGh: Set[Long] = evalDocs
-      .select(explode(graft.functions.TextFns.distinctGramHashes(col("text"), 5)).as("gh"))
-      .as[Long].collect().toSet
-    val bc = spark.sparkContext.broadcast(evalGh)
-    val hit = udf { (ghs: Seq[Long]) =>
-      ghs != null && ghs.exists(bc.value.contains)
-    }
+    import graft.ops.CorpusReports
     drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
-      val s = batch.sparkSession
-      val b = hold(batch
-        .select(col("doc_id"), col("source"), col("text"),
-          graft.ops.TextOps.ruleGateKeep().as("keep_gate"),
-          graft.functions.TextFns.fingerprint(col("text")).as("fp"),
-          hit(graft.functions.TextFns.distinctGramHashes(col("text"), 5))
-            .as("contaminated")))
-      val batchCanon = b.filter(col("keep_gate"))
-        .groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id"))
       // absent only before the first batch — the bootstrap-probe
       // discipline: a transient read failure on real state must fail
       // the batch, not re-admit every clone as canonical
-      val known = whenPresent(s.read.parquet(fpDir))
-        .fold(Seq.empty[(String, Boolean)].toDF("fp", "seen"))(
-          _.select(col("fp")).distinct().withColumn("seen", lit(true)))
-      val isCanon = col("keep_gate") && col("doc_id") === col("keep_id") &&
-        !coalesce(col("seen"), lit(false))
-      val flags = hold(b
-        .join(batchCanon, Seq("fp"), "left")
-        .join(known, Seq("fp"), "left")
-        .select(col("doc_id"), col("source"), col("fp"),
-          col("keep_gate").cast("long").as("s1"),
-          isCanon.cast("long").as("s2"),
-          (isCanon && !col("contaminated")).cast("long").as("s3")))
+      val seen = whenPresent(batch.sparkSession.read.parquet(fpDir))
+        .getOrElse(Seq.empty[String].toDF("fp"))
+      val flags = hold(CorpusReports.gateFlagsOf(
+        hold(CorpusReports.gateColumnsOf(batch)), evalDocs, Some(seen)))
       flags.drop("fp").write.mode("append").parquet(flagsDir)
       flags.filter(col("s2") === 1L).select(col("fp"))
         .write.mode("append").parquet(fpDir)
@@ -1625,9 +1492,10 @@ object Incremental {
   }
 
   /** The q127 report over the maintained flag table: per-source survivor
-    * counts through the cascade, schema-identical to the batch query.
-    * Before any ingest (no flag table yet) the report is empty rather
-    * than an error — missing-path-only, like [[evalSaturationReport]].
+    * counts through the cascade, through q127's own fold
+    * ([[graft.ops.CorpusReports.gateFunnelFoldOf]]). Before any ingest
+    * (no flag table yet) the report is empty rather than an error —
+    * missing-path-only, like [[evalSaturationReport]].
     *
     * Replay residue (the foreachBatch contract — a crash between the
     * flags append and the checkpoint commit replays the batch
@@ -1638,17 +1506,12 @@ object Incremental {
     * reconcile-downstream discipline as the DSIR twin. */
   def gateFunnelReport(spark: SparkSession, flagsDir: String): DataFrame = {
     import spark.implicits._
-    whenPresent(spark.read.parquet(flagsDir))
-      .getOrElse(Seq.empty[(Long, String, Long, Long, Long)]
-        .toDF("doc_id", "source", "s1", "s2", "s3"))
-      .groupBy(col("doc_id"), col("source"))
-      .agg(max(col("s1")).as("s1"), max(col("s2")).as("s2"), max(col("s3")).as("s3"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_raw"),
-        sum(col("s1")).cast("long").as("n_gate"),
-        sum(col("s2")).cast("long").as("n_dedup"),
-        sum(col("s3")).cast("long").as("n_clean"))
-      .orderBy(col("source"))
+    graft.ops.CorpusReports.gateFunnelFoldOf(
+      whenPresent(spark.read.parquet(flagsDir))
+        .getOrElse(Seq.empty[(Long, String, Long, Long, Long)]
+          .toDF("doc_id", "source", "s1", "s2", "s3"))
+        .groupBy(col("doc_id"), col("source"))
+        .agg(max(col("s1")).as("s1"), max(col("s2")).as("s2"), max(col("s3")).as("s3")))
   }
 
   /** Continuous SEMANTIC decontamination (the streaming tier of q111, and
@@ -1736,7 +1599,8 @@ object Incremental {
   /** Continuous temperature-mix ADMISSION (q107 in incremental form):
     * each micro-batch of documents is admitted under the PERSISTED
     * per-language rate table (the q107 fit — broadcast, ≤|languages|
-    * rows) via the same md5-prefix integer compare as the batch query,
+    * rows) via the batch query's own admit column
+    * ([[graft.ops.Curation.tempMixAdmit]], an md5-prefix integer compare),
     * so batch and stream decide identically for the same document.
     * Rejected docs are DROPPED — this is sampling, not gating; there is
     * nothing to quarantine. The rates are FROZEN for the stream's
@@ -1749,11 +1613,9 @@ object Incremental {
       schema: org.apache.spark.sql.types.StructType, ratesDir: String,
       outDir: String, checkpointDir: String): StreamingQuery = {
     val rates = spark.read.parquet(ratesDir).select(col("lang"), col("thr16"))
-    val h16 = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-      .cast("long")
     drain(spark, inDir, schema, checkpointDir) { (batch, _, _) =>
       batch.join(broadcast(rates), Seq("lang"))
-        .filter(h16 < col("thr16"))
+        .filter(graft.ops.Curation.tempMixAdmit)
         .drop("thr16")
         .write.mode("append").parquet(outDir)
     }
@@ -1822,54 +1684,41 @@ object Incremental {
       checkpointDir: String, compactEvery: Int = 0,
       sqDir: Option[String] = None, rebuildEvery: Int = 0,
       pqDir: Option[String] = None): StreamingQuery = {
-    import graft.ops.IvfIndex.{CommitMarker, VersionsSubdir}
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    import graft.ops.IvfIndex
+    val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // commit a freshly-written version dir, then reclaim snapshots older
-    // than the PREVIOUS one (kept a full cadence for in-flight readers)
-    def commitAndRetain(root: String, version: org.apache.hadoop.fs.Path): Unit = {
-      require(fs.createNewFile(new org.apache.hadoop.fs.Path(version, CommitMarker)) ||
-          fs.exists(new org.apache.hadoop.fs.Path(version, CommitMarker)),
-        s"failed to commit $version")
-      val vroot = new org.apache.hadoop.fs.Path(root, VersionsSubdir)
-      val committed = fs.listStatus(vroot).filter(_.isDirectory).map(_.getPath)
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, CommitMarker)))
-        .sortBy(_.getName)
-      committed.dropRight(2).foreach(p => fs.delete(p, true))
-      // the pre-versioning base layout (cells/centroids/meta — sqcells for
-      // the SQ tier) is the oldest snapshot of all: once two committed
-      // versions exist it has been stale ≥ one cadence
-      if (committed.length >= 2)
-        fs.listStatus(new org.apache.hadoop.fs.Path(root)).map(_.getPath)
-          .filter(_.getName != VersionsSubdir)
-          .foreach(p => fs.delete(p, true))
-    }
+    // commit a freshly-written version dir and reclaim older snapshots;
+    // the pre-versioning base layout (cells/centroids/meta — sqcells for
+    // the SQ tier) is the oldest snapshot of all: once two committed
+    // versions exist it has been stale ≥ one cadence
+    def publish(root: String, version: Path): Unit =
+      if (IvfIndex.commitAndRetain(fs, root, version).length >= 2)
+        fs.listStatus(new Path(root)).map(_.getPath)
+          .filter(_.getName != IvfIndex.VersionsSubdir)
+          .foreach(fs.delete(_, true))
 
     drain(spark, inDir, schema, checkpointDir) { (batch, batchId, _) =>
       val s = batch.sparkSession
-      graft.ops.IvfIndex.append(s, indexDir, batch)
+      IvfIndex.append(s, indexDir, batch)
       if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
         // version name = batchId → a replayed cadence batch rewrites the
         // SAME version (deleted first if half-written) — idempotent
-        val v = new org.apache.hadoop.fs.Path(
-          s"$indexDir/$VersionsSubdir/v${"%012d".format(batchId)}")
+        val v = IvfIndex.versionPath(indexDir, batchId)
         fs.delete(v, true)
         // every rebuildEvery-th compaction refits the codebook on the
         // current contents (drift recovery); count is derived from the
         // checkpointed batchId, so replay is schedule-stable
         val nthCompaction = (batchId + 1) / compactEvery
         if (rebuildEvery > 0 && nthCompaction % rebuildEvery == 0)
-          graft.ops.IvfIndex.rebuildTo(s, indexDir, v.toString)
+          IvfIndex.rebuildTo(s, indexDir, v.toString)
         else
-          graft.ops.IvfIndex.compactTo(s, indexDir, v.toString)
-        commitAndRetain(indexDir, v)
+          IvfIndex.compactTo(s, indexDir, v.toString)
+        publish(indexDir, v)
         sqDir.foreach { sd =>
-          val sv = new org.apache.hadoop.fs.Path(
-            s"$sd/$VersionsSubdir/v${"%012d".format(batchId)}")
+          val sv = IvfIndex.versionPath(sd, batchId)
           fs.delete(sv, true)
           graft.ops.IvfSq.quantizeTo(s, indexDir, sv.toString)
-          commitAndRetain(sd, sv)
+          publish(sd, sv)
         }
         // the PQ tier re-derives on the same cadence and publication
         // discipline — cell means, codebooks, and codes all anchor to
@@ -1877,11 +1726,10 @@ object Incremental {
         // codebook, so a stale PQ copy degrades, never misserves: the
         // exact rerank reads the raw index)
         pqDir.foreach { pd =>
-          val pv = new org.apache.hadoop.fs.Path(
-            s"$pd/$VersionsSubdir/v${"%012d".format(batchId)}")
+          val pv = IvfIndex.versionPath(pd, batchId)
           fs.delete(pv, true)
           graft.ops.IvfPq.trainTo(s, indexDir, pv.toString)
-          commitAndRetain(pd, pv)
+          publish(pd, pv)
         }
       }
     }

@@ -271,4 +271,58 @@ class DedupSpec extends AnyFunSuite {
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  test("the persisted exact-Jaccard artifact equals the inline prefix-filter join") {
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), graft.ops.Dedup.shingleHashes(
+        graft.functions.TextFns.normText(col("text"))).as("hs"))
+      .filter(size(col("hs")) > 0)
+      .cache()
+    val inline = graft.ops.Dedup.exactJaccardPairs(docs, 0.8)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    docs.unpersist()
+    val served = graft.ops.Dedup.exactPairs08(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(served == inline)
+  }
+
+  test("minhash signature artifact equals the inline signature pass") {
+    val inline = graft.ops.Dedup.sigsOf(Tables.documents(spark, sf))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
+      .toSet
+    val served = graft.ops.Dedup.sigTable(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
+      .toSet
+    assert(served == inline)
+  }
+
+  test("minhash pair artifact equals the inline LSH candidate+verify pass") {
+    val inline = graft.ops.Dedup.minhashPairsOf(Tables.documents(spark, sf))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val served = graft.ops.Dedup.minhashPairs(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(served == inline)
+  }
+
+  test("substr-scrub artifact equals the inline ExactSubstr pass") {
+    val inline = graft.ops.Dedup.substrDedup(Tables.documents(spark, sf))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+      .toSet
+    val served = graft.ops.Dedup.substrScrubTable(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+      .toSet
+    assert(served == inline)
+  }
+
+  test("per-K decontam tables equal the inline scrub at each sweep K") {
+    for (k <- Seq(6, 8, 10)) {
+      val inline = graft.ops.Dedup.decontamScrub(Tables.documents(spark, sf), K = k)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+        .toSet
+      val served = graft.ops.Dedup.decontamScoresK(spark, sf, k)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+        .toSet
+      assert(served == inline, s"K=$k")
+    }
+  }
 }

@@ -20,25 +20,24 @@ class MaintainerParitySpec extends AnyFunSuite {
 
   /** maintainer method -> (the batch kernel it must reproduce, the
     * StreamingSpec test name asserting it). The kernel is the member the
-    * maintainer calls ("graft.ops.TextOps.runCollapseKernel") or, where
-    * it runs its own copy of the arithmetic, its batch twin's registered
-    * query ("q110_boilerplate", a [[SparkEntry.queries]] key). */
+    * maintainer calls, built on the same arithmetic its batch twin runs
+    * ("graft.ops.TextOps.runCollapseKernel"). */
   private val parity: Map[String, (String, String)] = Map(
     "continuousFuzzyDedup" -> (("graft.ops.MinHashIndex.query",
       "continuous fuzzy dedup drops near-dups within and across batches")),
     "continuousSemanticDedup" -> (("graft.ops.Curation.semanticAdmit",
       "continuous semantic dedup drops near-dup embeddings")),
-    "continuousDecontam" -> (("q82_bloom_decontam",
+    "continuousDecontam" -> (("graft.ops.BloomSketch.contaminated",
       "continuous decontamination quarantines sketch hits")),
-    "continuousBoilerplateScrub" -> (("q110_boilerplate",
+    "continuousBoilerplateScrub" -> (("graft.ops.TextOps.boilerplateScrubUnder",
       "continuous boilerplate scrub equals the batch q110")),
     "continuousRunCollapse" -> (("graft.ops.TextOps.runCollapseKernel",
       "continuous run collapse equals the batch q133")),
     "continuousMediaHash" -> (("graft.ops.Multimodal.imageAHash",
       "continuous media hashing equals the batch aHash")),
-    "continuousDocEmbed" -> (("q155_docvec_similar",
+    "continuousDocEmbed" -> (("graft.ops.Ml.meanPoolOf",
       "continuous doc-embed pools the frozen WordVec model")),
-    "continuousDocEmbedRefresh" -> (("q155_docvec_similar",
+    "continuousDocEmbedRefresh" -> (("graft.ops.Ml.meanPoolOf",
       "doc-embed refresh cadence: vocab shift degrades coverage")),
     "continuousCrossModalDedup" -> (("graft.ops.Multimodal.crossModalNearKeepOf",
       "continuous cross-modal dedup admits on joint")),
@@ -46,7 +45,7 @@ class MaintainerParitySpec extends AnyFunSuite {
       "joined ppl gate: stream-static join reproduces q147 AND q165")),
     "continuousDecontamScrub" -> (("graft.ops.Dedup.cleanKernel",
       "decontam scrub maintainer: stream-static join reproduces the q175")),
-    "continuousDiversityMonitor" -> (("q184_source_docvec_diversity",
+    "continuousDiversityMonitor" -> (("graft.ops.Ml.diversityPartialOf",
       "diversity monitor: streamed partial sums fold to the q184")),
     "continuousGateAgreement" -> (("graft.ops.Scoring.gateCountsOf",
       "gate-agreement monitor folds to the q185")),
@@ -54,27 +53,27 @@ class MaintainerParitySpec extends AnyFunSuite {
       "continuous media gate equals the batch q149")),
     "continuousMediaNearDup" -> (("graft.ops.Multimodal.withPhashProbes",
       "continuous media near-dup probe equals the PhashIndex")),
-    "continuousEvalSaturation" -> (("q117_eval_saturation",
+    "continuousEvalSaturation" -> (("graft.ops.CorpusReports.evalGramsOf",
       "continuous eval saturation equals batch q117")),
-    "continuousGateFunnel" -> (("q127_gate_funnel",
+    "continuousGateFunnel" -> (("graft.ops.CorpusReports.gateFlagsOf",
       "continuous gate funnel equals batch q127")),
     "continuousSemanticDecontam" -> (("graft.ops.IvfIndex.searchThreshold",
       "continuous semantic decontam quarantines near-benchmark")),
     "continuousDsirScoring" -> (("graft.ops.Curation.dsirWeightPair",
       "continuous DSIR scoring routes by the persisted model")),
-    "continuousTempMixAdmit" -> (("q107_temp_mix",
+    "continuousTempMixAdmit" -> (("graft.ops.Curation.tempMixAdmit",
       "continuous temp-mix admission matches the batch admit")),
     "continuousAnnIngest" -> (("graft.ops.IvfIndex.append",
       "continuous ANN ingest appends micro-batches")),
     "continuousNoveltyMonitor" -> (("graft.ops.CorpusReports.gramCountsOf",
       "novelty monitor folds to the q197 kernel's table")),
-    "continuousVocabGrowth" -> (("q200_heaps_fit",
+    "continuousVocabGrowth" -> (("graft.ops.CorpusReports.sourceTermsOf",
       "vocab-growth monitor: cumulative curve ends at the batch totals")),
     "continuousExactNnRef" -> (("graft.ops.Similarity.exactTop3Scored",
       "exact-NN reference maintainer equals the batch exactTop3Scored")),
     "continuousDistinctMonitor" -> (("graft.ops.Relational.mdUniform",
       "distinct monitor equals the certified kmv_distinct under any split")),
-    "continuousQuantileMonitor" -> (("q219_sample_quantile_sweep",
+    "continuousQuantileMonitor" -> (("graft.ops.CorpusReports.sampleBottomKOf",
       "quantile monitor equals the batch bottom-k sample under any split")))
 
   test("every continuous* maintainer is mapped to a batch twin + parity test") {
@@ -94,14 +93,10 @@ class MaintainerParitySpec extends AnyFunSuite {
   }
 
   test("every named kernel is a registered query or an existing member") {
-    val queries = SparkEntry.queries.keySet
     val missing = parity.values.map(_._1).toSeq.distinct.filterNot { k =>
-      if (k.matches("q[0-9]+_.*")) queries.contains(k)
-      else {
-        val (obj, member) = k.splitAt(k.lastIndexOf('.'))
-        scala.util.Try(Class.forName(obj + "$")).toOption
-          .exists(_.getMethods.exists(_.getName == member.drop(1)))
-      }
+      val (obj, member) = k.splitAt(k.lastIndexOf('.'))
+      scala.util.Try(Class.forName(obj + "$")).toOption
+        .exists(_.getMethods.exists(_.getName == member.drop(1)))
     }
     assert(missing.isEmpty,
       s"kernels named in the registry that do not exist: ${missing.sorted.mkString(", ")}")

@@ -445,4 +445,44 @@ class MultimodalSpec extends AnyFunSuite {
       .count(Multimodal.looksDecodable)
     assert(sniffed == 0, s"$sniffed text blobs matched an image magic")
   }
+
+  test("withPhashProbes (constant mask table) emits exactly the r20 per-row enumeration") {
+    import spark.implicits._
+    // reference: the r20 semantics — per hash, for each band (lo, width)
+    // and each <=2-flip mask m, the row (band, ((h >>> lo) & wmask) ^ m)
+    val hashBits = 64
+    val (bands, flips) = Multimodal.phashBandScheme(hashBits)
+    def slices = (0 until bands).map { b =>
+      val lo = b * hashBits / bands
+      (b, lo, (b + 1) * hashBits / bands - lo)
+    }
+    def refRows(h: Long): Seq[(Int, Long)] = slices.flatMap { case (b, lo, w) =>
+      val wmask = if (w >= 64) -1L else (1L << w) - 1
+      Multimodal.flipMasks(w, flips).map(m => (b, ((h >>> lo) & wmask) ^ m))
+    }
+    val rnd = new scala.util.Random(21L)
+    val hs = Seq.fill(64)(rnd.nextLong()) :+ 0L :+ -1L :+ Long.MinValue
+    val in = hs.zipWithIndex.map { case (h, i) => (i.toLong, h) }
+      .toDF("doc_id", "ahash")
+    val got = Multimodal.withPhashProbes(in, hashBits)
+      .select(col("doc_id"), col("band"), col("bhash"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+    val want = hs.zipWithIndex.flatMap { case (h, i) =>
+      refRows(h).map { case (b, v) => (i.toLong, b, v) } }
+    // exact multiset equality (and therefore the documented 718/hash
+    // amplification and band-major enumeration order per doc)
+    assert(got.groupBy(identity).view.mapValues(_.size).toMap ==
+      want.groupBy(identity).view.mapValues(_.size).toMap)
+    assert(got.size == hs.size * 718)
+  }
+
+  test("withPhashProbes at a 0-flip lattice is withPhashBands (16-bit path untouched)") {
+    import spark.implicits._
+    val in = Seq((1L, 0xBEEFL), (2L, 0x0L), (3L, 0xFFFFL)).toDF("doc_id", "ahash")
+    val probes = Multimodal.withPhashProbes(in, 16)
+      .select("doc_id", "band", "bhash").collect().map(_.toSeq).toSet
+    val bands = Multimodal.withPhashBands(in, 16)
+      .select("doc_id", "band", "bhash").collect().map(_.toSeq).toSet
+    assert(probes == bands)
+  }
 }

@@ -61,4 +61,22 @@ class CachingSpec extends AnyFunSuite {
     } finally barrier.release()
     assert(cachedRdds == before)
   }
+
+  test("Caching.deferRelease returns identical results and releasePending unpersists") {
+    val base = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k")
+    def build(): org.apache.spark.sql.DataFrame = {
+      val mid = base.groupBy("k").agg(count(lit(1)).as("n")).cache()
+      Caching.materializeAndRelease(mid.agg(sum(col("n")).as("t")), mid)
+    }
+    val eager = build().collect().toSeq
+    spark.conf.set(Caching.DeferKey, "true")
+    try {
+      val lazyRes = build()
+      assert(lazyRes.collect().toSeq == eager)
+      // the deferred result is cached until released
+      assert(lazyRes.storageLevel.useMemory || lazyRes.storageLevel.useDisk)
+      Caching.releasePending()
+      assert(lazyRes.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    } finally spark.conf.unset(Caching.DeferKey)
+  }
 }
