@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -33,11 +34,13 @@ object BloomSketch {
 
   /** The Bloom drop predicate over a row's `text`: the sketch admits one
     * of its distinct 5-gram hashes. One UDF over the per-doc hash array
-    * (no explode, no shuffle), the sketch broadcast once per call. */
-  def contaminated(spark: SparkSession, sketch: BloomFilter): Column = {
-    val bc = spark.sparkContext.broadcast(sketch)
+    * (no explode, no shuffle). The caller broadcasts the sketch and owns
+    * that broadcast: it destroys it when its run ends (a pipeline through
+    * [[Caching.Barriers.broadcast]]), so a long-lived session does not
+    * keep one sketch per run. */
+  def contaminated(sketch: Broadcast[BloomFilter]): Column = {
     val hit = udf { (ghs: Seq[Long]) =>
-      ghs != null && ghs.exists(bc.value.mightContainLong)
+      ghs != null && ghs.exists(sketch.value.mightContainLong)
     }
     hit(TextFns.distinctGramHashes(col("text"), 5))
   }

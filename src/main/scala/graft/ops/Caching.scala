@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.GraftInternal
 
 /** Deterministic cache lifecycle for query builders.
@@ -87,10 +88,12 @@ object Caching {
     * that plan work, not the count jobs, was most of the driver gap).
     * The leaf adds no second materialization and no checkpoint; it reads
     * the cache, so it is valid until [[release]], which unpersists every
-    * barrier taken — call it in the run's `finally`, so a failing stage
-    * leaks nothing. One driver thread per instance. */
+    * barrier taken and destroys every [[broadcast]] made — call it in the
+    * run's `finally`, so a failing stage leaks nothing. One driver thread
+    * per instance. */
   final class Barriers {
     private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private val broadcasts = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
 
     def apply(df: DataFrame): (Long, DataFrame) = {
       held += df.cache()
@@ -106,9 +109,18 @@ object Caching {
       df
     }
 
+    /** Broadcasts `value` for this run and destroys it in [[release]]. */
+    def broadcast[T: scala.reflect.ClassTag](spark: SparkSession, value: T): Broadcast[T] = {
+      val bc = spark.sparkContext.broadcast(value)
+      broadcasts += bc
+      bc
+    }
+
     def release(): Unit = {
       held.foreach(_.unpersist())
       held.clear()
+      broadcasts.foreach(_.destroy())
+      broadcasts.clear()
     }
   }
 

@@ -64,11 +64,15 @@ object ConnectedComponents {
     var level = 0
     var done: Option[DataFrame] = None
     while (done.isEmpty && level <= contractLevels) {
-      // localCheckpoint, NOT cache: truncates lineage so the count action
-      // and the downstream pass don't replay upstream dedup candidate
-      // generation twice (and the level loop doesn't grow the plan).
-      edges = edges.localCheckpoint(true)
-      val nEdges = edges.count()
+      // localCheckpoint, NOT cache: truncates lineage so the downstream
+      // pass doesn't replay upstream dedup candidate generation (and the
+      // level loop doesn't grow the plan). The edge count is observed on
+      // the checkpoint's own eager job, not taken by a second one. (An
+      // observation over a relation the optimizer proved empty reports no
+      // metric: zero edges.)
+      val counted = org.apache.spark.sql.Observation(s"cc-edges-$level")
+      edges = edges.observe(counted, count(lit(1)).as("n")).localCheckpoint(true)
+      val nEdges = counted.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
       if (nEdges <= finalSolveMaxEdges) {
         // one bounded task finishes the whole graph: exact union-find
         done = Some(edges.repartition(1).mapPartitions(unionFindStars).toDF("vertex", "label"))

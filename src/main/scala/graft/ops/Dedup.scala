@@ -754,7 +754,7 @@ object Dedup {
     * dup_exact never fires on this corpus (no exact clones planted) —
     * the branch is exercised with planted clones in DedupSpec. */
   val q79CleanPipeline: Q = (s, d) =>
-    cleanCorpus(Tables.documents(s, d), minhashPairs(s, d))
+    cleanCorpus(Tables.documents(s, d), minhashPairs(s, d)).orderBy(col("doc_id"))
 
   /** The composition over an arbitrary (doc_id, text, n_chars) frame —
     * unit tests plant exact clones to exercise the dup_exact branch.
@@ -818,7 +818,6 @@ object Dedup {
           .when(col("de") === 1, "dup_exact")
           .when(col("dz") === 1, "dup_fuzzy")
           .otherwise("kept").as("status"))
-      .orderBy(col("doc_id"))
   }
 
   /** Exact duplicated-SUBSTRING dedup (the ExactSubstr mode of Lee et al.,

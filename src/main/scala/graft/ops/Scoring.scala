@@ -399,7 +399,8 @@ object Scoring {
 
   /** The memoized bigram score table (doc_id, n_pairs, nll2) — shared by
     * q147 (the per-doc report) and q156 (the CCNet-style gate over it),
-    * exactly as [[perplexityScores]] serves q85/q126/q135. */
+    * exactly as [[perplexityScores]] serves q85/q126/q135. Unordered: a
+    * query that returns it sorts at its own return. */
   private[graft] def bigramScores(s: SparkSession, d: String): DataFrame =
     // the score table is a compute-once artifact exactly like q85's nll
     // (a pipeline scores the corpus once and every consumer reads the
@@ -414,29 +415,47 @@ object Scoring {
         .select(explode(TextFns.tokens(col("text"))).as("w"))
         .agg(count_distinct(col("w")).cast("double").as("v"))
       bigramNllFrom(tfb, bg, vocab)
-    }.orderBy(col("doc_id"))
+    }
+
+  /** A document's bigram counts counted inside its row
+    * ([[graft.plans.BigramCounts]]: one token walk, no explode of every
+    * pair). */
+  private def bigramCounts(text: Column, singletons: Boolean): Column =
+    org.apache.spark.sql.graft.GraftInternal.column(graft.plans.BigramCounts(
+      org.apache.spark.sql.graft.GraftInternal.expression(text), singletons))
+
+  /** Per-ROW bigram term frequencies (doc_id, carry..., a, b, tf): one row
+    * per input row and distinct adjacent pair, counted inside the row, so
+    * no shuffle. Where (doc_id, carry...) is unique per row — any corpus
+    * past the expectations gate — these ARE the [[bigramFoldOf]] rows.
+    * Every LM score kernel reads it directly: each sums tf per (a, b) or
+    * per doc, so a doc split over two rows scores the same. With
+    * `singletons`, each one-token doc adds one (token, null, 1) row, so
+    * the vocabulary (every token of every doc) comes from the same rows:
+    * the score kernels tokenize once. */
+  private[graft] def bigramRowsOf(docs: DataFrame, carry: Seq[String] = Nil,
+      singletons: Boolean = false): DataFrame = {
+    val keys = (Seq("doc_id") ++ carry).map(col)
+    docs
+      .select(keys :+ explode(bigramCounts(col("text"), singletons)).as("p"): _*)
+      .select(keys ++ Seq(col("p.a").as("a"), col("p.b").as("b"), col("p.tf").as("tf")): _*)
+  }
 
   /** THE bigram fold — the one definition of "tokenize, pair adjacent
     * tokens, count per doc" every bigram-LM consumer shares (r14 verdict
     * #6): [[bigramNllOf]], [[knNllOf]], q163's split fold, and the
     * streaming model writer and scorer. Returns (doc_id, carry..., a, b,
     * tf) for docs with ≥ 2 tokens; `carry` columns (q163's source /
-    * is_test) ride through the grouping unchanged. ONE corpus pass,
-    * map-side combined — the (doc, a, b, tf) fold is what keeps every
-    * downstream model table Zipf²-sparse instead of re-reading the raw
-    * token stream. */
+    * is_test) ride through the grouping unchanged. [[bigramRowsOf]]
+    * merged over (doc_id, carry..., a, b): the same rows for ANY input,
+    * also one whose ids repeat (the documents-table `bigram-fold`
+    * artifact), at one map-side-combined shuffle. */
   private[graft] def bigramFoldOf(docs: DataFrame,
       carry: Seq[String] = Nil): DataFrame = {
     val keys = Seq("doc_id") ++ carry
-    docs
-      .select(keys.map(col) :+ TextFns.tokens(col("text")).as("toks"): _*)
-      .filter(size(col("toks")) >= 2)
-      .select(keys.map(col) :+ explode(expr(
-        "zip_with(slice(toks, 1, size(toks) - 1), slice(toks, 2, size(toks) - 1)," +
-          " (a, b) -> struct(a, b))")).as("p"): _*)
-      .select(keys.map(col) :+ col("p.a").as("a") :+ col("p.b").as("b"): _*)
+    bigramRowsOf(docs, carry)
       .groupBy((keys :+ "a" :+ "b").map(col): _*)
-      .agg(count(lit(1)).as("tf"))
+      .agg(sum(col("tf")).as("tf"))
   }
 
   /** [[bigramFoldOf]] one order up: tokenize, window adjacent TRIPLES,
@@ -464,16 +483,18 @@ object Scoring {
     * ppl gate) can run the certified arithmetic on its own current corpus
     * rather than the memoized documents-table artifact. Returns (doc_id,
     * n_pairs, nll2); docs with < 2 tokens carry no row (nothing to
-    * score). Same scale shape as q147: ONE corpus pass into the
-    * map-side-combined (doc, a, b, tf) fold, Zipf²-sparse model tables,
-    * one broadcast vocab scalar. */
+    * score). ONE tokenize pass: the per-row counts ([[bigramRowsOf]],
+    * no shuffle) feed the model counts, the scoring join AND the vocab
+    * scalar (the singleton rows add the one-token docs' words);
+    * Zipf²-sparse model tables, one broadcast vocab scalar. */
   private[graft] def bigramNllOf(docs: DataFrame): DataFrame = {
-    val tfb = bigramFoldOf(docs).cache()
-    val bg = tfb.groupBy(col("a"), col("b")).agg(sum(col("tf")).as("cab"))
-    val vocab = docs
-      .select(explode(TextFns.tokens(col("text"))).as("w"))
+    val rows = bigramRowsOf(docs, singletons = true).cache()
+    val vocab = rows
+      .select(explode(array(col("a"), col("b"))).as("w"))
       .agg(count_distinct(col("w")).cast("double").as("v"))
-    Caching.materializeAndRelease(bigramNllFrom(tfb, bg, vocab), tfb)
+    val tfb = rows.filter(col("b").isNotNull)
+    val bg = tfb.groupBy(col("a"), col("b")).agg(sum(col("tf")).as("cab"))
+    Caching.materializeAndRelease(bigramNllFrom(tfb, bg, vocab), rows)
   }
 
   /** Once-per-(session, dataset) persisted BIGRAM FOLD
@@ -515,10 +536,12 @@ object Scoring {
     }
 
   /** The q147 kernel over PRE-BUILT fold tables — `tfb` =
-    * [[bigramFoldOf]], `bg` its (a, b)→cab rollup, `vocab` the 1-row
-    * (v: double) type count. [[graft.streaming.Incremental.writePplModel]]
-    * places its cuts through this form so the corpus tokenizes ONCE for
-    * model + cuts instead of once per scoring tier (r15 ADVICE). */
+    * [[bigramFoldOf]] (or its per-row form), `bg` its (a, b)→cab rollup,
+    * `vocab` the 1-row (v: double) type count. Unordered: a query that
+    * returns the table sorts at its own return.
+    * [[graft.streaming.Incremental.writePplModel]] places its cuts
+    * through this form so the corpus tokenizes ONCE for model + cuts
+    * instead of once per scoring tier (r15 ADVICE). */
   private[graft] def bigramNllFrom(tfb: DataFrame, bg: DataFrame,
       vocab: DataFrame): DataFrame = {
     val ca = bg.groupBy(col("a")).agg(sum(col("cab")).as("ca"))
@@ -530,7 +553,6 @@ object Scoring {
       .agg(sum(col("tf")).cast("long").as("n_pairs"),
         round(-sum(col("tf") * log((col("cab") + 1) / (col("ca") + col("v")))) /
           sum(col("tf")), 4).as("nll2"))
-      .orderBy(col("doc_id"))
   }
 
   /** q156: the CCNet gate on the BIGRAM model — q135's tercile
@@ -952,7 +974,7 @@ object Scoring {
     * so specs can drive it with planted fixtures and a pipeline can run
     * the certified arithmetic on its own corpus. */
   private[graft] def knNllOf(docs: DataFrame): DataFrame = {
-    val tfb = bigramFoldOf(docs).cache()
+    val tfb = bigramRowsOf(docs).cache()
     // the bigram count table feeds four downstream aggregates — cache it
     // (caller-released below) rather than recompute the corpus fold
     val bg = tfb.groupBy(col("a"), col("b")).agg(sum(col("tf")).as("cab"))
@@ -1001,7 +1023,8 @@ object Scoring {
     ((cab - dd) + dd * n1a * (n1pre / tt)) / ca
 
   /** The q165 kernel over pre-built fold tables (the [[bigramNllFrom]]
-    * convention; callers own the caching/release of `tfb`/`bg`). */
+    * convention, unordered; callers own the caching/release of
+    * `tfb`/`bg`). */
   private[graft] def knNllFrom(tfb: DataFrame, bg: DataFrame): DataFrame = {
     val (ctx, pre, disc) = knModel(bg)
     tfb
@@ -1015,7 +1038,6 @@ object Scoring {
             log(pKn2(col("cab"), col("ca"), col("n1a"), col("n1pre"),
               col("dd"), col("tt")))) /
           sum(col("tf")), 4).as("nll_kn"))
-      .orderBy(col("doc_id"))
   }
 
   // ---------------------------------------------------------------- q176

@@ -105,40 +105,78 @@ object TextOps {
     * Language Models"): word-count bounds, mean-word-length bounds, minimum
     * stopword presence, symbol-to-word ratio cap. The DEFAULTS are q97's
     * corpus-calibrated instance (the synthetic docs run 10-99 words, so
-    * both outcomes occur at test scale); pipelines pass their own. */
+    * both outcomes occur at test scale); pipelines pass their own.
+    *
+    * The config is also the gate's one-pass kernel
+    * ([[graft.plans.RuleGateKernel]]): one token walk per document gives
+    * all four signals, with the Column arithmetic of the q97 definition —
+    *   n_words      = size(split(normText(text), " "))
+    *   mean_wlen    = round(length(normText(text) without spaces) / n_words, 4)
+    *   stop_hits    = number of `stopwords` among the tokens
+    *   symbol_ratio = round(occurrences of `symbol` in text × its length / n_words, 4)
+    * — and the verdict is their conjunction, false for null text.
+    * TextKernelsSpec pins every signal and the verdict to that Column
+    * form on adversarial text. */
   case class RuleGateConfig(
       minWords: Long = 30L, maxWords: Long = 90L,
       minMeanWordLen: Double = 3.0, maxMeanWordLen: Double = 10.0,
       stopwords: Seq[String] = Seq("the", "a", "of"), minStopHits: Long = 1L,
       symbol: String = "#", maxSymbolRatio: Double = 0.1)
+      extends graft.plans.RuleGateKernel {
+    import org.apache.spark.unsafe.types.UTF8String
 
-  private def ruleGateSignals(cfg: RuleGateConfig) = {
-    val toks = TextFns.tokens(col("text"))
-    val nW = size(toks).cast("long")
-    val norm = TextFns.normText(col("text"))
-    val meanW = round(length(regexp_replace(norm, " ", "")).cast("double") / nW, 4)
-    val stopHits = cfg.stopwords.map(w => array_contains(toks, w).cast("long"))
-      .reduceOption(_ + _).getOrElse(lit(0L))
-    val symbolRatio = round(
-      (length(col("text")) - length(regexp_replace(col("text"),
-        java.util.regex.Pattern.quote(cfg.symbol), ""))).cast("double") / nW, 4)
-    (nW, meanW, stopHits, symbolRatio)
+    private def codePoints(s: String): Int = s.codePointCount(0, s.length)
+
+    private def walk[T](text: UTF8String)(f: (Long, Double, Long, Double) => T): T = {
+      val s = text.toString
+      val toks = graft.plans.TextKernels.tokens(s)
+      val nW = toks.length.toLong
+      var chars = 0L
+      toks.foreach(t => chars += codePoints(t))
+      val stopHits = stopwords.count(w => toks.contains(w)).toLong
+      var symbols = 0L
+      if (symbol.nonEmpty) {
+        var i = s.indexOf(symbol)
+        while (i >= 0) { symbols += 1; i = s.indexOf(symbol, i + symbol.length) }
+      }
+      f(nW, graft.plans.TextKernels.round4(chars.toDouble / nW), stopHits,
+        graft.plans.TextKernels.round4((symbols * codePoints(symbol)).toDouble / nW))
+    }
+
+    // SQL double ordering: -0.0 equals 0.0, NaN above every number
+    private def cmp(x: Double, y: Double): Int =
+      if (x == y) 0 else java.lang.Double.compare(x, y)
+
+    def signals(text: UTF8String): org.apache.spark.sql.catalyst.InternalRow =
+      if (text == null) null
+      else walk(text)((nW, meanW, stopHits, symbolRatio) =>
+        org.apache.spark.sql.catalyst.InternalRow(nW, meanW, stopHits, symbolRatio))
+
+    def keep(text: UTF8String): Boolean =
+      text != null && walk(text)((nW, meanW, stopHits, symbolRatio) =>
+        nW >= minWords && nW <= maxWords &&
+          cmp(meanW, minMeanWordLen) >= 0 && cmp(meanW, maxMeanWordLen) <= 0 &&
+          stopHits >= minStopHits && cmp(symbolRatio, maxSymbolRatio) <= 0)
   }
+
+  private def onText(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    org.apache.spark.sql.graft.GraftInternal.column(e)
+
+  private def textExpr = org.apache.spark.sql.graft.GraftInternal.expression(col("text"))
+
+  /** The gate's signals over `text` as one struct column (n_words,
+    * mean_wlen, stop_hits, symbol_ratio); null for null text. */
+  private[graft] def ruleGateSignals(cfg: RuleGateConfig): Column =
+    onText(graft.plans.RuleGateSignals(textExpr, cfg))
 
   /** The gate's keep/drop DECISION as a filter predicate — the form a
     * pipeline composes (pipelines.TrainingData stage 0). Pure codegen'd
-    * scan: at 100 TB this is a predicate pass, no shuffle. Null-text docs
-    * are DROPPED (null signals propagate null through the conjunction;
-    * coalesce pins the verdict to false — mirrored by the oracle's CASE,
-    * which emits 0 for them). */
-  def ruleGateKeep(cfg: RuleGateConfig = RuleGateConfig()): org.apache.spark.sql.Column = {
-    val (nW, meanW, stopHits, symbolRatio) = ruleGateSignals(cfg)
-    coalesce(
-      nW.between(cfg.minWords, cfg.maxWords) &&
-        meanW.between(cfg.minMeanWordLen, cfg.maxMeanWordLen) &&
-        stopHits >= cfg.minStopHits && symbolRatio <= cfg.maxSymbolRatio,
-      lit(false))
-  }
+    * scan: at 100 TB this is a predicate pass, no shuffle, and ONE kernel
+    * call per row whether it sits in a filter or a projection. Null-text
+    * docs are DROPPED (mirrored by the oracle's CASE, which emits 0 for
+    * them). */
+  def ruleGateKeep(cfg: RuleGateConfig = RuleGateConfig()): org.apache.spark.sql.Column =
+    onText(graft.plans.RuleGateKeep(textExpr, cfg))
 
   /** The gate as a REPORT: per-doc signals + verdict over a
     * (doc_id, text) frame. All four signals and the verdict are
@@ -146,14 +184,13 @@ object TextOps {
     * itself, not just the features; the rule STRUCTURE is the production
     * shape. */
   def ruleGate(docs: org.apache.spark.sql.DataFrame,
-      cfg: RuleGateConfig = RuleGateConfig()): org.apache.spark.sql.DataFrame = {
-    val (nW, meanW, stopHits, _) = ruleGateSignals(cfg)
-    docs.select(col("doc_id"),
-      nW.as("n_words"),
-      meanW.as("mean_wlen"),
-      stopHits.as("stop_hits"),
-      ruleGateKeep(cfg).cast("long").as("keep"))
-  }
+      cfg: RuleGateConfig = RuleGateConfig()): org.apache.spark.sql.DataFrame =
+    docs.select(col("doc_id"), ruleGateSignals(cfg).as("g"), ruleGateKeep(cfg).as("k"))
+      .select(col("doc_id"),
+        col("g.n_words").as("n_words"),
+        col("g.mean_wlen").as("mean_wlen"),
+        col("g.stop_hits").as("stop_hits"),
+        col("k").cast("long").as("keep"))
 
   /** q34 scores, THIS one decides: the document-level heuristic filter
     * every pretraining pipeline runs before model-based scoring —

@@ -87,7 +87,9 @@ object MultimodalData {
     *        measures, and nothing when off
     * @return funnel summary (stage, docs, secs): input, validated,
     *         gated, ppl_gated, media_ok, canonical, decontaminated,
-    *         mixed_rows
+    *         mixed_rows. The input count is observed on the expectations
+    *         pass, so input's secs are 0.0 and that pass is timed in
+    *         validated's
     */
   def run(spark: SparkSession, docs: DataFrame, outDir: String,
       evalDocs: Option[DataFrame] = None,
@@ -114,26 +116,14 @@ object MultimodalData {
     // in the finally, failure or not
     val barrier = new Caching.Barriers
     try {
-    val ((nInput, input), tInput) = timed(barrier(docs))
-
     // 0. EXPECTATIONS GATE (q98 structural admission — the TrainingData
-    // contract verbatim: breaches fail the run unless diverted)
-    val ((nValidated, validated), tValidated) = timed {
-      // `_expect_ok` is never null, so the two barrier counts give the
-      // breach count without a job of its own
-      val (nChecked, checked) = barrier(Scoring.expectationsChecked(input))
-      val (nOk, ok) = barrier(checked.filter(col("_expect_ok")).drop("_expect_ok"))
-      val nBreached = nChecked - nOk
-      if (nBreached > 0 && structuralQuarantineDir.isEmpty)
-        throw new IllegalStateException(
-          s"expectations breach: $nBreached rows (duplicate or null doc_id, " +
-            "null text, or inconsistent n_chars); pass structuralQuarantineDir " +
-            "to divert instead of failing")
-      structuralQuarantineDir.foreach(qd =>
-        checked.filter(!col("_expect_ok")).drop("_expect_ok")
-          .write.mode("overwrite").parquet(qd))
-      (nOk, ok)
-    }
+    // contract verbatim: breaches fail the run unless diverted). The input
+    // has one consumer, so its count is observed on the admission pass;
+    // the admitted set feeds several stages, so it stays a barrier
+    val expectations =
+      new Funnel.Expectations(docs, structuralQuarantineDir, "structuralQuarantineDir")
+    val ((_, validated), tValidated) = timed(barrier(expectations.validated))
+    val (nInput, nValidated) = expectations.settle()
 
     // 1. TEXT GATES first — narrow predicate passes, so the decode stage
     // below only ever touches blobs whose documents can survive at all
@@ -232,8 +222,8 @@ object MultimodalData {
     val ((nDecontaminated, decontaminated), tDecontaminated) = timed(evalDocs match {
       case None => (nCanonical, canonical)
       case Some(ev) =>
-        barrier(canonical.filter(
-          !BloomSketch.contaminated(spark, BloomSketch.ofEvalGrams(ev))))
+        barrier(canonical.filter(!BloomSketch.contaminated(
+          barrier.broadcast(spark, BloomSketch.ofEvalGrams(ev)))))
     })
 
     // 5. weighted mixing (q83 semantics) + sharded export; flat 1-copy
@@ -259,11 +249,11 @@ object MultimodalData {
     // run report: q143 token yield of the input corpus (the TrainingData
     // report contract — computed after the export, never contending)
     tokenReportDir.foreach(dir =>
-      TextOps.tokenYieldOf(input.select(col("doc_id"), col("source"), col("text")))
+      TextOps.tokenYieldOf(docs.select(col("doc_id"), col("source"), col("text")))
         .write.mode("overwrite").parquet(dir))
 
     val summary = Seq(
-      ("input", nInput, tInput),
+      ("input", nInput, 0.0),
       ("validated", nValidated, tValidated),
       ("gated", nGated, tGated),
       ("ppl_gated", nPplGated, tPplGated),

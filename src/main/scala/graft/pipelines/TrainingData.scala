@@ -117,14 +117,20 @@ object TrainingData {
     *                 run instead — a corrupt batch should stop a
     *                 training-data export, not silently shrink it
     * @return funnel summary (stage, docs, secs) — input, validated, gated,
-    *         ppl_gated, clean, decontaminated, mixed rows, each with the wall-clock
-    *         of the whole stage: its construction (including any eager
-    *         work it does, such as the sketch build or the dedup
-    *         closure's checkpoint) plus the barrier's one count — each
-    *         stage is counted exactly ONCE, at the moment it
-    *         materializes, and that number is reused in the summary; the
-    *         pre-r10 shape recounted every cached stage in a second pass
-    *         of six driver actions)
+    *         ppl_gated, clean, decontaminated, mixed rows. Each count is
+    *         taken ONCE, at the pass that materializes the stage, and
+    *         reused here. A stage with several consumers (gated, ppl_gated,
+    *         clean) is a barrier: its secs are the wall-clock of its
+    *         construction (including eager work such as the dedup
+    *         closure's checkpoint) plus its one count job. A stage with one
+    *         consumer (input, validated, decontaminated) and the export
+    *         (mixed_rows) have their counts OBSERVED on the pass that runs
+    *         them anyway, with no job of their own: such a stage's secs
+    *         are only its construction (the eval-sketch build, for
+    *         decontaminated; ~0 for input and validated), and its pass is
+    *         timed inside the stage whose action runs it — input and
+    *         validated inside gated, decontaminated inside mixed_rows,
+    *         whose secs are the export's write pass
     */
   def run(spark: SparkSession, docs: DataFrame, evalDocs: DataFrame,
       weights: DataFrame, outDir: String, nShards: Int = 8,
@@ -162,43 +168,31 @@ object TrainingData {
     // single-threaded driver that sets Caching.DeferKey (Bench, perfbench)
     // gets deferred release at each stage action; otherwise composed
     // operators take the eager localCheckpoint path. Results are
-    // identical either way (lifecycle only). The funnel's own stages are
-    // Caching.Barriers: each later stage plans over a leaf of the cached
-    // rows, and every barrier is released in the finally, failure or not.
+    // identical either way (lifecycle only). The funnel's multi-consumer
+    // stages are Caching.Barriers: each later stage plans over a leaf of
+    // the cached rows, and every barrier (and the eval-sketch broadcast)
+    // is released in the finally, failure or not.
     val barrier = new Caching.Barriers
     try {
-    val ((nInput, input), tInput) = timed(barrier(docs))
+    val (input, tInput) = timed(Funnel.partitioned(docs))
 
     // -1. EXPECTATIONS GATE (the q98-certified deequ-style validation as
     // admission control): the structural rules every later stage depends
-    // on are checked BEFORE any stage runs. Breaches either fail the run
-    // (default — garbage in must not become training data out) or
-    // quarantine for offline triage; either way no breaching row proceeds.
-    val ((nValidated, validated), tValidated) = timed {
-      // `_expect_ok` is never null, so the two barrier counts give the
-      // breach count without a job of its own
-      val (nChecked, checked) = barrier(Scoring.expectationsChecked(input))
-      val (nOk, ok) = barrier(checked.filter(col("_expect_ok")).drop("_expect_ok"))
-      val nBreached = nChecked - nOk
-      if (nBreached > 0 && quarantineDir.isEmpty)
-        throw new IllegalStateException(
-          s"expectations breach: $nBreached rows (duplicate or null doc_id, " +
-            "null text, or inconsistent n_chars); pass quarantineDir to " +
-            "divert instead of failing")
-      // ALWAYS overwrite the quarantine dir when one is given — a clean run
-      // must clear a previous run's quarantined rows, or triage tooling
-      // reads stale breaches as this run's
-      quarantineDir.foreach(qd =>
-        checked.filter(!col("_expect_ok")).drop("_expect_ok")
-          .write.mode("overwrite").parquet(qd))
-      (nOk, ok)
-    }
+    // on. Its one consumer is the rule gate, so its counts are observed on
+    // the gate's pass; breaches then either fail the run (default —
+    // garbage in must not become training data out) or quarantine for
+    // offline triage, before any later stage runs. Either way no
+    // breaching row proceeds.
+    val (expectations, tValidated) = timed(
+      new Funnel.Expectations(input, quarantineDir, "quarantineDir"))
 
     // 0. RULE GATE — the q97-certified Gopher-style heuristic filter as a
-    // narrow predicate pass (TextOps.ruleGateKeep): no shuffle, runs ahead
-    // of every shuffling stage so dedup/decontam never see gated docs
+    // narrow predicate pass (TextOps.ruleGateKeep, one kernel call per
+    // doc): no shuffle, runs ahead of every shuffling stage so
+    // dedup/decontam never see gated docs
     val ((nGated, gated), tGated) =
-      timed(barrier(validated.filter(TextOps.ruleGateKeep(gate))))
+      timed(barrier(expectations.validated.filter(TextOps.ruleGateKeep(gate))))
+    val (nInput, nValidated) = expectations.settle()
 
     // 0.5. CCNet PERPLEXITY GATE (q156's tercile discipline on the q147
     // bigram LM): score the rule-gated corpus, cut at percentile_disc(2/3)
@@ -224,10 +218,12 @@ object TrainingData {
     // 2. decontamination — drop: sketch the eval set's gram vocabulary,
     // probe the clean corpus map-side (q82's streaming-tier decision:
     // conservative, no false negatives); scrub: cut shared spans, keep
-    // the doc (q175)
-    val ((nDecontaminated, decontaminated), tDecontaminated) = timed(barrier(decontam match {
+    // the doc (q175). Its one consumer is the mix, so its count is
+    // observed on the export's pass
+    val ((decontaminated, nDecontaminated), tDecontaminated) = timed(Funnel.counted(decontam match {
       case "drop" =>
-        clean.filter(!BloomSketch.contaminated(spark, BloomSketch.ofEvalGrams(evalDocs)))
+        clean.filter(!BloomSketch.contaminated(
+          barrier.broadcast(spark, BloomSketch.ofEvalGrams(evalDocs))))
       case _ =>
         // span scrub (q175's kernels, maintainer #19's batch twin): cut
         // the 8-token spans shared with the eval set, keep the rest of
@@ -252,26 +248,23 @@ object TrainingData {
             .otherwise(length(col("text")).cast("long")))
           .drop("starts")
           .filter(col("text").isNotNull)
-    }))
+    }, "decontaminated"))
 
     // 3. weighted mixing (q83 semantics): deterministic per-doc multiplicity
     val h2 = substring(md5(col("doc_id").cast("string")), 1, 2)
-    val mixed = decontaminated
+    val (mixed, nMixed) = Funnel.counted(decontaminated
       .join(broadcast(weights), Seq("source"))
       .withColumn("n_copies",
         col("base_copies") + when(h2 < col("thr"), 1).otherwise(0))
       .filter(col("n_copies") > 0)
       .select(col("doc_id"), col("source"), col("text"), col("n_chars"),
-        explode(sequence(lit(1), col("n_copies"))).as("copy_no"))
+        explode(sequence(lit(1), col("n_copies"))).as("copy_no")), "mixed_rows")
 
     // 4. shard export: copies of the same doc share a shard (assignment is
-    // by doc_id), files bounded, id-sorted; the stage's count is a cheap
-    // parquet-footer read over what the export just wrote
-    val (nMixed, tMixed) = timed {
-      val exportPath =
-        ShardExport.write(mixed, "doc_id", outDir, nShards, maxRecordsPerFile)
-      spark.read.parquet(exportPath).count()
-    }
+    // by doc_id), files bounded, id-sorted; the write pass is the one
+    // action over decontaminated and mixed, and it observes both counts
+    val (_, tMixed) = timed(
+      ShardExport.write(mixed, "doc_id", outDir, nShards, maxRecordsPerFile))
 
     // run report: token yield of the INPUT corpus through the certified
     // q143 cascade — what the funnel's document counts are worth in
@@ -295,8 +288,8 @@ object TrainingData {
       ("gated", nGated, tGated),
       ("ppl_gated", nPplGated, tPplGated),
       ("clean", nClean, tClean),
-      ("decontaminated", nDecontaminated, tDecontaminated),
-      ("mixed_rows", nMixed, tMixed),
+      ("decontaminated", nDecontaminated(), tDecontaminated),
+      ("mixed_rows", nMixed(), tMixed),
     ).toDF("stage", "docs", "secs")
     summary
     } finally {

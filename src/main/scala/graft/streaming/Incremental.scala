@@ -273,15 +273,16 @@ object Incremental {
       schema: org.apache.spark.sql.types.StructType, cleanDir: String,
       quarantineDir: String, sketchDir: String,
       checkpointDir: String): StreamingQuery = {
-    val contaminated = graft.ops.BloomSketch.contaminated(spark,
+    val sketch = spark.sparkContext.broadcast(
       graft.ops.BloomSketch.load(spark, sketchDir))
-    drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
+    val contaminated = graft.ops.BloomSketch.contaminated(sketch)
+    try drain(spark, inDir, schema, checkpointDir) { (batch, _, hold) =>
       val flagged = hold(batch.withColumn("contaminated", contaminated))
       flagged.filter(!col("contaminated")).drop("contaminated")
         .write.mode("append").parquet(cleanDir)
       flagged.filter(col("contaminated")).drop("contaminated")
         .write.mode("append").parquet(quarantineDir)
-    }
+    } finally sketch.destroy()
   }
 
   /** Continuous boilerplate scrub (the streaming tier of q110): each

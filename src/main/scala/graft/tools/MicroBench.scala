@@ -44,7 +44,13 @@ object MicroBench {
         "zip_with(slice(toks, 1, size(toks) - 1), slice(toks, 2, size(toks) - 1)," +
           " (a, b) -> struct(a, b))")).as("p"))
       .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))))
-    time("bigramFoldOf (explode+groupBy)")(noop(graft.ops.Scoring.bigramFoldOf(docs)))
+    time("bigramRowsOf (per-row bigram_counts)")(noop(graft.ops.Scoring.bigramRowsOf(docs)))
+    time("bigramFoldOf (bigram_counts+groupBy)")(noop(graft.ops.Scoring.bigramFoldOf(docs)))
+    // the rule gate's predicate as a filter, at q97's calibration and at
+    // the pipeline's word-count floor (one kernel call per row either way)
+    time("ruleGateKeep filter (q97 gate)")(noop(docs.filter(graft.ops.TextOps.ruleGateKeep())))
+    time("ruleGateKeep filter (pipeline gate)")(noop(
+      docs.filter(graft.ops.TextOps.ruleGateKeep(graft.pipelines.TrainingData.DefaultGate))))
     time("trigramFoldOf")(noop(graft.ops.Scoring.trigramFoldOf(docs)))
     time("shingleHashes")(noop(docs.select(col("doc_id"),
       graft.ops.Dedup.shingleHashes(TextFns.normText(col("text"))).as("hs"))))

@@ -304,6 +304,22 @@ class TrainingDataPipelineSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("expectations breach: 6 rows"), ex.getMessage)
   }
 
+  test("a breached batch fails before any shard is written") {
+    val outDir = java.nio.file.Files.createTempDirectory("graft-tdp-noshard").toString
+    val ex = intercept[IllegalStateException] {
+      TrainingData.run(spark, breachedDocs, cleanEval,
+        TrainingData.flatWeights(spark, Seq("srcA", "srcB")), outDir)
+    }
+    assert(ex.getMessage.contains("expectations breach: 6 rows"), ex.getMessage)
+    // an export publishes `outDir__v<N>/` and `outDir.ptr` beside outDir
+    val parent = new java.io.File(outDir).getParentFile
+    val name = new java.io.File(outDir).getName
+    val published = parent.listFiles().map(_.getName)
+      .filter(n => n.startsWith(name + "__v") || n == name + ".ptr")
+    assert(published.isEmpty, s"shards written before the breach failed the run: ${published.toSeq}")
+    assert(new java.io.File(outDir).list().isEmpty)
+  }
+
   test("expectations gate quarantines breaching rows and admits the rest") {
     val outDir = java.nio.file.Files.createTempDirectory("graft-tdp-q").toString
     val qDir = java.nio.file.Files.createTempDirectory("graft-tdp-quar").toString + "/q"
@@ -370,6 +386,59 @@ class TrainingDataPipelineSpec extends AnyFunSuite {
     assert(eagerFunnel("clean") < eagerFunnel("input"))
     assert(deferFunnel == eagerFunnel)
     assert(eagerRows.nonEmpty && deferRows == eagerRows)
+  }
+
+  // The default funnel (ppl gate on, Bloom drop) on a fixture with clones,
+  // near-dups, short docs, word salad, a contaminated doc and tab/newline/
+  // NBSP whitespace. The counts and kept ids are the ones the funnel gave
+  // when every stage was a counted barrier and the rule gate and the
+  // bigram fold were Column compositions; observed counts, the one-pass
+  // kernels and the partitioned input must not move them.
+  test("observed funnel counts and kept ids equal the counted-barrier funnel's") {
+    val topics = Seq("spark join data", "river mountain valley", "alpha beta gamma",
+      "north south east west")
+    val evalText = "held out benchmark question answer pair secret eval items " * 5
+    val base = (0L until 80L).map { i =>
+      val k = i % 40 // i and i + 40 are clones
+      val text =
+        if (k % 13 == 5) s"short $k"
+        else (s"doc $k on ${topics((k % 4).toInt)} with words the gate can count and id $k " *
+          (2 + (k % 4).toInt)).trim + (if (i == 77) " smalltail" else "")
+      (i, text, s"src${i % 3}")
+    }
+    val salad = (80L until 90L).map(i => (i, (1 to 30).map(j => s"w${i}x$j").mkString(" "), "src1"))
+    val planted = Seq((90L, "prefix " + evalText + " suffix", "src2"),
+      (91L, "tab\tseparated nbsp\u00a0words\nacross lines of a document with enough words", "src0"))
+    val docs = (base ++ salad ++ planted).toDF("doc_id", "text", "source")
+      .withColumn("n_chars", length(col("text")))
+    val weights = Seq(("src0", 1, "00"), ("src1", 2, "80"), ("src2", 1, "40"))
+      .toDF("source", "base_copies", "thr")
+    val outDir = java.nio.file.Files.createTempDirectory("graft-tdp-golden").toString
+    val summary = TrainingData.run(spark, docs, Seq(evalText).toDF("text"), weights,
+        outDir, nShards = 4)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(summary == Seq("input" -> 92L, "validated" -> 92L, "gated" -> 86L,
+      "ppl_gated" -> 74L, "clean" -> 19L, "decontaminated" -> 19L, "mixed_rows" -> 28L),
+      summary.toString)
+    val shipped = spark.read.parquet(ShardExport.resolve(spark, outDir))
+    assert(shipped.select("doc_id").distinct().as[Long].collect().sorted.toSeq ==
+      Seq(2L, 3L, 6L, 7L, 10L, 11L, 14L, 15L, 19L, 22L, 23L, 26L, 27L, 30L, 34L, 35L,
+        38L, 39L, 77L))
+    assert(shipped.count() == 28L)
+  }
+
+  test("the eval-sketch broadcast is destroyed when the run ends") {
+    def liveSketches = org.apache.spark.GraftTestBus.liveBroadcastValues(spark.sparkContext)
+      .count(_.isInstanceOf[org.apache.spark.util.sketch.BloomFilter])
+    val before = liveSketches
+    TrainingData.run(spark, wordyDocs,
+      Seq("held out eval sentence that matches nothing").toDF("text"),
+      TrainingData.flatWeights(spark, Seq("src0", "src1")),
+      java.nio.file.Files.createTempDirectory("graft-tdp-bc").toString, nShards = 2)
+    // destroy() removes the blocks asynchronously
+    val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+    while (liveSketches > before && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(liveSketches == before, "the run left its eval-sketch broadcast live")
   }
 
   test("a run that fails mid-funnel releases every stage barrier it cached") {
